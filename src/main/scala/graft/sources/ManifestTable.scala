@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Manifest-based snapshot isolation over a plain parquet directory — the
   * commit protocol that table formats (Delta's `_delta_log`, Iceberg's
@@ -14,7 +15,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - data files live under `<dir>/data/` and are IMMUTABLE once
   *     committed — a writer never mutates or deletes a live file;
   *   - `<dir>/_manifests/v<N>.manifest` lists the exact data files of
-  *     snapshot N (one name per line);
+  *     snapshot N (one name per line), plus `#`-prefixed metadata lines;
   *   - `<dir>/_manifests/CURRENT` holds the committed version number and
   *     is replaced by ATOMIC file rename — the single linearization
   *     point. Readers resolve CURRENT → manifest → file list, so they
@@ -28,6 +29,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * On a real object store the rename-if-absent of `v<N+1>.manifest`
   * itself is the compare-and-swap; the CURRENT pointer file keeps reads
   * a single fixed-name fetch.
+  *
+  * Stored schema: a commit writes one `#schema=<urlenc json>` line, the
+  * schema parquet inference would return for the snapshot's files (every
+  * field nullable, array elements and map values too). [[read]],
+  * [[readVersion]] and [[readWhereBetween]] hand it to
+  * `spark.read.schema`, so building a DataFrame runs no Spark job (the
+  * inference it replaces is one footer-merge job per read). Commits that
+  * keep files carry the line forward; a commit that keeps none reads it
+  * from a new file's footer. A manifest without the line (written before
+  * it existed, or whose new files disagree with the carried schema) is
+  * read by inference, as before.
   *
   * Scale note: the manifest is O(files), not O(rows) — at 100 TB with
   * 128 MB files that is ~800k lines per manifest, which is why real
@@ -134,13 +146,51 @@ object ManifestTable {
     rawFileLines(dir, v).map(l =>
       dataDir(dir).resolve(l.takeWhile(_ != '\t')).toString)
 
+  private def manifestLines(dir: String, v: Long): Seq[String] =
+    new String(Files.readAllBytes(manifestPath(dir, v)), StandardCharsets.UTF_8)
+      .split("\n").toSeq.filter(_.nonEmpty)
+
   /** Non-metadata manifest lines verbatim: `<name>` or `<name>\t<stats>`.
     * Commits carry surviving files forward at THIS granularity so their
     * stats ride along without recomputation. */
-  private def rawFileLines(dir: String, v: Long): Seq[String] = {
-    val lines = new String(Files.readAllBytes(manifestPath(dir, v)),
-      StandardCharsets.UTF_8)
-    lines.split("\n").filter(l => l.nonEmpty && !l.startsWith("#")).toSeq
+  private def rawFileLines(dir: String, v: Long): Seq[String] =
+    manifestLines(dir, v).filterNot(_.startsWith("#"))
+
+  /** The `#schema=` value of snapshot `v` (URL-encoded schema json). */
+  private def schemaLine(dir: String, v: Long): Option[String] =
+    manifestLines(dir, v).find(_.startsWith("#schema=")).map(_.stripPrefix("#schema="))
+
+  /** Read `fs`, files of snapshot `v`, with the schema `v` stores (or by
+    * inference when it stores none). Building the DataFrame runs no
+    * Spark job when the schema is stored. */
+  def readFiles(spark: SparkSession, dir: String, v: Long,
+      fs: Seq[String]): DataFrame =
+    schemaLine(dir, v)
+      .map(l => DataType.fromJson(dec(l)).asInstanceOf[StructType])
+      .fold(spark.read)(spark.read.schema)
+      .parquet(fs: _*)
+
+  /** The `#txn=` marker snapshot `v`'s own commit carried, if any. */
+  def txnOf(dir: String, v: Long): Option[String] =
+    manifestLines(dir, v).find(_.startsWith("#txn=")).map(_.stripPrefix("#txn="))
+
+  /** The files snapshot `v` holds beyond snapshot `base`: Some(added) iff
+    * both manifests are still retained and `v` kept every file of `base`
+    * (only appends committed in between); None after any rewrite
+    * (compact, merge, delete, overwrite) or a [[vacuum]] of `base`. */
+  def filesAddedSince(dir: String, base: Long, v: Long): Option[Seq[String]] =
+    if (!Files.exists(manifestPath(dir, base)) || !Files.exists(manifestPath(dir, v))) None
+    else {
+      val before = files(dir, base).toSet
+      val now = files(dir, v)
+      if (before.subsetOf(now.toSet)) Some(now.filterNot(before)) else None
+    }
+
+  /** Total rows of parquet files `fs`, summed from their footers (no data
+    * read, no Spark job). */
+  def rowCount(fs: Seq[String]): Long = {
+    import scala.jdk.CollectionConverters._
+    fs.map(f => footer(Paths.get(f)).getBlocks.asScala.map(_.getRowCount).sum).sum
   }
 
   /** (absolute path, per-column bounds) for every file of snapshot `v`.
@@ -176,8 +226,8 @@ object ManifestTable {
       case (f, st) if st.get(colName).forall(overlaps(_, lo, hi)) => f
     }
     val df =
-      if (kept.nonEmpty) spark.read.parquet(kept: _*)
-      else spark.read.parquet(all.head._1)
+      if (kept.nonEmpty) readFiles(spark, dir, v, kept)
+      else readFiles(spark, dir, v, Seq(all.head._1))
         .where(org.apache.spark.sql.functions.lit(false))
     (v, df, kept.size, all.size)
   }
@@ -232,62 +282,86 @@ object ManifestTable {
   private def footerStats(file: Path, cols: Set[String]): Map[String, ColStats] = {
     import scala.jdk.CollectionConverters._
     if (cols.isEmpty) return Map.empty
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file.toUri),
-        new org.apache.hadoop.conf.Configuration()))
-    try {
-      val acc = scala.collection.mutable.Map[String, ColStats]()
-      var bad = Set.empty[String]
-      for (b <- reader.getFooter.getBlocks.asScala;
-           c <- b.getColumns.asScala) {
-        val name = c.getPath.toDotString
-        if (cols.contains(name) && !bad.contains(name)) {
-          val st = c.getStatistics
-          val isUtf8 = c.getPrimitiveType.getLogicalTypeAnnotation != null &&
-            c.getPrimitiveType.getLogicalTypeAnnotation.isInstanceOf[
-              org.apache.parquet.schema.LogicalTypeAnnotation.StringLogicalTypeAnnotation]
-          val bounds: Option[ColStats] =
-            if (st == null || !st.hasNonNullValue) None
-            else (st.genericGetMin, st.genericGetMax) match {
-              case (mn: java.lang.Integer, mx: java.lang.Integer) =>
-                Some(ColStats('i', mn.toString, mx.toString))
-              case (mn: java.lang.Long, mx: java.lang.Long) =>
-                Some(ColStats('i', mn.toString, mx.toString))
-              case (mn: java.lang.Float, mx: java.lang.Float)
-                  if !mn.isNaN && !mx.isNaN =>
-                Some(ColStats('f', mn.toString, mx.toString))
-              case (mn: java.lang.Double, mx: java.lang.Double)
-                  if !mn.isNaN && !mx.isNaN =>
-                Some(ColStats('f', mn.toString, mx.toString))
-              case (mn: org.apache.parquet.io.api.Binary,
-                    mx: org.apache.parquet.io.api.Binary) if isUtf8 =>
-                Some(ColStats('s', mn.toStringUsingUTF8, mx.toStringUsingUTF8))
-              case _ => None
-            }
-          bounds match {
-            case None => bad += name; acc.remove(name): Unit
-            case Some(cs) => acc.get(name) match {
-              case None => acc(name) = cs
-              case Some(prev) =>
-                require(prev.kind == cs.kind,
-                  s"row groups disagree on $name's type")
-                acc(name) = prev.kind match {
-                  case 's' => ColStats('s',
-                    if (cs.min < prev.min) cs.min else prev.min,
-                    if (cs.max > prev.max) cs.max else prev.max)
-                  case k => ColStats(k,
-                    (if (BigDecimal(cs.min) < BigDecimal(prev.min)) cs.min
-                     else prev.min),
-                    (if (BigDecimal(cs.max) > BigDecimal(prev.max)) cs.max
-                     else prev.max))
-                }
-            }
+    val acc = scala.collection.mutable.Map[String, ColStats]()
+    var bad = Set.empty[String]
+    for (b <- footer(file).getBlocks.asScala;
+         c <- b.getColumns.asScala) {
+      val name = c.getPath.toDotString
+      if (cols.contains(name) && !bad.contains(name)) {
+        val st = c.getStatistics
+        val isUtf8 = c.getPrimitiveType.getLogicalTypeAnnotation != null &&
+          c.getPrimitiveType.getLogicalTypeAnnotation.isInstanceOf[
+            org.apache.parquet.schema.LogicalTypeAnnotation.StringLogicalTypeAnnotation]
+        val bounds: Option[ColStats] =
+          if (st == null || !st.hasNonNullValue) None
+          else (st.genericGetMin, st.genericGetMax) match {
+            case (mn: java.lang.Integer, mx: java.lang.Integer) =>
+              Some(ColStats('i', mn.toString, mx.toString))
+            case (mn: java.lang.Long, mx: java.lang.Long) =>
+              Some(ColStats('i', mn.toString, mx.toString))
+            case (mn: java.lang.Float, mx: java.lang.Float)
+                if !mn.isNaN && !mx.isNaN =>
+              Some(ColStats('f', mn.toString, mx.toString))
+            case (mn: java.lang.Double, mx: java.lang.Double)
+                if !mn.isNaN && !mx.isNaN =>
+              Some(ColStats('f', mn.toString, mx.toString))
+            case (mn: org.apache.parquet.io.api.Binary,
+                  mx: org.apache.parquet.io.api.Binary) if isUtf8 =>
+              Some(ColStats('s', mn.toStringUsingUTF8, mx.toStringUsingUTF8))
+            case _ => None
+          }
+        bounds match {
+          case None => bad += name; acc.remove(name): Unit
+          case Some(cs) => acc.get(name) match {
+            case None => acc(name) = cs
+            case Some(prev) =>
+              require(prev.kind == cs.kind,
+                s"row groups disagree on $name's type")
+              acc(name) = prev.kind match {
+                case 's' => ColStats('s',
+                  if (cs.min < prev.min) cs.min else prev.min,
+                  if (cs.max > prev.max) cs.max else prev.max)
+                case k => ColStats(k,
+                  (if (BigDecimal(cs.min) < BigDecimal(prev.min)) cs.min
+                   else prev.min),
+                  (if (BigDecimal(cs.max) > BigDecimal(prev.max)) cs.max
+                   else prev.max))
+              }
           }
         }
       }
-      acc.toMap
-    } finally reader.close()
+    }
+    acc.toMap
+  }
+
+  // one Hadoop conf for every footer read: a fresh one re-parses its
+  // default resources
+  private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
+
+  /** The parquet footer of `file` (an O(footer) read). */
+  private def footer(file: Path): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file.toUri), hadoopConf))
+    try reader.getFooter finally reader.close()
+  }
+
+  /** The `#schema=` value for `file`: the Spark schema its writer stored
+    * in the footer, made nullable the way parquet inference returns it.
+    * None when the footer carries no parseable Spark schema. */
+  private def footerSchema(file: Path): Option[String] = {
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+        valueContainsNull = true)
+      case other => other
+    }
+    Option(footer(file).getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      .flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
+      .map(t => enc(nullable(t).json))
   }
 
   /** True iff a committed snapshot ≤ CURRENT carries `#txn=<txn>` — the
@@ -361,10 +435,20 @@ object ManifestTable {
   def read(spark: SparkSession, dir: String): (Long, DataFrame) = {
     checkLayout(dir)
     val v = currentVersion(dir)
-    val fs = files(dir, v)
-    require(fs.nonEmpty, s"snapshot v$v is empty — nothing to read")
-    (v, spark.read.parquet(fs: _*))
+    (v, readVersion(spark, dir, v))
   }
+
+  /** [[read]] that answers None for an EMPTY snapshot instead of throwing:
+    * the CURRENT version, and its rows when it has any files. */
+  def readIfAny(spark: SparkSession, dir: String): (Long, Option[DataFrame]) = {
+    checkLayout(dir)
+    val v = currentVersion(dir)
+    (v, readVersionIfAny(spark, dir, v))
+  }
+
+  /** [[readVersion]] that answers None for an EMPTY snapshot. */
+  def readVersionIfAny(spark: SparkSession, dir: String, v: Long): Option[DataFrame] =
+    if (files(dir, v).isEmpty) None else Some(readVersion(spark, dir, v))
 
   /** Append `df` as a new snapshot: new part files + a manifest listing
     * old ∪ new, then the atomic pointer swap. `expectedVersion` is the
@@ -390,29 +474,34 @@ object ManifestTable {
       df.write.mode("append").parquet(staging.toString)
     }
 
-  /** [[overwrite]] with the optimistic-retry loop of [[appendWithRetry]].
-    * Retried overwrites simply replace whatever won in between — callers
-    * wanting merge semantics use [[mergeWithRetry]]. */
-  def overwriteWithRetry(spark: SparkSession, dir: String, df: DataFrame,
-      maxRetries: Int = 10, txn: Option[String] = None): Long = {
-    var attempt = 0
+  /** Run `attempt` again on [[ConcurrentCommitException]], up to
+    * `maxRetries` times — the optimistic-retry loop of every *WithRetry. */
+  private def retrying(maxRetries: Int)(attempt: => Long): Long = {
+    var failures = 0
     while (true) {
-      try return overwrite(spark, dir, df, currentVersion(dir), txn)
+      try return attempt
       catch {
         case e: ConcurrentCommitException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
+          failures += 1
+          if (failures > maxRetries) throw e
       }
     }
     -1L // unreachable
   }
+
+  /** [[overwrite]] with the optimistic-retry loop of [[appendWithRetry]].
+    * Retried overwrites simply replace whatever won in between — callers
+    * wanting merge semantics use [[mergeWithRetry]]. */
+  def overwriteWithRetry(spark: SparkSession, dir: String, df: DataFrame,
+      maxRetries: Int = 10, txn: Option[String] = None): Long =
+    retrying(maxRetries)(overwrite(spark, dir, df, currentVersion(dir), txn))
 
   /** Time-travel read: the exact file set of historical snapshot `v`
     * (valid until [[vacuum]]'s retention window passes it). */
   def readVersion(spark: SparkSession, dir: String, v: Long): DataFrame = {
     val fs = files(dir, v)
     require(fs.nonEmpty, s"snapshot v$v is empty — nothing to read")
-    spark.read.parquet(fs: _*)
+    readFiles(spark, dir, v, fs)
   }
 
   /** [[append]] wrapped in the standard optimistic-retry loop: re-read
@@ -421,18 +510,16 @@ object ManifestTable {
     * blind retry is safe — a compaction racing in between merely means
     * the retried append lands on the compacted snapshot. */
   def appendWithRetry(spark: SparkSession, dir: String, df: DataFrame,
-      maxRetries: Int = 10, txn: Option[String] = None): Long = {
-    var attempt = 0
-    while (true) {
-      try return append(spark, dir, df, currentVersion(dir), txn)
-      catch {
-        case e: ConcurrentCommitException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
-    }
-    -1L // unreachable
-  }
+      maxRetries: Int = 10, txn: Option[String] = None): Long =
+    retrying(maxRetries)(append(spark, dir, df, currentVersion(dir), txn))
+
+  /** Commit the CURRENT file set unchanged plus the `#txn=<txn>` marker
+    * (retried like [[appendWithRetry]]; a no-op if `txn` is already
+    * committed): records that an idempotent step ran and had nothing to
+    * write. Returns the committed version. */
+  def markTxn(dir: String, txn: String, maxRetries: Int = 10): Long =
+    retrying(maxRetries)(
+      commit(dir, currentVersion(dir), keepOld = true, Some(txn)) { _ => () })
 
   /** Compact the CURRENT snapshot into `nFiles` files as a NEW snapshot
     * that references only the rewritten files. Readers pinned to older
@@ -538,7 +625,7 @@ object ManifestTable {
         staging => updates.write.mode("append").parquet(staging.toString)
       }
     }
-    val base = spark.read.parquet(scanFs: _*)
+    val base = readFiles(spark, dir, v, scanFs)
       .withColumn("__file", regexp_extract(input_file_name(), "[^/]+$", 0))
     val affected = base
       .join(updates.select(keyCols.map(col): _*).distinct(), keyCols, "left_semi")
@@ -608,7 +695,7 @@ object ManifestTable {
       scanFs: Seq[String],
       predicate: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions.{col, input_file_name, regexp_extract}
-    val base = spark.read.parquet(scanFs: _*)
+    val base = readFiles(spark, dir, v, scanFs)
       .withColumn("__file", regexp_extract(input_file_name(), "[^/]+$", 0))
     val affected = base.filter(predicate)
       .select(col("__file")).distinct()
@@ -635,18 +722,8 @@ object ManifestTable {
     * against the fresh snapshot (merge does not commute with concurrent
     * commits the way appends do). */
   def mergeWithRetry(spark: SparkSession, dir: String, updates: DataFrame,
-      keyCols: Seq[String], maxRetries: Int = 10): Long = {
-    var attempt = 0
-    while (true) {
-      try return merge(spark, dir, updates, keyCols)
-      catch {
-        case e: ConcurrentCommitException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
-    }
-    -1L // unreachable
-  }
+      keyCols: Seq[String], maxRetries: Int = 10): Long =
+    retrying(maxRetries)(merge(spark, dir, updates, keyCols))
 
   /** Delete data files referenced by NO manifest within the retention
     * window, drop manifests older than `retainVersions` behind CURRENT,
@@ -749,6 +826,14 @@ object ManifestTable {
             }
             val old = (if (keepOld) rawFileLines(dir, cur) else Seq.empty)
               .filterNot(l => removeFiles(l.takeWhile(_ != '\t')))
+            // the schema inference would return: carried while any old
+            // file stays (kept only if the new files agree), else read
+            // from a new file's footer; absent = readers infer
+            lazy val fresh = newFiles.headOption
+              .flatMap(n => footerSchema(dataDir(dir).resolve(n)))
+            val schema =
+              if (old.isEmpty) fresh
+              else schemaLine(dir, cur).filter(c => newFiles.isEmpty || fresh.contains(c))
             // Per-stream txn high waters ride EVERY manifest (overwrites
             // included — txn memory must outlive the data it wrote, or a
             // replayed batch would re-commit after an overwrite), merged
@@ -761,7 +846,7 @@ object ManifestTable {
             }
             val hwLines = hw.toSeq.sortBy(_._1)
               .map { case (sid, bid) => s"#txnhw=${enc(sid)}:$bid" }
-            val lines = (old ++ newLines) ++
+            val lines = (old ++ newLines) ++ schema.map(l => s"#schema=$l") ++
               txn.map(t => s"#txn=$t").toSeq ++ hwLines
             Files.write(manifestPath(dir, next),
               lines.mkString("\n").getBytes(StandardCharsets.UTF_8))

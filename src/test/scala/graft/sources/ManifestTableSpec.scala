@@ -552,4 +552,87 @@ class ManifestTableSpec extends SparkSpec {
     F.write(layout, ManifestTable.LayoutVersion.toString.getBytes)
     assert(ManifestTable.read(spark, dir)._2.count() == 1)
   }
+
+  // a frame whose columns carry non-nullable parts at every nesting level
+  private def nested(ids: Long*) =
+    ids.map(i => (i, Seq(i.toDouble), (i.toInt, s"s$i"), Map(s"k$i" -> i)))
+      .toDF("id", "arr", "st", "m")
+
+  private def manifestOf(dir: String): java.nio.file.Path =
+    java.nio.file.Paths.get(dir, "_manifests",
+      s"v${ManifestTable.currentVersion(dir)}.manifest")
+
+  private def schemaLines(dir: String): Seq[String] =
+    new String(Files.readAllBytes(manifestOf(dir)), "UTF-8").split("\n")
+      .toSeq.filter(_.startsWith("#schema="))
+
+  /** The read schema is what parquet inference gives for the same files,
+    * and it comes from the manifest's `#schema=` line. */
+  private def assertStoredSchema(dir: String): Unit = {
+    assert(schemaLines(dir).size == 1)
+    val fs = ManifestTable.files(dir, ManifestTable.currentVersion(dir))
+    assert(ManifestTable.read(spark, dir)._2.schema ==
+      spark.read.parquet(fs: _*).schema)
+  }
+
+  test("read returns the schema parquet inference gives, nested " +
+      "nullability included, and builds the DataFrame with no job") {
+    val dir = freshTable()
+    val df = nested(1L, 2L)
+    assert(!df.schema("arr").dataType.asInstanceOf[
+      org.apache.spark.sql.types.ArrayType].containsNull)
+    ManifestTable.append(spark, dir, df, 0L)
+    assertStoredSchema(dir)
+    val schema = ManifestTable.read(spark, dir)._2.schema
+    assert(schema.json.contains("\"containsNull\":true") &&
+      schema.json.contains("\"valueContainsNull\":true") &&
+      !schema.json.contains("\"nullable\":false"))
+    val (reads, jobs) = org.apache.spark.graft.JobCount(spark.sparkContext) {
+      val (v, _) = ManifestTable.read(spark, dir)
+      ManifestTable.readVersion(spark, dir, v)
+      ManifestTable.readWhereBetween(spark, dir, "id", 0L, 9L)
+    }
+    assert(jobs == 0)
+    assert(reads._2.count() == 2)
+  }
+
+  test("a manifest without the #schema= line still reads (inference)") {
+    val dir = freshTable()
+    ManifestTable.append(spark, dir, nested(1L, 2L), 0L)
+    val inferred = ManifestTable.read(spark, dir)._2.schema
+    val m = manifestOf(dir)
+    Files.write(m, new String(Files.readAllBytes(m), "UTF-8").split("\n")
+      .filterNot(_.startsWith("#schema=")).mkString("\n").getBytes("UTF-8"))
+    assert(schemaLines(dir).isEmpty)
+    val (_, df) = ManifestTable.read(spark, dir)
+    assert(df.schema == inferred)
+    assert(df.as[(Long, Seq[Double], (Int, String), Map[String, Long])]
+      .collect().map(_._1).sorted.toSeq == Seq(1L, 2L))
+    // a later append keeps the table readable, still by inference
+    ManifestTable.appendWithRetry(spark, dir, nested(3L))
+    assert(schemaLines(dir).isEmpty)
+    assert(ManifestTable.read(spark, dir)._2.count() == 3)
+  }
+
+  test("the #schema= line survives append, compact, merge, delete, " +
+      "z-order and overwrite") {
+    import org.apache.spark.sql.functions.col
+    val dir = freshTable()
+    ManifestTable.append(spark, dir, nested(1L, 2L), 0L)
+    ManifestTable.appendWithRetry(spark, dir, nested(3L))
+    assertStoredSchema(dir)
+    ManifestTable.compact(spark, dir, nFiles = 1)
+    assertStoredSchema(dir)
+    ManifestTable.mergeWithRetry(spark, dir, nested(2L, 4L), Seq("id"))
+    assertStoredSchema(dir)
+    ManifestTable.delete(spark, dir, col("id") === 1L)
+    assertStoredSchema(dir)
+    ManifestTable.optimizeZorder(spark, dir, "id", "id", 2)
+    assertStoredSchema(dir)
+    ManifestTable.markTxn(dir, "mark-1")
+    assertStoredSchema(dir)
+    ManifestTable.overwriteWithRetry(spark, dir, nested(7L))
+    assertStoredSchema(dir)
+    assert(ManifestTable.read(spark, dir)._2.count() == 1)
+  }
 }

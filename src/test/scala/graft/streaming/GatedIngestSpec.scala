@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.SparkSpec
@@ -174,5 +175,118 @@ class GatedIngestSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("refusing to retrain"))
     assert(acceptedIds(accepted) == Set(1L, 2L)) // nothing was admitted
+  }
+
+  private def jobs(body: => Unit): Int =
+    org.apache.spark.graft.JobCount(spark.sparkContext)(body)._2
+
+  private def docs(rows: (Long, String, Seq[Double])*): DataFrame = {
+    import spark.implicits._
+    rows.toDF("doc_id", "text", "embedding")
+  }
+
+  private def indexIds(dir: String): Set[Long] = {
+    import spark.implicits._
+    ManifestTable.read(spark, dir)._2.select($"doc_id").as[Long]
+      .collect().toSet
+  }
+
+  private val fox = "the quick brown fox jumps over the lazy dog"
+  private val box = "pack my box with five dozen liquor jugs"
+  private val sphinx = "sphinx of black quartz judge my vow today now"
+
+  test("a steady-state data micro-batch stays within 12 jobs; the " +
+      "pre-probe heal runs none") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val (accepted, txtIdx, centroids) = dirs()
+    val sink = GatedIngest.sink(accepted, txtIdx, centroids,
+      k = 2, textThreshold = 0.5, cosThreshold = 0.99, "budget") _
+    ManifestTable.create(accepted)
+    ManifestTable.create(txtIdx)
+    // the jobs of each micro-batch, and of the heal just before it
+    val batchJobs = scala.collection.mutable.Map[Long, (Int, Int)]()
+    val mem = MemoryStream[(Long, String, Seq[Double])]
+    val q = mem.toDF().toDF("doc_id", "text", "embedding")
+      .dropDuplicates("doc_id")
+      .writeStream
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        val heal = jobs(StreamingDedup.catchUpIndex(spark, accepted, txtIdx))
+        batchJobs(id) = (heal, jobs(sink(batch, id)))
+      }
+      .start()
+    mem.addData((1L, fox, Seq(1.0, 0.0, 0.0, 0.0)),
+      (2L, box, Seq(0.0, 1.0, 0.0, 0.0)))
+    q.processAllAvailable()
+    mem.addData((3L, sphinx, Seq(0.0, 0.0, 1.0, 0.0)))
+    q.processAllAvailable()
+    mem.addData((10L, fox, Seq(0.0, 0.0, 0.0, 1.0)), // exact text dup of 1
+      (11L, "how vexingly quick daft zebras jump around today",
+        Seq(0.5, 0.5, 0.7, 0.0)))
+    q.processAllAvailable()
+    q.stop()
+    assert(acceptedIds(accepted) == Set(1L, 2L, 3L, 11L))
+    assert(indexIds(txtIdx) == Set(1L, 2L, 3L, 11L))
+    val (heal, n) = batchJobs(2L)
+    assert(heal == 0)
+    assert(n <= 12, s"a steady-state micro-batch ran $n jobs")
+  }
+
+  test("accepted committed but its index append skipped: the next batch " +
+      "heals the index before probing and admits no near-duplicate") {
+    import spark.implicits._
+    val (accepted, txtIdx, centroids) = dirs()
+    val sink = GatedIngest.sink(accepted, txtIdx, centroids,
+      k = 2, textThreshold = 0.5, cosThreshold = 0.99, "crash") _
+    sink(docs((1L, fox, Seq(1.0, 0.0, 0.0, 0.0)),
+      (2L, box, Seq(0.0, 1.0, 0.0, 0.0))), 0L)
+    // batch 1's accepted commit lands; the crash comes before its catch-up
+    val schema = ManifestTable.read(spark, accepted)._2.schema
+    ManifestTable.appendWithRetry(spark, accepted,
+      Seq((5L, "how vexingly quick daft zebras jump around today",
+        Seq(0.0, 0.0, 1.0, 0.0), 0L)).toDF("doc_id", "text", "embedding", "cid")
+        .select(schema.fields.map(f => col(f.name).cast(f.dataType)).toIndexedSeq: _*),
+      txn = Some("crash-1"))
+    assert(indexIds(txtIdx) == Set(1L, 2L))
+    // batch 2: a near text dup of the unindexed doc 5 with an unrelated
+    // vector — only the healed text index can catch it
+    sink(docs((6L, "how vexingly quick daft zebras jump around tonight",
+      Seq(0.0, 0.0, 0.0, 1.0))), 2L)
+    assert(acceptedIds(accepted) == Set(1L, 2L, 5L))
+    assert(indexIds(txtIdx) == Set(1L, 2L, 5L))
+  }
+
+  test("a compacted accepted table sends the catch-up to the full " +
+      "anti-join, which leaves the index content unchanged") {
+    import spark.implicits._
+    val (accepted, txtIdx, centroids) = dirs()
+    val sink = GatedIngest.sink(accepted, txtIdx, centroids,
+      k = 2, textThreshold = 0.5, cosThreshold = 0.99, "compact") _
+    sink(docs((1L, fox, Seq(1.0, 0.0, 0.0, 0.0))), 0L)
+    sink(docs((2L, box, Seq(0.0, 1.0, 0.0, 0.0))), 1L)
+    def index = ManifestTable.read(spark, txtIdx)._2
+      .select($"doc_id", $"n_sh").as[(Long, Int)].collect().sorted.toSeq
+    val before = index
+    ManifestTable.compact(spark, accepted, nFiles = 1)
+    // the compaction rewrote accepted's files: no added-files shortcut
+    assert(jobs(StreamingDedup.catchUpIndex(spark, accepted, txtIdx)) > 0)
+    assert(index == before)
+    // ... and its marker commit makes the next catch-up free again
+    assert(jobs(StreamingDedup.catchUpIndex(spark, accepted, txtIdx)) == 0)
+    assert(index == before)
+  }
+
+  test("a replayed batch leaves the index version unchanged and runs no job") {
+    val (accepted, txtIdx, centroids) = dirs()
+    val sink = GatedIngest.sink(accepted, txtIdx, centroids,
+      k = 2, textThreshold = 0.5, cosThreshold = 0.99, "replay") _
+    val b0 = docs((1L, fox, Seq(1.0, 0.0, 0.0, 0.0)),
+      (2L, box, Seq(0.0, 1.0, 0.0, 0.0)))
+    sink(b0, 0L)
+    val (av, iv) = (ManifestTable.currentVersion(accepted),
+      ManifestTable.currentVersion(txtIdx))
+    assert(jobs(sink(b0, 0L)) == 0)
+    assert(ManifestTable.currentVersion(accepted) == av)
+    assert(ManifestTable.currentVersion(txtIdx) == iv)
   }
 }

@@ -120,4 +120,23 @@ class StreamingDedupSpec extends SparkSpec {
       .select($"doc_id").as[Long].collect().toSet == Set(1L, 3L))
     assert(ManifestTable.read(spark, indexDir)._2.count() == 2)
   }
+
+  test("a corpus commit whose catch-up never ran is healed from the " +
+      "files it added, before the next probe") {
+    import spark.implicits._
+    val (corpusDir, indexDir) = dirs()
+    val sink = StreamingDedup.dedupSink(corpusDir, indexDir, 0.5, "gap") _
+    sink(Seq((1L, "pack my box with five dozen liquor jugs"))
+      .toDF("doc_id", "text"), 0L)
+    // batch 1's corpus commit lands; the crash comes before its catch-up
+    ManifestTable.appendWithRetry(spark, corpusDir,
+      Seq((2L, "how vexingly quick daft zebras jump around today"))
+        .toDF("doc_id", "text"), txn = Some("gap-1"))
+    sink(Seq((3L, "how vexingly quick daft zebras jump around tonight"))
+      .toDF("doc_id", "text"), 2L)
+    assert(ManifestTable.read(spark, corpusDir)._2
+      .select($"doc_id").as[Long].collect().toSet == Set(1L, 2L))
+    assert(ManifestTable.read(spark, indexDir)._2
+      .select($"doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+  }
 }
