@@ -230,10 +230,10 @@ object Explain {
               "existing=doc_id%5!=0", "shingle=word-trigram-xxhash64")) {
             graft.operators.Dedup.shingleArrays(existing)
           }
-          graft.operators.Dedup.dropIncomingDuplicatesIndexedLazy(idx,
+          graft.operators.Dedup.dropIncomingDuplicatesIndexed(idx,
             existing,
             docs.filter(org.apache.spark.sql.functions.expr("doc_id % 5 = 0")),
-            0.8)
+            0.8, lazyPlan = true)
         case "q117_containment" => graft.operators.Dedup
           .containmentPairsLazy(Tables.documents(spark, sfDir), 0.9)
         case "q118_vocab_coverage" =>

@@ -582,97 +582,92 @@ object Dedup {
     *   1. exact: drop incoming docs whose text already exists (anti-join
     *      on the text key — at scale, on its fingerprint/hash);
     *   2. near: drop incoming docs with trigram Jaccard ≥ `threshold`
-    *      against ANY existing doc — prefix-filtered like
-    *      [[jaccardPairs]], with the inverted index built over the
-    *      EXISTING side only and probed by incoming prefixes, so the
-    *      candidate and verify stages are batch-proportional. NOTE:
-    *      THIS call still re-shingles and re-shuffles the existing
-    *      corpus to build that index — O(corpus) per invocation; a
-    *      production deployment persists the existing-side shingle
-    *      index across batches (it only ever GROWS by the surviving
-    *      batch, so maintaining it is an append) to make the whole
-    *      pass batch-proportional.
+    *      against ANY existing doc.
+    *
+    * This is [[dropIncomingDuplicatesIndexed]] with the index shingled
+    * in-line: the existing corpus is shingled inside the map-only stage
+    * that probes it (no corpus row is broadcast, or shuffled beyond
+    * [[shingleArrays]]' fan-out of an under-partitioned input), so the
+    * O(corpus) work is reading `existing` and shingling it. A production
+    * deployment persists that index across batches
+    * ([[graft.sources.IndexStore]]) and calls the indexed form, which
+    * reads the stored arrays instead of re-shingling.
     *
     * The existing corpus never loses rows — only incoming rows are
     * filtered, which is what makes the operation safe to run on every
     * micro-batch forever (same idempotence shape as the A7 upsert). */
   def dropIncomingDuplicates(existing: DataFrame, incoming: DataFrame,
-      threshold: Double): DataFrame = {
-    val exactSurvivors = incoming.join(existing.select(col("text")),
-      Seq("text"), "left_anti")
-    val ex = shingleArrays(existing).persist()
-    val in = shingleArrays(exactSurvivors).persist()
-    releaseAfter(ex, in)(
-      dropIncomingPlan(exactSurvivors, ex, in, threshold))
-  }
-
-  /** LAZY plan-only variant of [[dropIncomingDuplicates]] (no caching, no
-    * eager materialization) — for plan inspection; the executable form
-    * above manages its own shingle caches. */
-  def dropIncomingDuplicatesLazy(existing: DataFrame, incoming: DataFrame,
-      threshold: Double): DataFrame = {
-    val exactSurvivors = incoming.join(existing.select(col("text")),
-      Seq("text"), "left_anti")
-    dropIncomingPlan(exactSurvivors, shingleArrays(existing),
-      shingleArrays(exactSurvivors), threshold)
-  }
+      threshold: Double): DataFrame =
+    dropIncomingDuplicatesIndexed(shingleArrays(existing), existing,
+      incoming, threshold)
 
   /** [[dropIncomingDuplicates]] against a PERSISTED existing-side shingle
-    * index — the batch-proportional production shape its scaladoc
-    * promises. `existingIndex` is a [[shingleArrays]]-shaped table
-    * (doc_id, arr, n_sh) read from storage (see
-    * [[graft.sources.IndexStore]]): the existing corpus is never
-    * re-shingled or re-shuffled here; the only O(corpus) work left is the
-    * scan of the index files themselves, and the candidate/verify stages
-    * stay proportional to the batch. `existingTexts` supplies the exact-
-    * text gate (a narrow `text` projection of the existing corpus — at
-    * scale, a fingerprint column in the same index). After the batch
-    * commits, append the survivors' [[shingleArrays]] rows to the index
-    * ([[graft.sources.IndexStore.append]]) so the next batch probes an
-    * up-to-date corpus — an O(batch) append, never a rebuild. */
+    * index. `existingIndex` is a [[shingleArrays]]-shaped table
+    * (doc_id, arr, n_sh), usually read from storage (see
+    * [[graft.sources.IndexStore]]); `existingTexts` supplies the exact-
+    * text gate (the existing corpus's `text` column — at scale, a
+    * fingerprint column). After the batch commits, append the survivors'
+    * [[shingleArrays]] rows to the index ([[graft.sources.IndexStore.append]])
+    * so the next batch probes an up-to-date corpus — an O(batch) append,
+    * never a rebuild.
+    *
+    * Plan — ship the small batch to the corpus, never the reverse (the
+    * query-side broadcast of distributed similarity search):
+    *   - exact gate: the batch's (doc_id, text) rows are broadcast, and
+    *     the corpus texts stream past them; a match makes a loser;
+    *   - near gate: each batch doc emits one row (doc_a, arr_a, na,
+    *     shingle) per PREFIX shingle, `slice(arr, 1, n − ⌈t·n⌉ + 1)` —
+    *     lossless for J ≥ t by the pigeonhole argument of
+    *     [[jaccardPairs]] — and these rows are broadcast; the index
+    *     streams as (arr_b, nb, explode(arr)), probes them on the shingle,
+    *     applies the size-ratio prefilter and keeps pairs whose exact J
+    *     (`sorted_intersect_count`, inline) is ≥ t;
+    *   - both corpus scans run in ONE map-only stage that emits only
+    *     loser doc ids; those are shuffled once (a distinct), and the
+    *     batch is anti-joined against them.
+    * No corpus row is shuffled or broadcast, the index and the corpus
+    * texts are each read once, and nothing is pinned but the result.
+    * Incoming ids may collide with corpus ids: a pair carries both
+    * arrays, so no id lookup can confuse the sides.
+    *
+    * Broadcast bound: the near-gate broadcast holds each batch doc's
+    * array once per prefix shingle, about (1−t)·n + 1 copies of an
+    * n-shingle array. On q110 at sf0.1 (1000 batch docs of ~52 trigrams,
+    * t = 0.8) that is 11,079 rows and an 8.7 MB hash relation; the text
+    * broadcast holds one row per batch doc. A caller whose batch is too
+    * large to broadcast must split the batch.
+    *
+    * The result is pinned (eager localCheckpoint): run as one action, the
+    * probe takes a few jobs, where an adaptive plan that embeds it (the
+    * gated-ingest sink's semantic gate) would run each of its stages as a
+    * job of its own. `lazyPlan = true` skips the pin for plan inspection. */
   def dropIncomingDuplicatesIndexed(existingIndex: DataFrame,
       existingTexts: DataFrame, incoming: DataFrame,
-      threshold: Double): DataFrame = {
-    val exactSurvivors = incoming.join(existingTexts.select(col("text")),
-      Seq("text"), "left_anti")
-    val in = shingleArrays(exactSurvivors).persist()
-    releaseAfter(in)(
-      dropIncomingPlan(exactSurvivors, existingIndex, in, threshold))
-  }
-
-  /** LAZY plan-only variant of [[dropIncomingDuplicatesIndexed]] — lets
-    * specs assert the existing side is SCANNED from the index (the plan
-    * references the index files; no shingling of the existing corpus
-    * appears anywhere). */
-  def dropIncomingDuplicatesIndexedLazy(existingIndex: DataFrame,
-      existingTexts: DataFrame, incoming: DataFrame,
-      threshold: Double): DataFrame = {
-    val exactSurvivors = incoming.join(existingTexts.select(col("text")),
-      Seq("text"), "left_anti")
-    dropIncomingPlan(exactSurvivors, existingIndex,
-      shingleArrays(exactSurvivors), threshold)
-  }
-
-  /** Shared cross-set plan. PRECONDITION: doc ids are globally unique
-    * across both sides (true for any real corpus with stable ids) — the
-    * verify step resolves each pair side from the unioned array table by
-    * id. Reuses [[verifyPairs]] (size-ratio prefilter + codegen'd
-    * array_intersect) rather than re-implementing verification. */
-  private def dropIncomingPlan(exactSurvivors: DataFrame, ex: DataFrame,
-      in: DataFrame, threshold: Double): DataFrame = {
-    // incoming prefixes probe the existing corpus's full inverted index —
-    // lossless for J >= t by the same pigeonhole as jaccardPairsPlan
-    val prefix = in.select(col("doc_id"), explode(slice(col("arr"), lit(1),
-      (col("n_sh") - ceil(lit(threshold) * col("n_sh")) + 1).cast("int")))
-      .as("shingle"))
-    val corpusIndex = ex
-      .select(col("doc_id").as("ex_id"), explode(col("arr")).as("shingle"))
-    val candidates = prefix
-      .join(corpusIndex.hint("SHUFFLE_HASH"), Seq("shingle"))
-      .select(col("doc_id").as("doc_a"), col("ex_id").as("doc_b")).distinct()
-    val losers = verifyPairs(candidates, in.unionByName(ex), threshold)
-      .select(col("doc_a").as("doc_id")).distinct()
-    exactSurvivors.join(losers, Seq("doc_id"), "left_anti")
+      threshold: Double, lazyPlan: Boolean = false): DataFrame = {
+    val exactLosers = existingTexts.select(col("text"))
+      .join(broadcast(incoming.select(col("doc_id"), col("text"))), "text")
+      .select(col("doc_id"))
+    val probe = shingleArrays(incoming).select(col("doc_id").as("doc_a"),
+      col("arr").as("arr_a"), col("n_sh").as("na"),
+      explode(slice(col("arr"), lit(1),
+        (col("n_sh") - ceil(lit(threshold) * col("n_sh")) + 1).cast("int")))
+        .as("shingle"))
+    val nearLosers = existingIndex
+      .select(col("arr").as("arr_b"), col("n_sh").as("nb"),
+        explode(col("arr")).as("shingle"))
+      .join(broadcast(probe), "shingle")
+      .filter(least(col("na"), col("nb")) >=
+        lit(threshold) * greatest(col("na"), col("nb")))
+      .withColumn("c",
+        TextExpressions.sorted_intersect_count(col("arr_a"), col("arr_b")))
+      .filter(col("c") / (col("na") + col("nb") - col("c")) >= threshold)
+      .select(col("doc_a").as("doc_id"))
+    // SHUFFLE_HASH: the distinct already hash-partitions the losers on
+    // doc_id, so only the batch moves, and neither side is sorted
+    val survivors = incoming.join(
+      exactLosers.union(nearLosers).distinct().hint("SHUFFLE_HASH"),
+      Seq("doc_id"), "left_anti")
+    if (lazyPlan) survivors else survivors.localCheckpoint(true)
   }
 
   /** X2 SimHash near-dup candidates: 64-bit fingerprints, 4×16-bit bands

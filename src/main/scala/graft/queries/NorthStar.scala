@@ -627,9 +627,10 @@ object NorthStar {
     * prefix-filtered Jaccard probing a PERSISTED shingle index
     * ([[graft.sources.IndexStore]], built once per source snapshot and
     * reused across invocations). The continuous-ingestion counterpart of
-    * the batch-global q37/q38: with the index on disk, a micro-batch
-    * costs O(batch) shingling + candidate/verify, not an O(corpus)
-    * re-shingle per run. */
+    * the batch-global q37/q38: the batch is shingled and broadcast, and
+    * the index is read once in a map-only stage that verifies each
+    * candidate pair in place, so no corpus row is shuffled, broadcast or
+    * re-shingled. */
   def incrementalDedup(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     val docs = graft.operators.Par.fanOut(Tables.documents(spark, d))

@@ -45,33 +45,59 @@ object Warehouse {
       current_timestamp().as("extraction_timestamp"))
 }
 
-/** Parquet-backed warehouse (the harness stand-in for MySQL). */
+/** Parquet-backed warehouse (the harness stand-in for MySQL).
+  *
+  * An append writes the merged table to `<path>__staging`, then swaps it
+  * in by renames: live → `<path>__previous`, staging → live, delete
+  * `__previous`. Every step either completes or leaves a state the next
+  * append or read repairs ([[recover]]), so a crash never loses the
+  * table: without the live dir, `__previous` means the crash came
+  * between the two renames, after the staging write had finished, and
+  * the swap rolls forward. */
 class ParquetWarehouse(spark: SparkSession, path: String) extends StockWarehouse {
 
-  private def existsOnDisk: Boolean =
-    new java.io.File(path).exists()
+  private val live = new java.io.File(path)
+  private val staging = new java.io.File(path + "__staging")
+  private val previous = new java.io.File(path + "__previous")
 
-  private def current(): DataFrame =
-    if (existsOnDisk) spark.read.parquet(path)
+  /** One step of the swap: fails loudly instead of ignoring a refused
+    * rename. */
+  protected def rename(from: java.io.File, to: java.io.File): Unit =
+    if (!from.renameTo(to))
+      throw new java.io.IOException(s"could not rename $from to $to")
+
+  private def rm(f: java.io.File): Unit = {
+    if (f.isDirectory) f.listFiles().foreach(rm)
+    f.delete()
+  }
+
+  /** Finish a swap a crash interrupted. A leftover `__staging` next to
+    * the live table is an unfinished write, which the next append
+    * overwrites. Assumes one writer, and no read during an append. */
+  private def recover(): Unit = {
+    if (!live.exists() && previous.exists())
+      rename(if (staging.exists()) staging else previous, live)
+    if (previous.exists()) rm(previous)
+  }
+
+  private def current(): DataFrame = {
+    recover()
+    if (live.exists()) spark.read.parquet(path)
     else spark.emptyDataFrame
+  }
 
   override def append(batch: DataFrame): Unit = {
+    recover()
     val incoming = Warehouse.toWarehouseSchema(batch)
     val merged =
-      if (!existsOnDisk) incoming.dropDuplicates(Seq("symbol", "date"))
-      else Upsert.upsertIgnore(incoming, current(), Seq("symbol", "date"))
+      if (!live.exists()) incoming.dropDuplicates(Seq("symbol", "date"))
+      else Upsert.upsertIgnore(incoming, spark.read.parquet(path),
+        Seq("symbol", "date"))
     // write-then-swap so the read inside upsertIgnore never races the write
-    val tmp = path + "__staging"
-    merged.write.mode("overwrite").parquet(tmp)
-    val dir = new java.io.File(path)
-    if (dir.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(dir)
-    }
-    new java.io.File(tmp).renameTo(dir)
+    merged.write.mode("overwrite").parquet(staging.getPath)
+    if (live.exists()) rename(live, previous)
+    rename(staging, live)
+    rm(previous)
   }
 
   override def readBack(n: Int): DataFrame =

@@ -59,12 +59,15 @@ import graft.sources.ManifestTable
   * once; accepted and the text index are each resolved once, pinned to
   * one version, and shared by the heal and both gates; the frozen
   * codebook is collected once per snapshot and kept on the driver. The
-  * txt gate is the indexed incremental-dedup
-  * plan (prefix-filtered probe of the inverted index, candidates
-  * verified exactly); the semantic gate is map-only assignment +
-  * cell-equi-joins with the corpus side pruned to touched cells; both
-  * are proportional to the BATCH, never the corpus. The commit is one
-  * append. Usage:
+  * text gate is the indexed incremental-dedup plan: the batch's texts
+  * and prefix shingles are broadcast, and the accepted texts and the
+  * text index are read once in a map-only stage that matches them and
+  * verifies each pair exactly, so only the batch's loser ids are
+  * shuffled; no accepted or index row is shuffled or broadcast. The
+  * semantic gate is map-only assignment + cell-equi-joins
+  * with the corpus side pruned to touched cells; that join still
+  * shuffles the pruned corpus vectors (they are its hash build side).
+  * The commit is one append. Usage:
   * {{{
   * docsWithVectors.writeStream
   *   .foreachBatch(GatedIngest.sink(accepted, txtIdx, centroids,

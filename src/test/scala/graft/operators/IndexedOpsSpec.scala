@@ -165,19 +165,65 @@ class IndexedOpsSpec extends SparkSpec {
       .select($"doc_id").orderBy($"doc_id")
     assert(sortedRows(got) === sortedRows(want))
     assert(got.count() > 0)
-    // plan contract: the existing side comes from the index FILES; the only
-    // shingle_hashes computations left are over the incoming batch
-    val lazyDf = Dedup.dropIncomingDuplicatesIndexedLazy(
-      idx, existing, incoming, 0.8)
-    assert(scanPaths(lazyDf).exists(_.contains(new java.io.File(dir).getName)),
-      s"existing side should scan the index dir, scans: ${scanPaths(lazyDf)}")
-    val lazyPlan = lazyDf.queryExecution.optimizedPlan.toString
-    val shingleOps = "shingle_hashes".r.findAllIn(lazyPlan).length
-    val unindexedOps = "shingle_hashes".r.findAllIn(
-      Dedup.dropIncomingDuplicatesLazy(existing, incoming, 0.8)
-        .queryExecution.optimizedPlan.toString).length
-    assert(shingleOps < unindexedOps,
-      s"indexed plan shingles as much as unindexed ($shingleOps vs $unindexedOps)")
+    // plan contract: the existing side comes from the index FILES (the
+    // plan-shape test below pins down the rest)
+    val plan = Dedup.dropIncomingDuplicatesIndexed(idx, existing, incoming, 0.8,
+      lazyPlan = true)
+    assert(scanPaths(plan).exists(_.contains(new java.io.File(dir).getName)),
+      s"existing side should scan the index dir, scans: ${scanPaths(plan)}")
+  }
+
+  test("indexed incremental dedup probes the corpus in one map-only stage " +
+      "against broadcasts of the batch (q110 shape, sf0.01)") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
+      Exchange}
+    import spark.implicits._
+    // q110's split, with the batch and the corpus in files of their own
+    // so a scan tells which side it reads
+    val tmp = Files.createTempDirectory("shprobe").toString
+    val docs = graft.Tables.documents(spark,
+      s"${new java.io.File(sf).getParent}/sf0.01")
+    docs.filter($"doc_id" % 5 === 0).write.parquet(s"$tmp/batch")
+    docs.filter($"doc_id" % 5 =!= 0).write.parquet(s"$tmp/corpus")
+    val existing = spark.read.parquet(s"$tmp/corpus")
+    val idx = IndexStore.ensure(spark, s"$tmp/shingles", "spec") {
+      Dedup.shingleArrays(existing)
+    }
+    val batch = spark.read.parquet(s"$tmp/batch")
+    val (_, stages) = org.apache.spark.graft.JobCount.stages(spark.sparkContext) {
+      Dedup.dropIncomingDuplicatesIndexed(idx, existing, batch, 0.8)
+    }
+    // the plan below the pin, as adaptive execution finalizes it
+    val out = Dedup.dropIncomingDuplicatesIndexed(idx, existing, batch, 0.8,
+      lazyPlan = true)
+    out.collect()
+    object Plan extends AdaptiveSparkPlanHelper
+    val plan = out.queryExecution.executedPlan
+    def scans(p: SparkPlan, side: String): Boolean = Plan.find(p) {
+      case s: FileSourceScanExec =>
+        s.relation.location.rootPaths.exists(_.toString.contains(s"$tmp/$side"))
+      case _ => false
+    }.isDefined
+    def scansCorpus(p: SparkPlan) = scans(p, "shingles") || scans(p, "corpus")
+    assert(scans(plan, "shingles") && scans(plan, "corpus"), s"$plan")
+    // the batch is broadcast twice, once per gate; no corpus row is
+    val broadcasts = Plan.collect(plan) { case b: BroadcastExchangeLike => b }
+    assert(broadcasts.map(_.output.map(_.name)).sortBy(_.size) ==
+      Seq(Seq("doc_id", "text"), Seq("doc_a", "arr_a", "na", "shingle")),
+      s"expected the batch's texts and prefix shingles broadcast:\n$plan")
+    broadcasts.foreach(b => assert(!scansCorpus(b), s"broadcast of corpus rows:\n$b"))
+    // corpus rows never cross an exchange: the only exchanges above a
+    // corpus scan carry the loser doc ids the map-only probes emit
+    Plan.collect(plan) { case e: Exchange if scansCorpus(e) => e }.foreach { e =>
+      assert(e.output.map(_.name) == Seq("doc_id"),
+        s"an exchange above a corpus scan carries ${e.output}:\n$plan")
+    }
+    // measured 6: the text broadcast; the batch's fan-out and the prefix
+    // broadcast; the batch's shuffle on doc_id, the map-only corpus probe
+    // and the anti-join
+    assert(stages <= 6 + 1, s"probe ran $stages stages")
   }
 
   test("incremental dedup maintenance loop: probe, commit survivors, " +

@@ -429,6 +429,48 @@ object PropertySpec extends Properties("graft.operators") {
         survivedTexts.intersect(exSet).isEmpty // exact dups never survive
     }
 
+  /** Docs of 0-7 tokens over a 4-word vocabulary: docs under 3 tokens
+    * (no trigram) and heavy trigram overlap both occur. */
+  private val shortDocs = Gen.listOfN(8, Gen.chooseNum(0, 7).flatMap(n =>
+    Gen.listOfN(n, Gen.oneOf("alpha", "beta", "gamma", "delta"))
+      .map(_.mkString(" "))))
+
+  property("dropIncomingDuplicates(Indexed) == brute force: drop on equal " +
+    "text or trigram Jaccard >= t with any corpus doc (ids may collide)") =
+    Prop.forAllNoShrink(Gen.frequency(1 -> Gen.const(Nil), 5 -> shortDocs),
+      shortDocs, Gen.chooseNum(0L, 8L)) { (exTexts, inTexts, firstId) =>
+      import spark.implicits._
+      val existing = exTexts.zipWithIndex
+        .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      // incoming ids start inside the corpus id range, so some collide
+      val incoming = inTexts.zipWithIndex
+        .map { case (t, i) => (firstId + i, t) }.toDF("doc_id", "text")
+      // Spark's split keeps empty tokens (limit -1); the 4-word vocabulary
+      // has 64 trigrams, so the engine's 64-bit hashes never collide and
+      // string trigram sets give the same Jaccard
+      def trigrams(t: String): Set[String] =
+        t.split(" ", -1).sliding(3).filter(_.length == 3).map(_.mkString(" ")).toSet
+      val exGrams = exTexts.map(trigrams).filter(_.nonEmpty)
+      def jaccard(a: Set[String], b: Set[String]): Double = {
+        val c = a.intersect(b).size
+        c.toDouble / (a.size + b.size - c)
+      }
+      def want(t: Double): Set[Long] = inTexts.zipWithIndex.collect {
+        case (text, i) if !exTexts.contains(text) &&
+          !exGrams.exists(e => jaccard(trigrams(text), e) >= t) => firstId + i
+      }.toSet
+      def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+        df.select("doc_id").as[Long].collect().toSet
+      val index = Dedup.shingleArrays(existing)
+      Prop.all(Seq(0.5, 0.8).flatMap { t =>
+        Seq(
+          Prop(ids(Dedup.dropIncomingDuplicates(existing, incoming, t)) == want(t))
+            :| s"dropIncomingDuplicates t=$t",
+          Prop(ids(Dedup.dropIncomingDuplicatesIndexed(index, existing,
+            incoming, t)) == want(t)) :| s"dropIncomingDuplicatesIndexed t=$t")
+      }: _*)
+    }
+
   /** Independent replay of Curation's 32-bit md5 id hash. */
   private def hash32(id: Long): Long = java.lang.Long.parseLong(
     java.security.MessageDigest.getInstance("MD5")
