@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
-import graft.sources.{AlphaVantage, ManifestTable, ParquetWarehouse, RawCache, RunLog}
+import graft.sources.{AlphaVantage, FakeAlphaVantageServer, ManifestTable,
+  ParquetWarehouse, RawCache, RunLog}
 import graft.streaming.{DauStateStream, GatedIngest, StreamingIngest}
-import graft.streaming.avsource.FakeAlphaVantageServer
 
 /** The reference's `main()` (etl.py:183-216) end-to-end, Spark-first:
   *

@@ -31,10 +31,4 @@ object Money {
   def sumRevenueIf(price: Column, disc: Column, cond: Column): Column =
     sum(when(cond, cents(price) * (lit(100L) - cents(disc)))
       .otherwise(lit(0L))) / 10000.0
-
-  /** SQL (DuckDB) forms of the same — keep in lockstep with the above. */
-  def centsSql(col: String): String = s"CAST(round($col * 100) AS BIGINT)"
-  def sumMoneySql(col: String): String = s"sum(${centsSql(col)}) / 100.0"
-  def sumRevenueSql(price: String, disc: String): String =
-    s"sum(${centsSql(price)} * (100 - ${centsSql(disc)})) / 10000.0"
 }

@@ -215,11 +215,6 @@ object Curation {
       value: Column): DataFrame =
     cummaxPlan(rankedMax(df, order, value).localCheckpoint(true))
 
-  /** LAZY plan-only variant of [[withGlobalCummax]]. */
-  def withGlobalCummaxLazy(df: DataFrame, order: Seq[Column],
-      value: Column): DataFrame =
-    cummaxPlan(rankedMax(df, order, value))
-
   private def rankedMax(df: DataFrame, order: Seq[Column],
       value: Column): DataFrame = {
     // cummaxPlan additionally injects __lmax / row_off / max_off

@@ -562,17 +562,6 @@ object Dedup {
     labels
   }
 
-  /** Transitive-closure-correct near-duplicate removal: one representative
-    * (the min doc_id) survives per connected component of the near-dup
-    * graph — unlike [[dropNearDuplicates]], a chain A~B~C (where A~C may
-    * be below threshold) keeps ONLY A. */
-  def dropNearDuplicatesCC(docs: DataFrame, threshold: Double): DataFrame = {
-    val losers = connectedComponents(jaccardPairs(docs, threshold))
-      .filter(col("doc_id") =!= col("component"))
-      .select(col("doc_id"))
-    docs.join(losers, Seq("doc_id"), "left_anti")
-  }
-
   /** Incremental (cross-set) near-duplicate removal — the continuous-
     * ingestion production shape: an incoming batch is deduplicated
     * AGAINST an existing corpus, never against itself (in-batch dedup is

@@ -309,8 +309,8 @@ object Similarity {
     * `cellCol`). Like [[semDedup]] the in-batch rule is the independent
     * any-smaller-mate predicate, not a sequential greedy — a batch vector
     * can be dropped by a mate that is itself dropped against the corpus
-    * (deterministic either way; transitivity-aware removal is
-    * [[graft.operators.Dedup.dropNearDuplicatesCC]]'s cost profile).
+    * (deterministic either way; transitivity-aware removal would add a
+    * [[graft.operators.Dedup.connectedComponents]] pass over the pairs).
     * Scale: both joins are cell-key equi-joins; the corpus side is
     * pre-prunable to the batch's touched cells by the caller. */
   def semDedupIncoming(existing: DataFrame, incoming: DataFrame,
@@ -1500,7 +1500,7 @@ object Similarity {
   }
 
   /** The shared metric tail of [[knnRankingMetrics]] /
-    * [[ivfRankingMetrics]]: from the scored candidate frame
+    * [[ivfRankingMetricsWith]]: from the scored candidate frame
     * (qid, qlab, rel, cos, nid) to the one-row
     * (n_queries, mean_ndcg_ppm, mrr_ppm, mean_prec_ppm) report —
     * per-query rank cut at k, literal-discount DCG, label-count IDCG,
@@ -1538,34 +1538,25 @@ object Similarity {
     * 100 TB serving form of [[knnRankingMetrics]]: the same
     * MRR / nDCG@k / precision@k report, but each of the `nQueries`
     * FIXED queries (vec_id < nQueries) scores only the members of its
-    * `nProbe` closest cells of the deterministic trained quantizer
-    * ([[kmeansCentroids]] — q136/q167's init/rounding/tie-break
-    * contract), never the whole corpus. Everything downstream of the
-    * quantizer is deterministic (centroid-cosine probe with cid
-    * tiebreak, rounded candidate cosine with nid tiebreak, literal
-    * discount table), so EVERY number replays in the DuckDB oracle —
-    * unlike the summary-pinned ANN serving oracles (q43/q53/q138/
-    * q156).
+    * `nProbe` closest cells of an ALREADY-TRAINED codebook `cents` (the
+    * [[centroidsOf]] array form: [[kmeansCentroids]] — q136/q167's
+    * init/rounding/tie-break contract — or a persisted
+    * [[graft.sources.IndexStore]] snapshot), never the whole corpus.
+    * Everything downstream of the quantizer is deterministic
+    * (centroid-cosine probe with cid tiebreak, rounded candidate cosine
+    * with nid tiebreak, literal discount table), so EVERY number
+    * replays in the DuckDB oracle — unlike the summary-pinned ANN
+    * serving oracles (q43/q53/q138/q156).
     *
-    * Scale shape: centroids are k×d driver literals; assignment is
-    * map-only (the [[assignWithVec]] no-SMJ lesson); the probe table
-    * is (nQueries × nProbe) broadcast-sized; the candidate scan
-    * touches only probed-cell members (cell-bounded, not corpus ×
+    * Scale shape: no training job; centroids are k×d plan literals;
+    * assignment is map-only (the [[assignWithVec]] no-SMJ lesson); the
+    * probe table is (nQueries × nProbe) broadcast-sized; the candidate
+    * scan touches only probed-cell members (cell-bounded, not corpus ×
     * queries); the metric tail is per-query-window + 1-row
     * aggregates. The load model is FIXED-query by construction —
     * the corpus-proportional eval set that made the brute-force
     * form quadratic under replication is structurally impossible
     * here. */
-  def ivfRankingMetrics(emb: DataFrame, kCells: Int, iters: Int,
-      nProbe: Int, nQueries: Int, k: Int): DataFrame =
-    ivfRankingMetricsWith(emb, kmeansCentroids(emb, kCells, iters),
-      nProbe, nQueries, k)
-
-  /** [[ivfRankingMetrics]] against an ALREADY-TRAINED codebook (the
-    * [[centroidsOf]] array form, typically read from a persisted
-    * [[graft.sources.IndexStore]] snapshot) — the steady-state serving
-    * shape: no training job, map-only assignment, cell-bounded
-    * candidate scan. */
   def ivfRankingMetricsWith(emb: DataFrame,
       cents: Array[(Long, Array[Double])],
       nProbe: Int, nQueries: Int, k: Int): DataFrame = {

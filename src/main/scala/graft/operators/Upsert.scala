@@ -20,12 +20,17 @@ object Upsert {
   /** Returns `existing ∪ (incoming ∖keys existing)`, with in-batch key dedup
     * on the incoming side first. Column sets must match by name. */
   def upsertIgnore(incoming: DataFrame, existing: DataFrame,
-      keys: Seq[String]): DataFrame = {
-    val fresh = incoming
+      keys: Seq[String]): DataFrame =
+    existing.unionByName(newKeys(incoming, existing, keys))
+
+  /** The rows `INSERT IGNORE` would add: `incoming` deduped on `keys`,
+    * minus every key `existing` already holds. What the warehouses
+    * append. */
+  def newKeys(incoming: DataFrame, existing: DataFrame,
+      keys: Seq[String]): DataFrame =
+    incoming
       .dropDuplicates(keys)
       .join(existing.select(keys.map(col): _*), keys, "left_anti")
-    existing.unionByName(fresh)
-  }
 
   /** Slowly-changing-dimension Type 2 build (Kimball's dimensional
     * modeling, public since the 1996 Data Warehouse Toolkit): an

@@ -24,13 +24,13 @@
   *  - [[graft.plans]] — custom Catalyst expressions (codegen'd DotProduct,
   *    SimHash64, RollingHash) and the FuseDotProduct optimizer rule +
   *    SparkSessionExtensions wiring.
-  *  - [[graft.sources]] — AlphaVantage ingest (schema-on-read, quarantine),
-  *    Parquet/Jdbc warehouses (DECIMAL at-rest, idempotent append),
-  *    RawCache, RunLog.
-  *  - [[graft.streaming]] — file-drop ingest with exactly-once checkpoint,
-  *    watermarked dedup, windowed aggs, flatMapGroupsWithState
-  *    sessionizer, stream-static enrichment, and the custom
-  *    DataSource-V2 rate-limited source in
-  *    [[graft.streaming.avsource]].
+  *  - [[graft.sources]] — RawCache (cache-or-fetch, with the
+  *    FakeAlphaVantageServer fetch stub), AlphaVantage ingest
+  *    (schema-on-read, quarantine), Parquet/Jdbc warehouses (DECIMAL
+  *    at-rest, append of new keys only), ManifestTable, RunLog.
+  *  - [[graft.streaming]] — file-drop ingest with exactly-once checkpoint
+  *    and `maxFilesPerTrigger` throttling, gated admission into
+  *    ManifestTable, watermarked dedup, windowed aggs,
+  *    flatMapGroupsWithState sessionizer, stream-static enrichment.
   */
 package object graft

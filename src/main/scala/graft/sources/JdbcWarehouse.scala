@@ -5,16 +5,18 @@ import java.util.Properties
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Upsert
+
 /** S4/S5: the JDBC implementation of [[StockWarehouse]] — the reference's
   * actual MySQL sink (etl.py:110-158) as a partitioned batched write
   * instead of one INSERT per row.
   *
   * INSERT IGNORE has no JDBC-append equivalent, so idempotence is the same
-  * anti-join used by [[ParquetWarehouse]]: read existing keys, drop
-  * incoming duplicates, append the remainder (for engines with MERGE, a
-  * `foreachBatch` MERGE would replace this). `batchsize` controls rows per
-  * JDBC round trip — the set-based fix for the reference's ≤300
-  * statements/run pattern.
+  * anti-join ([[graft.operators.Upsert.newKeys]]) as [[ParquetWarehouse]]'s:
+  * read existing keys, drop incoming duplicates, append the remainder (for
+  * engines with MERGE, a `foreachBatch` MERGE would replace this).
+  * `batchsize` controls rows per JDBC round trip — the set-based fix for
+  * the reference's ≤300 statements/run pattern.
   *
   * No NETWORK database exists in this harness (zero egress); the class is
   * exercised for real against embedded Derby (in-process JDBC engine,
@@ -34,13 +36,12 @@ class JdbcWarehouse(spark: SparkSession, url: String, table: String,
   private def existing(): DataFrame = spark.read.jdbc(url, table, props)
 
   override def append(batch: DataFrame): Unit = {
+    val keys = Seq("symbol", "date")
     val incoming = Warehouse.toWarehouseSchema(batch)
-      .dropDuplicates(Seq("symbol", "date"))
     // append only the genuinely new keys (table may not exist on first run)
     val fresh =
-      try incoming.join(existing().select("symbol", "date"),
-        Seq("symbol", "date"), "left_anti")
-      catch { case _: Exception => incoming }
+      try Upsert.newKeys(incoming, existing(), keys)
+      catch { case _: Exception => incoming.dropDuplicates(keys) }
     fresh.write
       .option("batchsize", 10000)
       // The reference declares VARCHAR(10) for symbol (etl.py:116); the

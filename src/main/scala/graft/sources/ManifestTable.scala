@@ -766,8 +766,7 @@ object ManifestTable {
     * in the same atomic pointer swap — a crash at ANY point leaves either
     * a fully committed batch (replay is a no-op) or no trace of it
     * (replay commits it); there is no window where data committed but the
-    * marker didn't. This is the manifest-layer equivalent of
-    * `sources/v2/WarehouseSink`'s idempotent re-commit, and Delta's txn
+    * marker didn't. This is the manifest-layer equivalent of Delta's txn
     * action. `streamId` must be stable across restarts and UNIQUE per
     * writing query (batch ids are per-query counters — two queries
     * sharing a streamId would suppress each other's batches); use the

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /** S2/S3 cache-or-fetch for raw payloads (etl.py:39-70): payloads are keyed
   * `{symbol}_{date}.json`; if today's file exists it is read back VERBATIM
@@ -32,10 +32,50 @@ class RawCache(dir: String) {
       Some(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
     } else {
       fetch(symbol).map { payload =>
-        Files.write(p, payload.getBytes(StandardCharsets.UTF_8))
+        // write aside, then rename into place: a run killed mid-write
+        // leaves a `.`-prefixed temp file that readers skip and the next
+        // run overwrites, never a truncated `{symbol}_{date}.json`
+        val tmp = p.resolveSibling(s".${p.getFileName}.tmp")
+        Files.write(tmp, payload.getBytes(StandardCharsets.UTF_8))
+        Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
         payload
       }
     }
+  }
+}
+
+/** DETERMINISTIC STUB standing in for `requests.get(ALPHA_VANTAGE_URL)`
+  * (etl.py:48-50): same payload shape as raw_data/AAPL_2025-10-05.json,
+  * prices derived from a hash of (symbol, date) so replays are exact. */
+object FakeAlphaVantageServer {
+  def fetch(symbol: String, date: String): String = {
+    // mask, not math.abs: abs(Int.MinValue) is still negative, which would
+    // produce negative prices/volumes for that (symbol, date)
+    val h = scala.util.hashing.MurmurHash3.stringHash(s"$symbol|$date") & 0x7fffffff
+    val base = 100.0 + (h % 40000) / 100.0
+    val open = base
+    val high = base * 1.02
+    val low = base * 0.985
+    val close = base * (0.99 + (h % 97) / 4850.0)
+    val volume = 1000000L + h % 50000000L
+    f"""{
+       |    "Meta Data": {
+       |        "1. Information": "Daily Prices (open, high, low, close) and Volumes",
+       |        "2. Symbol": "$symbol",
+       |        "3. Last Refreshed": "$date",
+       |        "4. Output Size": "Compact",
+       |        "5. Time Zone": "US/Eastern"
+       |    },
+       |    "Time Series (Daily)": {
+       |        "$date": {
+       |            "1. open": "$open%.4f",
+       |            "2. high": "$high%.4f",
+       |            "3. low": "$low%.4f",
+       |            "4. close": "$close%.4f",
+       |            "5. volume": "$volume"
+       |        }
+       |    }
+       |}""".stripMargin
   }
 }
 

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -8,10 +9,10 @@ import graft.operators.Upsert
 /** S4/S5/S6: the warehouse sink contract of the reference (etl.py:110-180)
   * behind one trait. The reference's MySQL `CREATE TABLE IF NOT EXISTS` +
   * row-wise `INSERT IGNORE` + `UNIQUE(symbol, date)` becomes: declared
-  * DECIMAL schema at the boundary, set-based anti-join append, engine-level
-  * idempotence. A JDBC implementation would swap [[ParquetWarehouse]] for
-  * `df.write.format("jdbc")` inside the same trait (no JDBC endpoint exists
-  * in this environment).
+  * DECIMAL schema at the boundary, set-based anti-join append
+  * ([[graft.operators.Upsert.newKeys]]), engine-level idempotence. Two
+  * implementations: [[ParquetWarehouse]] and the reference's own JDBC sink,
+  * [[JdbcWarehouse]].
   */
 trait StockWarehouse {
   /** Idempotent append: exactly-once per (symbol, date) (etl.py:127, 142). */
@@ -45,59 +46,45 @@ object Warehouse {
       current_timestamp().as("extraction_timestamp"))
 }
 
-/** Parquet-backed warehouse (the harness stand-in for MySQL).
+/** Parquet-backed warehouse (the harness stand-in for MySQL): parquet
+  * files directly under `path`.
   *
-  * An append writes the merged table to `<path>__staging`, then swaps it
-  * in by renames: live → `<path>__previous`, staging → live, delete
-  * `__previous`. Every step either completes or leaves a state the next
-  * append or read repairs ([[recover]]), so a crash never loses the
-  * table: without the live dir, `__previous` means the crash came
-  * between the two renames, after the staging write had finished, and
-  * the swap rolls forward. */
+  * An append writes only the batch's new keys into the live directory
+  * (Spark's append mode) and never rewrites an earlier file. Crash safety
+  * is the `INSERT IGNORE` key rule itself: the job commit moves whole part
+  * files into `path`, so a crash leaves none or some of a day's files,
+  * each holding whole rows of keys the table did not have, and the next
+  * append anti-joins those keys away and lands the rest. The one leftover
+  * that would break this is a crashed write's `_temporary` directory:
+  * Hadoop's v1 `FileOutputCommitter` merges every committed task directory
+  * under it at the next job commit, so [[append]] deletes it first.
+  *
+  * An append with no new key still commits one row-less file (Spark
+  * writes one for an empty result). Assumes one writer. */
 class ParquetWarehouse(spark: SparkSession, path: String) extends StockWarehouse {
 
-  private val live = new java.io.File(path)
-  private val staging = new java.io.File(path + "__staging")
-  private val previous = new java.io.File(path + "__previous")
+  private val dir = new Path(path)
+  private def fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** One step of the swap: fails loudly instead of ignoring a refused
-    * rename. */
-  protected def rename(from: java.io.File, to: java.io.File): Unit =
-    if (!from.renameTo(to))
-      throw new java.io.IOException(s"could not rename $from to $to")
+  /** True once an append has committed a file; like Spark's reader, this
+    * skips `_` and `.` names (`_SUCCESS`, `_temporary`). */
+  private def hasData: Boolean = fs.exists(dir) &&
+    fs.listStatus(dir).exists { f =>
+      val n = f.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
 
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rm)
-    f.delete()
-  }
-
-  /** Finish a swap a crash interrupted. A leftover `__staging` next to
-    * the live table is an unfinished write, which the next append
-    * overwrites. Assumes one writer, and no read during an append. */
-  private def recover(): Unit = {
-    if (!live.exists() && previous.exists())
-      rename(if (staging.exists()) staging else previous, live)
-    if (previous.exists()) rm(previous)
-  }
-
-  private def current(): DataFrame = {
-    recover()
-    if (live.exists()) spark.read.parquet(path)
-    else spark.emptyDataFrame
-  }
+  private def current(): DataFrame =
+    if (hasData) spark.read.parquet(path) else spark.emptyDataFrame
 
   override def append(batch: DataFrame): Unit = {
-    recover()
+    fs.delete(new Path(dir, "_temporary"), true)
+    val keys = Seq("symbol", "date")
     val incoming = Warehouse.toWarehouseSchema(batch)
-    val merged =
-      if (!live.exists()) incoming.dropDuplicates(Seq("symbol", "date"))
-      else Upsert.upsertIgnore(incoming, spark.read.parquet(path),
-        Seq("symbol", "date"))
-    // write-then-swap so the read inside upsertIgnore never races the write
-    merged.write.mode("overwrite").parquet(staging.getPath)
-    if (live.exists()) rename(live, previous)
-    rename(staging, live)
-    rm(previous)
+    val fresh =
+      if (hasData) Upsert.newKeys(incoming, spark.read.parquet(path), keys)
+      else incoming.dropDuplicates(keys)
+    fresh.write.mode("append").parquet(path)
   }
 
   override def readBack(n: Int): DataFrame =

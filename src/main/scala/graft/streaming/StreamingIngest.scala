@@ -14,14 +14,16 @@ import graft.sources.{AlphaVantage, StockDaily, StockWarehouse}
   *    `Trigger.AvailableNow` fired by an external scheduler (used here), or
   *    a long-lived `Trigger.ProcessingTime("24 hours")`.
   *  - T2 incremental file discovery (etl.py:39-45) → the file-stream source
-  *    tracks processed files in the checkpoint; the reference's data-lake
-  *    folder is already this layout.
+  *    ([[stockStream]]) tracks processed files in the checkpoint; its input
+  *    is the same data-lake folder `RawCache.getOrFetch` fills (S1) and
+  *    `AlphaVantage.readRaw` reads in batch (S2).
   *  - T3/T5 exactly-once-per-(symbol,date) with restated history
   *    (etl.py:127, 142) → watermarked `dropDuplicates` in-stream plus the
   *    idempotent warehouse append in `foreachBatch`. NOTE the semantic
   *    divergence: the reference's UNIQUE constraint never expires, the
   *    watermark state does (7 days here) — the sink-side anti-join is what
-  *    restores never-expires semantics.
+  *    restores never-expires semantics. The gated form, [[GatedIngest]],
+  *    commits to `ManifestTable` with the batch id as a txn marker.
   *  - T4 rate limiting (etl.py:62-63) → `maxFilesPerTrigger` throttling.
   */
 object StreamingIngest {
@@ -66,17 +68,6 @@ object StreamingIngest {
       .start()
     q.awaitTermination()
   }
-
-  /** Parse the raw (symbol, date, payload) rows of the custom
-    * [[graft.streaming.avsource.AlphaVantageSourceProvider]] source through
-    * the SAME transform chain as batch and file-drop ingest. */
-  def parseAvPayloads(raw: DataFrame): Dataset[StockDaily] =
-    AlphaVantage.tabularize(raw
-      .select(org.apache.spark.sql.functions.from_json(col("payload"),
-        AlphaVantage.payloadSchema).as("p"))
-      .select(col("p.*"))
-      .filter(col("Meta Data").isNotNull &&
-        col("`Time Series (Daily)`").isNotNull))
 
   /** StockDaily rows → the gated-admission (doc_id, text, embedding)
     * doc form ([[GatedIngest]]'s input contract): id and text are pure

@@ -22,10 +22,10 @@ object SparkSpec {
     s.sparkContext.setLogLevel("WARN")
     // Spark's FileStreamSink.hasMetadata logs a WARN + full stack on
     // EVERY batch read of a glob path whose literal form doesn't exist
-    // (e.g. the WarehouseSink specs' `part-*.json` read-backs) while
-    // merely checking for streaming-sink metadata — ~30 harmless
-    // 30-line stacks per suite run (VERDICT r13 #8). Passing tests
-    // should read clean: raise just that logger to ERROR.
+    // (AlphaVantageSpec's `{ERR_mixed,GOOG_d1}.json` read) while merely
+    // checking for streaming-sink metadata — a harmless 30-line stack
+    // per such read (VERDICT r13 #8). Passing tests should read clean:
+    // raise just that logger to ERROR.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
       org.apache.logging.log4j.Level.ERROR)

@@ -122,19 +122,6 @@ class NorthStarSpec extends SparkSpec {
     assert(nodes.forall(v => got(v) == find(v)))
   }
 
-  test("dropNearDuplicatesCC keeps one representative per cluster") {
-    import spark.implicits._
-    val docs = Seq(
-      (1L, "a b c d e f g h i j"),
-      (2L, "a b c d e f g h i x"),  // near-dup of 1
-      (3L, "a b c d e f g h x y"),  // near-dup of 2, not of 1 at high t
-      (4L, "p q r s t u v w k m")
-    ).toDF("doc_id", "text")
-    val kept = Dedup.dropNearDuplicatesCC(docs, 0.5)
-      .select($"doc_id").as[Long].collect().toSet
-    assert(kept == Set(1L, 4L))
-  }
-
   test("minhashLshPairs matches exact jaccardPairs at threshold 0.8") {
     import spark.implicits._
     val docs = graft.Tables.documents(spark, sf)

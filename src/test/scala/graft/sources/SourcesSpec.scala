@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
 import graft.SparkSpec
@@ -21,6 +22,33 @@ class SourcesSpec extends SparkSpec {
     // fetcher failure (rate limit): no cache entry, None, not fatal
     val failed = cache.getOrFetch("GOOG", "2025-10-05")(_ => None)
     assert(failed.isEmpty && !cache.contains("GOOG", "2025-10-05"))
+  }
+
+  test("RawCache: a write a crash left behind is invisible, and the next " +
+      "run lands the whole payload") {
+    val dir = Files.createTempDirectory("cachecrash").toString
+    val cache = new RawCache(dir)
+    cache.getOrFetch("GOOG", "2025-10-05")(s =>
+      Some(FakeAlphaVantageServer.fetch(s, "2025-10-05")))
+    val payload = FakeAlphaVantageServer.fetch("AAPL", "2025-10-05")
+    // a run killed mid-write leaves its truncated temp file behind
+    val tmp = cache.pathFor("AAPL", "2025-10-05")
+      .resolveSibling(".AAPL_2025-10-05.json.tmp")
+    Files.write(tmp, payload.take(40).getBytes(StandardCharsets.UTF_8))
+
+    assert(!cache.contains("AAPL", "2025-10-05"))
+    assert(AlphaVantage.readRaw(spark, dir).count() == 1) // GOOG only
+    var fetches = 0
+    val got = cache.getOrFetch("AAPL", "2025-10-05") { s =>
+      fetches += 1; Some(FakeAlphaVantageServer.fetch(s, "2025-10-05"))
+    }
+    assert(got.contains(payload) && fetches == 1)
+    assert(new String(Files.readAllBytes(cache.pathFor("AAPL", "2025-10-05")),
+      StandardCharsets.UTF_8) == payload)
+    assert(!Files.exists(tmp))
+    val (valid, quarantined) =
+      AlphaVantage.validate(AlphaVantage.readRaw(spark, dir))
+    assert(valid.count() == 2 && quarantined.count() == 0)
   }
 
   test("RunLog appends one line per run (etl.py:222-223)") {

@@ -40,33 +40,6 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(whPath).count() == 11)
   }
 
-  test("RunLogListener appends one line per batch, started and terminated") {
-    val tmp = Files.createTempDirectory("runlog").toString
-    val log = s"$tmp/etl_log.txt"
-    val listener = new RunLogListener(log)
-    spark.streams.addListener(listener)
-    try {
-      val drop = new java.io.File(s"$tmp/drop"); drop.mkdirs()
-      Files.copy(java.nio.file.Paths.get(s"$fixtures/AAPL_d1.json"),
-        java.nio.file.Paths.get(s"${drop.getPath}/AAPL_d1.json"))
-      val wh = new ParquetWarehouse(spark, s"$tmp/warehouse")
-      StreamingIngest.runOnce(spark, drop.getPath, s"$tmp/ckpt", wh)
-      // listener events are async; wait briefly for the terminate line
-      val deadline = System.nanoTime() + 10e9.toLong
-      def lines() =
-        if (new java.io.File(log).exists())
-          scala.io.Source.fromFile(log).getLines().toSeq
-        else Seq.empty
-      while (!lines().exists(_.contains("terminated")) &&
-        System.nanoTime() < deadline) Thread.sleep(100)
-      val ls = lines()
-      assert(ls.exists(_.contains("started")), ls.mkString("\n"))
-      assert(ls.exists(l => l.contains("progress") && l.contains("rows=")),
-        ls.mkString("\n"))
-      assert(ls.exists(_.contains("exception=none")), ls.mkString("\n"))
-    } finally spark.streams.removeListener(listener)
-  }
-
   test("maxFilesPerTrigger throttles the file stream but drains fully (T4)") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("throttle").toString
@@ -85,32 +58,6 @@ class StreamingSpec extends SparkSpec {
     q.stop()
     assert(spark.table("throttled").count() == 10) // 5 + 3 + 2 rows
     assert(batches >= 3, s"expected >=3 one-file micro-batches, got $batches")
-  }
-
-  test("custom MicroBatchStream source fetches day-batches, rate-limited") {
-    import spark.implicits._
-    val raw = spark.readStream
-      .format("alpha-vantage-sim")
-      .option("symbols", "AAPL,GOOG")
-      .option("start", "2025-10-01")
-      .option("end", "2025-10-03")
-      .load()
-    val q = StreamingIngest.parseAvPayloads(raw)
-      .writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("av_sim").start()
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("av_sim")
-      .select($"symbol", $"date".cast("string")).as[(String, String)]
-      .collect().toSet
-    // 2 symbols x 3 days, one payload each, exactly once
-    assert(got == (for {
-      s <- Set("AAPL", "GOOG")
-      d <- Set("2025-10-01", "2025-10-02", "2025-10-03")
-    } yield (s, d)))
-    // typed columns materialized through the shared transform chain
-    val row = spark.table("av_sim").filter($"symbol" === "AAPL").head()
-    assert(row.getAs[Double]("open") > 0.0)
   }
 
   test("watermarked hourly window agg matches the batch computation") {
