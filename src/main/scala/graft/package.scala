@@ -22,8 +22,8 @@
   *  - [[graft.functions]] — CandleAggregator (typed two-phase UDAF) and
   *    Money (exact integer-cents aggregation).
   *  - [[graft.plans]] — custom Catalyst expressions (codegen'd DotProduct,
-  *    SimHash64, RollingHash) and the FuseDotProduct optimizer rule +
-  *    SparkSessionExtensions wiring.
+  *    SimHash64, RollingHash) as SQL functions, the native as-of join,
+  *    and their SparkSessionExtensions wiring.
   *  - [[graft.sources]] — RawCache (cache-or-fetch, with the
   *    FakeAlphaVantageServer fetch stub), AlphaVantage ingest
   *    (schema-on-read, quarantine), Parquet/Jdbc warehouses (DECIMAL

@@ -21,8 +21,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * Null handling — EXACTLY the `zip_with`+`aggregate` formulation: null
   * input array → null; length mismatch → null (zip_with pads the shorter
   * side with null, and the fold's `acc + null` poisons the sum); any null
-  * element → null (same poisoning). This equivalence is what licenses
-  * [[FuseDotProduct]] to substitute this expression unconditionally. */
+  * element → null (same poisoning), so it can stand in for the fold
+  * (`Similarity.dotHof`) on every input. */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = DoubleType

@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   *     is replaced by ATOMIC file rename — the single linearization
   *     point. Readers resolve CURRENT → manifest → file list, so they
   *     see exactly one committed snapshot, never a mid-write directory
-  *     listing (the failure mode `Maintenance.compactParquet` documents).
+  *     listing (where an in-place rewrite shows old and new files at once).
   *
   * Commits use optimistic concurrency: a writer records the version it
   * read, prepares files + the next manifest, and publishes only if
@@ -523,10 +523,9 @@ object ManifestTable {
 
   /** Compact the CURRENT snapshot into `nFiles` files as a NEW snapshot
     * that references only the rewritten files. Readers pinned to older
-    * versions keep their exact file set — this is the snapshot-isolated
-    * compaction `Maintenance.compactParquet` (swap-in-place, brief
-    * duplicate window) cannot give. Throws on an empty table (see
-    * [[read]]). */
+    * versions keep their exact file set, and a crash before the CURRENT
+    * rename leaves the old snapshot whole: an in-place directory rewrite
+    * gives neither. Throws on an empty table (see [[read]]). */
   def compact(spark: SparkSession, dir: String, nFiles: Int): Long = {
     val (v, df) = read(spark, dir)
     commit(dir, expectedVersion = v, keepOld = false, txn = None) { staging =>

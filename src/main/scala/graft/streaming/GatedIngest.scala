@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
-import graft.operators.Similarity
+import graft.operators.{Dedup, Similarity}
 import graft.sources.ManifestTable
 
 /** X7 capstone — the full gated-ingest pipeline as ONE `foreachBatch`
@@ -26,24 +28,43 @@ import graft.sources.ManifestTable
   * State (all [[graft.sources.ManifestTable]]s):
   *   - `acceptedDir`: accepted documents (doc_id, text, embedding, cid)
   *     — the ONLY txn-marked table; the other two are derived from it;
-  *   - `textIndexDir`: shingle arrays of the accepted docs, maintained
-  *     by [[StreamingDedup.catchUpIndex]]'s idempotent catch-up, healed
-  *     BEFORE every probe so a crash between the accepted commit and
-  *     the index append can never admit a near-dup of an unindexed doc;
+  *   - `textIndexDir`: [[graft.operators.Dedup.shingleArrays]] rows
+  *     (doc_id, arr, n_sh) of the accepted docs, maintained by
+  *     [[catchUpIndex]]'s idempotent catch-up, not by a paired commit
+  *     (plain manifests cannot make two tables' commits atomic). It
+  *     runs BEFORE every probe, healing any accepted-ahead-of-index gap
+  *     a crash or an external append left, so the probe never consults
+  *     a stale index and cannot admit a near-dup of an unindexed doc;
+  *     and again after the commit, indexing this batch's survivors;
   *   - `centroidDir`: the k×d codebook, trained once on the first
-  *     data-carrying batch and FROZEN ([[SemanticStreamingDedup]]'s
-  *     stability argument: retraining moves cell boundaries and
-  *     silently changes which dups are catchable).
+  *     data-carrying batch and FROZEN: retraining moves cell boundaries,
+  *     so a vector pair that once shared a cell could later not, and
+  *     the cids stored on accepted rows would stop matching.
   *
-  * Catch-up watermark: each index commit of the catch-up records the
-  * accepted version it brought the index up to (a `catchup-<version>`
-  * txn, see [[StreamingDedup]]). In steady state the pre-probe heal
-  * finds the marker at the current accepted version and returns after
-  * one manifest read, with no Spark job; the post-commit pass finds it
-  * one version behind and shingles only the file this batch appended.
-  * Any other state (a crash between the two commits, a compaction, a
-  * vacuumed manifest, an external append) falls back to the full doc_id
-  * anti-join of accepted against the index.
+  * Catch-up watermark: every index commit the catch-up makes carries the
+  * txn `catchup-<accepted version>` — "the index holds exactly the
+  * accepted docs of that version" — through the manifest high-water
+  * mechanism; with nothing to index it commits the marker alone. The
+  * marker counts only while it sits in the index's CURRENT manifest,
+  * i.e. no other commit touched the index since. Then:
+  *   - marker = accepted's current version: nothing to do, after one
+  *     manifest read and no Spark job (the pre-probe pass in steady
+  *     state, and every replay);
+  *   - marker = an older version m whose file set the current one still
+  *     contains (only appends since): shingle just the files added after
+  *     m (the post-commit pass: this batch's survivors);
+  *   - anything else — no marker, an index rewritten or appended by
+  *     someone else, accepted compacted, merged or vacuumed past m: the
+  *     full doc_id anti-join of accepted against the index. A crash
+  *     between the accepted commit and the index append leaves the
+  *     marker one version behind, which the added-files case heals.
+  *
+  * In-batch duplicates: exact text dups inside one micro-batch collapse
+  * to the lowest doc_id before gate 1 (a batch must not admit two copies
+  * just because neither is accepted yet). Near text dups WITHIN one
+  * batch are not removed (that is the batch-global
+  * [[graft.operators.Dedup.dropNearDuplicates]]' job); near-parallel
+  * vectors within one batch are, by gate 2.
   *
   * Replay: the txn check short-circuits before any probe work; the only
   * thing a replayed batch may still owe is the index catch-up (free when
@@ -85,7 +106,7 @@ object GatedIngest {
     ManifestTable.create(textIndexDir)
     ManifestTable.create(centroidDir)
     if (ManifestTable.hasCommittedTxn(acceptedDir, s"$streamId-$batchId")) {
-      StreamingDedup.catchUpIndex(spark, acceptedDir, textIndexDir)
+      catchUpIndex(spark, acceptedDir, textIndexDir)
       return // replayed micro-batch: nothing owed but the catch-up
     }
     // one materialization of the micro-batch: the emptiness probe fills
@@ -94,6 +115,7 @@ object GatedIngest {
     val batchP = batch.persist()
     // set as each stage materializes; released in the finally
     var inBatch: DataFrame = null
+    var pinned: Option[DataFrame] = None
     var assigned: DataFrame = null
     try {
       if (batchP.isEmpty) return
@@ -101,11 +123,13 @@ object GatedIngest {
       // heal and both gates; heal the text index BEFORE probing (see the
       // crash-window argument)
       val (acceptedV, accepted) = ManifestTable.readIfAny(spark, acceptedDir)
-      StreamingDedup.catchUp(spark, acceptedDir, acceptedV, accepted, textIndexDir)
-      inBatch = StreamingDedup.collapseExact(batchP).persist()
+      catchUp(spark, acceptedDir, acceptedV, accepted, textIndexDir)
+      inBatch = collapseExact(batchP).persist()
       // ---- gate 1: exact + near text dedup against the accepted corpus
-      val textSurvivors = StreamingDedup.textGate(accepted, textIndexDir,
-        inBatch, textThreshold)
+      val textSurvivors = textGate(accepted, textIndexDir, inBatch,
+        textThreshold)
+      // a probe of accepted returns a localCheckpoint
+      if (accepted.isDefined) pinned = Some(textSurvivors)
       // ---- gate 2: semantic dedup in frozen-codebook cells
       val centroids = codebook(centroidDir, accepted.isEmpty, acceptedDir,
         inBatch, k)
@@ -135,11 +159,85 @@ object GatedIngest {
         col("text"), col("embedding"), col("cid"))
       ManifestTable.appendWithRetry(spark, acceptedDir, finalRows,
         txn = Some(s"$streamId-$batchId"))
-      StreamingDedup.catchUpIndex(spark, acceptedDir, textIndexDir)
+      catchUpIndex(spark, acceptedDir, textIndexDir)
     } finally {
       if (assigned != null) assigned.unpersist(false)
+      // RDD-level: a localCheckpoint lives outside the CacheManager
+      pinned.flatMap(ColumnBridge.persistedRdd).foreach(_.unpersist(false))
       if (inBatch != null) inBatch.unpersist(false)
       batchP.unpersist(false)
+    }
+  }
+
+  /** In-batch exact text collapse to the lowest doc_id. */
+  private def collapseExact(batch: DataFrame): DataFrame =
+    batch
+      .withColumn("__rk", row_number().over(
+        Window.partitionBy(col("text")).orderBy(col("doc_id"))))
+      .filter(col("__rk") === 1).drop("__rk")
+
+  /** Exact + near text dedup of `inBatch` against the corpus (None when
+    * empty): probes the persisted shingle index at `indexDir`, or — index
+    * lost or never built — builds against the corpus in-line. */
+  private def textGate(corpus: Option[DataFrame], indexDir: String,
+      inBatch: DataFrame, threshold: Double): DataFrame =
+    corpus.fold(inBatch) { c =>
+      ManifestTable.readIfAny(inBatch.sparkSession, indexDir)._2 match {
+        case Some(idx) =>
+          Dedup.dropIncomingDuplicatesIndexed(idx, c, inBatch, threshold)
+        case None => Dedup.dropIncomingDuplicates(c, inBatch, threshold)
+      }
+    }
+
+  /** Txn stream id of the catch-up's index commits; the batch id is the
+    * corpus version the commit brought the index up to. */
+  private val CatchUpId = "catchup"
+
+  /** Append [[graft.operators.Dedup.shingleArrays]] rows for every corpus
+    * doc missing from the index. Idempotent and self-healing: safe after
+    * any crash point. With a current watermark (see the object doc) it
+    * reads one manifest and runs no Spark job. */
+  def catchUpIndex(spark: SparkSession, corpusDir: String,
+      indexDir: String): Unit = {
+    val v = ManifestTable.currentVersion(corpusDir)
+    catchUp(spark, corpusDir, v, ManifestTable.readVersionIfAny(spark, corpusDir, v),
+      indexDir)
+  }
+
+  /** [[catchUpIndex]] against corpus version `v` and its rows (None when
+    * empty), which only the full anti-join path resolves and scans. */
+  private def catchUp(spark: SparkSession, corpusDir: String,
+      v: Long, corpus: => Option[DataFrame], indexDir: String): Unit = {
+    val marker = ManifestTable
+      .txnOf(indexDir, ManifestTable.currentVersion(indexDir))
+      .filter(_.startsWith(s"$CatchUpId-"))
+      .flatMap(_.stripPrefix(s"$CatchUpId-").toLongOption)
+    if (marker.contains(v)) return
+    // the index holds exactly corpus@m: the missing docs are the rows of
+    // the files added since m
+    val added = marker.filter(_ < v)
+      .flatMap(ManifestTable.filesAddedSince(corpusDir, _, v))
+    val rows: Option[DataFrame] = added match {
+      case Some(fs) =>
+        if (ManifestTable.rowCount(fs) == 0) None
+        else Some(Dedup.shingleArrays(ManifestTable.readFiles(spark, corpusDir, v, fs)))
+      case None => corpus match {
+        case None => return // empty corpus: nothing to index
+        case Some(c) =>
+          val missing = ManifestTable.readIfAny(spark, indexDir)._2.fold(c)(idx =>
+            c.join(idx.select(col("doc_id")), Seq("doc_id"), "left_anti"))
+          // docs under 3 tokens have no trigram shingles (shingleArrays
+          // drops them); they stay "missing" harmlessly
+          Some(Dedup.shingleArrays(missing)).filterNot(_.isEmpty)
+      }
+    }
+    // a txn the high water already covers (an index rewrite carried it
+    // forward) cannot be recorded again: commit unmarked, and the next
+    // corpus version restores the marker
+    val txn = Some(s"$CatchUpId-$v").filterNot(ManifestTable.hasCommittedTxn(indexDir, _))
+    rows match {
+      case Some(r) => ManifestTable.appendWithRetry(spark, indexDir, r, txn = txn)
+      case None => txn.foreach(ManifestTable.markTxn(indexDir, _))
     }
   }
 

@@ -9,8 +9,8 @@ import graft.sources.ManifestTable
 /** INCREMENTAL IVF INDEX APPEND — the maintenance path that lets ANN
   * serving (q138/q156 shape) reflect a GROWING corpus without
   * retraining: new vectors are assigned to their cell by a MAP-ONLY
-  * probe of the frozen codebook (the [[SemanticStreamingDedup]] batch
-  * assignment, broadcast state, no shuffle) and appended to the
+  * probe of the frozen codebook (the assignment of [[GatedIngest]]'s
+  * semantic gate, broadcast state, no shuffle) and appended to the
   * persisted member table (vec_id, embedding, cid) as ONE txn-marked
   * manifest snapshot — a replayed micro-batch is a no-op, so the index
   * is exactly-once. Because assignment against a FIXED codebook is a

@@ -26,14 +26,6 @@ object ColumnBridge {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 
-  /** Rewrap a (typically checkpointed) DataFrame's physical RDD as a
-    * FRESH LogicalRDD with NO inherited statistics. `localCheckpoint`
-    * preserves the origin plan's stats estimate — inside an iterative
-    * loop each round's joins then compound the carried estimate
-    * (sizeInBytes digits GROW ~3x per round; by round ~15 Catalyst's
-    * join-size BigInt products have millions of digits and planning
-    * grinds to a halt in BigInteger.multiply). Resetting to the default
-    * size estimate keeps planning O(1) per round. */
   /** The persisted RDD backing a localCheckpoint'd DataFrame — lets
     * iterative loops unpersist the PREVIOUS generation's blocks
     * explicitly instead of waiting for GC + ContextCleaner. */
@@ -43,6 +35,14 @@ object ColumnBridge {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }
 
+  /** Rewrap a (typically checkpointed) DataFrame's physical RDD as a
+    * FRESH LogicalRDD with NO inherited statistics. `localCheckpoint`
+    * preserves the origin plan's stats estimate — inside an iterative
+    * loop each round's joins then compound the carried estimate
+    * (sizeInBytes digits GROW ~3x per round; by round ~15 Catalyst's
+    * join-size BigInt products have millions of digits and planning
+    * grinds to a halt in BigInteger.multiply). Resetting to the default
+    * size estimate keeps planning O(1) per round. */
   def resetStats(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val spark = df.sparkSession

@@ -1,12 +1,33 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
+
+import scala.collection.mutable
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one per JVM — suites reuse it
-  * through getOrCreate). */
-trait SparkSpec extends AnyFunSuite {
+  * through getOrCreate), and per-suite scratch directories. */
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  private val scratch = mutable.Buffer[File]()
+
+  /** A fresh directory in the system temp dir, deleted with all it holds
+    * after the suite's last test. */
+  protected def scratchDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix).toFile
+    scratch.synchronized(scratch += d)
+    d.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try super.afterAll()
+    finally scratch.synchronized(scratch.foreach(FileUtils.deleteQuietly))
 }
 
 object SparkSpec {

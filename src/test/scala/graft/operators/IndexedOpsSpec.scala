@@ -33,7 +33,7 @@ class IndexedOpsSpec extends SparkSpec {
   test("IndexStore builds once, reuses while fresh, rebuilds on " +
       "fingerprint change, and appends incrementally") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("idx").toString + "/t"
+    val dir = scratchDir("idx") + "/t"
     var builds = 0
     def ensure(fp: String): DataFrame =
       IndexStore.ensure(spark, dir, fp) {
@@ -53,7 +53,7 @@ class IndexedOpsSpec extends SparkSpec {
   test("layout stamp: an old-layout dir rebuilds under ensure and " +
       "fail-fasts under append with a clear error") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("layoutidx").toString + "/t"
+    val dir = scratchDir("layoutidx") + "/t"
     var builds = 0
     def ensure(): DataFrame = IndexStore.ensure(spark, dir, "fp") {
       builds += 1
@@ -94,7 +94,7 @@ class IndexedOpsSpec extends SparkSpec {
   test("ensure handles an empty build: schema-bearing 0-row index, " +
       "readable, and a fingerprint change still rebuilds") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("emptyidx").toString + "/t"
+    val dir = scratchDir("emptyidx") + "/t"
     val empty = IndexStore.ensure(spark, dir, "fp") {
       Seq.empty[(Long, String)].toDF("id", "v")
     }
@@ -112,7 +112,7 @@ class IndexedOpsSpec extends SparkSpec {
 
   test("tableFingerprint invalidates exactly when the source table commits") {
     import spark.implicits._
-    val base = Files.createTempDirectory("tfp").toString
+    val base = scratchDir("tfp")
     val (corpusDir, idxDir) = (s"$base/corpus", s"$base/idx")
     graft.sources.ManifestTable.create(corpusDir)
     graft.sources.ManifestTable.appendWithRetry(spark, corpusDir,
@@ -131,7 +131,7 @@ class IndexedOpsSpec extends SparkSpec {
   }
 
   test("sourceFingerprint tracks source files and derivation tags") {
-    val d = Files.createTempDirectory("fpsrc").toString
+    val d = scratchDir("fpsrc")
     Files.write(java.nio.file.Paths.get(d, "part-0.parquet"), Array[Byte](1, 2))
     val f1 = IndexStore.sourceFingerprint(d, "tag=a")
     assert(f1 == IndexStore.sourceFingerprint(d, "tag=a")) // deterministic
@@ -155,7 +155,7 @@ class IndexedOpsSpec extends SparkSpec {
     val docs = Par.fanOut(graft.Tables.documents(spark, sf))
     val existing = docs.filter($"doc_id" % 5 =!= 0)
     val incoming = docs.filter($"doc_id" % 5 === 0)
-    val dir = Files.createTempDirectory("shidx").toString + "/shingles"
+    val dir = scratchDir("shidx") + "/shingles"
     val idx = IndexStore.ensure(spark, dir, "spec") {
       Dedup.shingleArrays(existing)
     }
@@ -182,7 +182,7 @@ class IndexedOpsSpec extends SparkSpec {
     import spark.implicits._
     // q110's split, with the batch and the corpus in files of their own
     // so a scan tells which side it reads
-    val tmp = Files.createTempDirectory("shprobe").toString
+    val tmp = scratchDir("shprobe")
     val docs = graft.Tables.documents(spark,
       s"${new java.io.File(sf).getParent}/sf0.01")
     docs.filter($"doc_id" % 5 === 0).write.parquet(s"$tmp/batch")
@@ -229,7 +229,7 @@ class IndexedOpsSpec extends SparkSpec {
   test("incremental dedup maintenance loop: probe, commit survivors, " +
       "append their shingles, next batch probes the grown index") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("shloop").toString + "/shingles"
+    val dir = scratchDir("shloop") + "/shingles"
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "pack my box with five dozen liquor jugs"))
@@ -333,7 +333,7 @@ class IndexedOpsSpec extends SparkSpec {
   test("IVF probe path touches no corpus-wide centroid aggregation") {
     import spark.implicits._
     val emb = graft.Tables.embeddings(spark, sf)
-    val dir = Files.createTempDirectory("ivf").toString + "/cells"
+    val dir = scratchDir("ivf") + "/cells"
     val cells = IndexStore.ensure(spark, dir, "spec") {
       Similarity.ivfCells(emb)
     }
@@ -355,7 +355,7 @@ class IndexedOpsSpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf)
     val inline = Similarity.ivfPqTopK(emb, 0L, 5, 4, 4, 1, 2)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toList
-    val root = Files.createTempDirectory("ivfpq_idx_").toString
+    val root = scratchDir("ivfpq_idx_")
     val books = IndexStore.ensure(spark, s"$root/books", "spec") {
       Similarity.pqBooks(emb, 4, 4, 1)
     }
@@ -388,7 +388,7 @@ class IndexedOpsSpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf)
     val inlineOld = Similarity.kmeansCentroids(
       emb.filter(col("vec_id") % 2 === 0), 4, 2)
-    val root = Files.createTempDirectory("codebook_ver_").toString
+    val root = scratchDir("codebook_ver_")
     var trainings = 0
     def version(name: String, c: => Array[(Long, Array[Double])]) =
       IndexStore.ensure(spark, s"$root/$name", s"fp-$name") {

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -40,7 +38,7 @@ class LayoutSpec extends SparkSpec {
 
   test("z-ordered layout prunes a 2-D box predicate better than natural order") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("layout").toString
+    val tmp = scratchDir("layout")
     val li = graft.Tables.lineitem(spark, sf)
       .select($"l_orderkey", $"l_partkey", $"l_suppkey")
     val numFiles = 16
@@ -76,7 +74,7 @@ class LayoutSpec extends SparkSpec {
 
   test("hive-partitioned write prunes non-matching directories at plan time") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("part").toString
+    val tmp = scratchDir("part")
     graft.Tables.lineitem(spark, sf)
       .select($"l_orderkey", $"l_quantity", $"l_returnflag")
       .write.partitionBy("l_returnflag").mode("overwrite")

@@ -1,49 +1,10 @@
 package graft.operators
 
 import java.io.File
-import java.nio.file.Files
 
 import graft.SparkSpec
 
 class MaintenanceSpec extends SparkSpec {
-
-  test("compactParquet merges small files, preserves rows, swaps atomically") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("compact").toString
-    // simulate accreted micro-batch output: 8 single-row-ish files
-    (0 until 8).foreach { i =>
-      Seq((i.toLong, s"v$i")).toDF("id", "v")
-        .coalesce(1).write.mode("append").parquet(dir)
-    }
-    def parts(d: String) = new File(d).listFiles()
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-    assert(parts(dir).length >= 8)
-    val before = spark.read.parquet(dir).as[(Long, String)].collect().toSet
-
-    val stats = Maintenance.compactParquet(spark, dir,
-      targetFileBytes = Long.MaxValue) // everything into one file
-    assert(stats.filesBefore >= 8 && stats.filesAfter == 1)
-    assert(stats.rows == 8)
-    assert(parts(dir).length == 1)
-    assert(!new File(dir + "_compact_staging").exists())
-    // content identical after the rewrite
-    spark.catalog.refreshByPath(dir)
-    assert(spark.read.parquet(dir).as[(Long, String)].collect().toSet == before)
-  }
-
-  test("compactParquet targets multiple output files when bytes demand it") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("compact2").toString
-    spark.range(10000).selectExpr("id", "repeat('x', 100) AS pad")
-      .repartition(16).write.mode("overwrite").parquet(dir)
-    val totalBytes = new File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
-    val stats = Maintenance.compactParquet(spark, dir,
-      targetFileBytes = totalBytes / 3, shuffle = true)
-    assert(stats.filesAfter >= 3 && stats.filesAfter < 16, stats.toString)
-    spark.catalog.refreshByPath(dir)
-    assert(spark.read.parquet(dir).count() == 10000)
-  }
 
   test("ManifestTable.optimizeZorder: one snapshot swap rewrites to " +
       "Morton-clustered files; rows preserved; a box read prunes more " +
@@ -52,7 +13,7 @@ class MaintenanceSpec extends SparkSpec {
     import graft.sources.ManifestTable
     // 64×64 grid in ROW-MAJOR order: an x-box slices through every
     // row-order file, so pre-optimize pruning on x keeps ~all files
-    val dir = Files.createTempDirectory("zopt").toString + "/t"
+    val dir = scratchDir("zopt") + "/t"
     val grid = spark.range(64L * 64)
       .selectExpr("id", "id % 64 AS x", "id DIV 64 AS y")
     ManifestTable.create(dir, Seq("x", "y"))

@@ -2090,8 +2090,7 @@ class NorthStarSpec extends SparkSpec {
     import spark.implicits._
     val emb = graft.Tables.embeddings(spark, sf)
     val trained = Similarity.kmeansCentroids(emb, 4, 2)
-    val dir = java.nio.file.Files
-      .createTempDirectory("codebook_rt").toString + "/cb"
+    val dir = scratchDir("codebook_rt") + "/cb"
     Similarity.centroidsDF(spark, trained)
       .write.mode("overwrite").parquet(dir)
     val back = Similarity.centroidsOf(spark.read.parquet(dir))

@@ -46,7 +46,7 @@ class AsOfJoinNativeSpec extends SparkSpec {
     // across next() calls (columnar vectors are reused per batch; row
     // pipelines reuse one UnsafeRow buffer), which is why AsOfJoinExec
     // must copy the key it holds across rows.
-    val wh = java.nio.file.Files.createTempDirectory("asofstr").toString
+    val wh = scratchDir("asofstr")
     spark.range(200).select(
       concat(lit("key_"), format_string("%03d", expr("id div 2"))).as("key"),
       ($"id" % 2 * 100).as("ts"), $"id".as("tag"))
@@ -77,7 +77,7 @@ class AsOfJoinNativeSpec extends SparkSpec {
 
   test("bucketed-sorted children feed the native as-of join with NO exchange") {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("asofb").toString
+    val wh = scratchDir("asofb")
     val ev = graft.Tables.events(spark, sf).select($"user_id", $"ts", $"value")
     ev.write.bucketBy(4, "user_id").sortBy("user_id", "ts")
       .option("path", s"$wh/ev_b").mode("overwrite").saveAsTable("ev_b")

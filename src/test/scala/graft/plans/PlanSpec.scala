@@ -38,7 +38,7 @@ class PlanSpec extends SparkSpec {
 
   test("bucketed tables sort-merge join with no shuffle exchange") {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("buckets").toString
+    val wh = scratchDir("buckets")
     graft.Tables.lineitem(spark, sf)
       .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
       .option("path", s"$wh/li_b").mode("overwrite").saveAsTable("li_b")
@@ -67,7 +67,7 @@ class PlanSpec extends SparkSpec {
 
   test("partitioned write prunes partitions at the scan (PartitionFilters)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("parts").toString
+    val dir = scratchDir("parts")
     graft.Tables.orders(spark, sf)
       .withColumn("order_month",
         date_format($"o_orderdate", "yyyy-MM"))
@@ -127,6 +127,20 @@ class PlanSpec extends SparkSpec {
       (Similarity.dot($"v", $"v") - Similarity.dotHof($"v", $"v")).as("d"))
       .agg(max(abs($"d"))).as[Double].head()
     assert(diff == 0.0) // same fold order → identical doubles, not just close
+  }
+
+  test("codegen dot product is NULL where the fold is: a null element, " +
+      "a length mismatch") {
+    // range-based so constant folding leaves the expressions to run
+    val df = spark.range(1).select(
+      expr("array(cast(id AS double) + 1.0, CAST(NULL AS double))").as("nul"),
+      expr("array(cast(id AS double), 2.0, 3.0)").as("three"),
+      expr("array(cast(2.0 AS double), cast(3.0 AS double))").as("two"))
+    val row = df.select(
+      Similarity.dot(col("nul"), col("two")), Similarity.dotHof(col("nul"), col("two")),
+      Similarity.dot(col("three"), col("two")), Similarity.dotHof(col("three"), col("two")))
+      .collect().head
+    assert((0 until 4).forall(row.isNullAt), row)
   }
 
   /** Best-of-N wall time: a single-shot comparison is load-sensitive (a

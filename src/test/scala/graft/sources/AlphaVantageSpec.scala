@@ -67,7 +67,7 @@ class AlphaVantageSpec extends SparkSpec {
 
   test("warehouse append is idempotent across duplicate and overlapping deliveries") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("wh").toString + "/stock"
+    val path = scratchDir("wh") + "/stock"
     val wh = new ParquetWarehouse(spark, path)
 
     wh.append(AlphaVantage.ingest(spark, s"$fixtures/AAPL_d1.json").toDF())

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -29,7 +27,7 @@ class DerbyWarehouseSpec extends SparkSpec {
 
   test("JdbcWarehouse round-trips through embedded Derby: append, " +
       "idempotent re-append, readBack, describe (etl.py:110-158)") {
-    val dbDir = Files.createTempDirectory("derby_wh").toString
+    val dbDir = scratchDir("derby_wh")
     // create=true: in-process engine, no endpoint. Derby ignores the
     // user/password pair unless auth is configured — passing them still
     // exercises JdbcWarehouse's Properties plumbing.

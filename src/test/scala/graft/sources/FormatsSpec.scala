@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -29,7 +27,7 @@ class FormatsSpec extends SparkSpec {
     df.collect().map(_.toString).sorted.toSeq
 
   test("ORC round-trip preserves rows, schema, and timestamps") {
-    val tmp = Files.createTempDirectory("orc").toString
+    val tmp = scratchDir("orc")
     val src = sample
     src.write.mode("overwrite").orc(s"$tmp/li.orc")
     val back = spark.read.orc(s"$tmp/li.orc")
@@ -38,7 +36,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("ORC scan pushes filters and prunes columns like parquet") {
-    val tmp = Files.createTempDirectory("orc_scan").toString
+    val tmp = scratchDir("orc_scan")
     sample.write.mode("overwrite").orc(s"$tmp/li.orc")
     val plan = spark.read.orc(s"$tmp/li.orc")
       .filter(col("l_orderkey") === 42)
@@ -49,7 +47,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("CSV round-trip with explicit schema preserves values") {
-    val tmp = Files.createTempDirectory("csv").toString
+    val tmp = scratchDir("csv")
     val src = sample
     // microsecond format: the default DateTimeFormatter output drops
     // trailing zeros, so pin a lossless round-trip format on both sides
@@ -66,7 +64,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("JSON round-trip with explicit schema preserves values") {
-    val tmp = Files.createTempDirectory("json").toString
+    val tmp = scratchDir("json")
     val src = sample
     src.write.mode("overwrite").json(s"$tmp/li.json")
     val back = spark.read.schema(src.schema).json(s"$tmp/li.json")

@@ -11,7 +11,7 @@ class ManifestTableSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(): String = {
-    val dir = Files.createTempDirectory("manifest_table_").toString
+    val dir = scratchDir("manifest_table_")
     ManifestTable.create(dir)
     dir
   }
@@ -307,7 +307,7 @@ class ManifestTableSpec extends SparkSpec {
   }
 
   test("file stats prune reads by numeric and string range") {
-    val dir = Files.createTempDirectory("manifest_stats_").toString
+    val dir = scratchDir("manifest_stats_")
     ManifestTable.create(dir, statsColumns = Seq("id", "s"))
     assert(ManifestTable.statsColumns(dir) == Seq("id", "s"))
     // three appends with disjoint id ranges -> >= 3 files, tight bounds
@@ -343,7 +343,7 @@ class ManifestTableSpec extends SparkSpec {
   }
 
   test("stats survive carry-forward commits and compaction recomputes them") {
-    val dir = Files.createTempDirectory("manifest_stats_carry_").toString
+    val dir = scratchDir("manifest_stats_carry_")
     ManifestTable.create(dir, statsColumns = Seq("id"))
     var v = ManifestTable.append(spark, dir,
       (0L until 50L).map(i => (i, s"a$i")).toDF("id", "s").coalesce(1),
@@ -375,7 +375,7 @@ class ManifestTableSpec extends SparkSpec {
   }
 
   test("merge prescreens files by key-range stats: out-of-range never scanned") {
-    val dir = Files.createTempDirectory("manifest_prescreen_").toString
+    val dir = scratchDir("manifest_prescreen_")
     ManifestTable.create(dir, statsColumns = Seq("id"))
     var v = ManifestTable.append(spark, dir,
       (0L until 50L).map(i => (i, s"a$i")).toDF("id", "s").coalesce(1),
@@ -410,7 +410,7 @@ class ManifestTableSpec extends SparkSpec {
   }
 
   test("deleteWhereBetween prescreens by stats; retention delete drops whole file") {
-    val dir = Files.createTempDirectory("manifest_rangedel_").toString
+    val dir = scratchDir("manifest_rangedel_")
     ManifestTable.create(dir, statsColumns = Seq("id"))
     var v = 0L
     Seq(0L until 100L, 100L until 200L, 200L until 300L).foreach { r =>
@@ -489,7 +489,7 @@ class ManifestTableSpec extends SparkSpec {
     // The state-maintainer protocol (ADVICE r11): a writer landing between
     // the state read and the commit must be re-read-merged, not dropped
     // (blind overwrite retry) and not a micro-batch failure (no retry).
-    val dir = Files.createTempDirectory("state_commit_").toString
+    val dir = scratchDir("state_commit_")
     def merge(a: org.apache.spark.sql.DataFrame,
         b: org.apache.spark.sql.DataFrame) =
       a.unionByName(b).groupBy("k")

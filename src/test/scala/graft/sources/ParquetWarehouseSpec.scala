@@ -21,7 +21,7 @@ class ParquetWarehouseSpec extends SparkSpec {
   }
 
   private def table(): String =
-    Files.createTempDirectory("wh").toString + "/stock"
+    scratchDir("wh") + "/stock"
 
   private def dates(paths: String*): Seq[String] =
     spark.read.parquet(paths: _*).select("date").collect()
@@ -49,7 +49,7 @@ class ParquetWarehouseSpec extends SparkSpec {
 
   /** `batch`'s part files in warehouse form, written aside. */
   private def partFiles(batch: DataFrame): Seq[File] = {
-    val aside = Files.createTempDirectory("whaside").toString + "/t"
+    val aside = scratchDir("whaside") + "/t"
     Warehouse.toWarehouseSchema(batch).coalesce(1).write.parquet(aside)
     new File(aside).listFiles().filter(_.getName.startsWith("part-")).toSeq
   }

@@ -8,7 +8,7 @@ import graft.SparkSpec
 class SourcesSpec extends SparkSpec {
 
   test("RawCache fetches once, replays verbatim, skips on fetcher failure") {
-    val dir = Files.createTempDirectory("cache").toString
+    val dir = scratchDir("cache")
     val cache = new RawCache(dir)
     var fetches = 0
     val fetch = (s: String) => { fetches += 1; Some(s"""{"sym": "$s"}""") }
@@ -26,7 +26,7 @@ class SourcesSpec extends SparkSpec {
 
   test("RawCache: a write a crash left behind is invisible, and the next " +
       "run lands the whole payload") {
-    val dir = Files.createTempDirectory("cachecrash").toString
+    val dir = scratchDir("cachecrash")
     val cache = new RawCache(dir)
     cache.getOrFetch("GOOG", "2025-10-05")(s =>
       Some(FakeAlphaVantageServer.fetch(s, "2025-10-05")))
@@ -52,7 +52,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("RunLog appends one line per run (etl.py:222-223)") {
-    val path = Files.createTempDirectory("log").toString + "/etl_log.txt"
+    val path = scratchDir("log") + "/etl_log.txt"
     val log = new RunLog(path)
     log.append("ETL run at 2026-08-12 10:00:00")
     log.append("ETL run at 2026-08-13 10:00:00")

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -29,7 +27,7 @@ class DauStateStreamSpec extends SparkSpec {
       "a replayed batch is a no-op") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("daustate").toString + "/t"
+    val dir = scratchDir("daustate") + "/t"
     val mem = MemoryStream[(Long, java.sql.Timestamp)]
     val q = mem.toDF().toDF("user_id", "ts")
       .writeStream
@@ -67,7 +65,7 @@ class DauStateStreamSpec extends SparkSpec {
   test("an EMPTY micro-batch is a no-op: no snapshot committed, state " +
       "unchanged, later batches still read it (ADVICE r8)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("daustate_empty").toString + "/t"
+    val dir = scratchDir("daustate_empty") + "/t"
     val empty = Seq.empty[(Long, java.sql.Timestamp)].toDF("user_id", "ts")
     // empty FIRST batch: must not create an empty snapshot that would
     // wedge every later read

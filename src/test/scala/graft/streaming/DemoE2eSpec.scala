@@ -23,7 +23,7 @@ class DemoE2eSpec extends SparkSpec {
       "no-ops on all five states; a new day grows each exactly once " +
       "under the frozen codebook") {
     import spark.implicits._
-    val base = Files.createTempDirectory("demoe2e").toString
+    val base = scratchDir("demoe2e")
 
     def ver(d: String): Long = ManifestTable.currentVersion(s"$base/$d")
     def accepted(): Set[Long] =

@@ -23,7 +23,7 @@ class DemoMonitorsSpec extends SparkSpec {
       "no-ops; a new day grows each state once and the rolling " +
       "readout spans the window") {
     import spark.implicits._
-    val base = Files.createTempDirectory("demomon").toString
+    val base = scratchDir("demomon")
 
     val stateDirs = Seq("accepted", "quantile_state", "exp_state")
     def versions(): Seq[Long] =

@@ -20,7 +20,7 @@ class DemoStreamingSpec extends SparkSpec {
   test("one scheduled run admits the day once; a re-run and a " +
       "re-dropped byte-identical payload are no-ops at every layer") {
     import spark.implicits._
-    val base = Files.createTempDirectory("demostream").toString
+    val base = scratchDir("demostream")
     def accepted(): Set[Long] =
       ManifestTable.read(spark, s"$base/accepted")._2
         .select($"doc_id").as[Long].collect().toSet

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -22,7 +20,7 @@ class EdgeStateStreamSpec extends SparkSpec {
       "refined HITS from the state == from the raw log") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("edgestate").toString + "/t"
+    val dir = scratchDir("edgestate") + "/t"
     val mem = MemoryStream[(Long, Long)]
     val q = mem.toDF().toDF("u", "s")
       .writeStream

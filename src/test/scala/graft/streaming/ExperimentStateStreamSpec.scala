@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -25,7 +23,7 @@ class ExperimentStateStreamSpec extends SparkSpec {
       "empty batches are no-ops") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("expstate").toString + "/t"
+    val dir = scratchDir("expstate") + "/t"
     val mem = MemoryStream[(Long, String, Double)]
     val q = mem.toDF().toDF("user_id", "event_type", "value")
       .writeStream

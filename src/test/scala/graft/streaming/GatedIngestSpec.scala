@@ -21,7 +21,7 @@ import graft.sources.ManifestTable
 class GatedIngestSpec extends SparkSpec {
 
   private def dirs(): (String, String, String) = {
-    val base = Files.createTempDirectory("gated").toString
+    val base = scratchDir("gated")
     (s"$base/accepted", s"$base/txtidx", s"$base/centroids")
   }
 
@@ -58,6 +58,8 @@ class GatedIngestSpec extends SparkSpec {
     //   11: near text dup of 2         -> text gate (near, J >= 0.5)
     //   12: novel text, cos vs 2 ~ 1.0 -> semantic gate
     //   13: novel text + novel vector  -> admitted
+    //   14: novel text, vector parallel to 13's (same batch)
+    //                                  -> semantic gate (in-batch)
     sink(Seq(
       (10L, "the quick brown fox jumps over the lazy dog",
         Seq(0.0, 0.0, 1.0, 0.0)),
@@ -66,9 +68,13 @@ class GatedIngestSpec extends SparkSpec {
       (12L, "completely different words about completely different things",
         Seq(0.01, 0.999, 0.0, 0.0)),
       (13L, "sphinx of black quartz judge my vow today now",
-        Seq(0.5, 0.5, 0.7, 0.0)))
+        Seq(0.5, 0.5, 0.7, 0.0)),
+      (14L, "how vexingly quick daft zebras jump around today",
+        Seq(1.0, 1.0, 1.4, 0.0)))
       .toDF("doc_id", "text", "embedding"), 1L)
     assert(acceptedIds(accepted) == Set(1L, 2L, 13L))
+    // the codebook trained on batch 0 stays frozen at k rows
+    assert(ManifestTable.read(spark, centroids)._2.count() == 2)
 
     // the accepted table carries the frozen-cell assignment; the text
     // index tracks exactly the accepted docs
@@ -103,7 +109,7 @@ class GatedIngestSpec extends SparkSpec {
       "and a restart replay (the reference's 10-05 == 10-06 situation)") {
     import spark.implicits._
     val (accepted, txtIdx, centroids) = dirs()
-    val base = Files.createTempDirectory("gatede2e").toString
+    val base = scratchDir("gatede2e")
     val sinkA = GatedIngest.sink(accepted, txtIdx, centroids,
       k = 2, textThreshold = 0.8, cosThreshold = 0.999, "jobA") _
 
@@ -165,7 +171,7 @@ class GatedIngestSpec extends SparkSpec {
     // simulate losing the centroid table: point the sink at a FRESH
     // (empty) centroid dir while accepted still has rows — gate 2's
     // stored cids would be incomparable with a retrained codebook
-    val lostCentroids = Files.createTempDirectory("lostc").toString + "/c"
+    val lostCentroids = scratchDir("lostc") + "/c"
     val sinkLost = GatedIngest.sink(accepted, txtIdx, lostCentroids,
       k = 2, textThreshold = 0.5, cosThreshold = 0.99, "speclost2") _
     val ex = intercept[IllegalArgumentException] {
@@ -211,7 +217,7 @@ class GatedIngestSpec extends SparkSpec {
       .dropDuplicates("doc_id")
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val heal = jobs(StreamingDedup.catchUpIndex(spark, accepted, txtIdx))
+        val heal = jobs(GatedIngest.catchUpIndex(spark, accepted, txtIdx))
         batchJobs(id) = (heal, jobs(sink(batch, id)))
       }
       .start()
@@ -269,10 +275,10 @@ class GatedIngestSpec extends SparkSpec {
     val before = index
     ManifestTable.compact(spark, accepted, nFiles = 1)
     // the compaction rewrote accepted's files: no added-files shortcut
-    assert(jobs(StreamingDedup.catchUpIndex(spark, accepted, txtIdx)) > 0)
+    assert(jobs(GatedIngest.catchUpIndex(spark, accepted, txtIdx)) > 0)
     assert(index == before)
     // ... and its marker commit makes the next catch-up free again
-    assert(jobs(StreamingDedup.catchUpIndex(spark, accepted, txtIdx)) == 0)
+    assert(jobs(GatedIngest.catchUpIndex(spark, accepted, txtIdx)) == 0)
     assert(index == before)
   }
 
@@ -288,5 +294,30 @@ class GatedIngestSpec extends SparkSpec {
     assert(jobs(sink(b0, 0L)) == 0)
     assert(ManifestTable.currentVersion(accepted) == av)
     assert(ManifestTable.currentVersion(txtIdx) == iv)
+    // a replay after the text index was wiped still owes, and runs, the
+    // catch-up; accepted stays untouched
+    ManifestTable.overwrite(spark, txtIdx,
+      ManifestTable.read(spark, txtIdx)._2.limit(0), iv)
+    assert(ManifestTable.readIfAny(spark, txtIdx)._2.forall(_.isEmpty))
+    sink(b0, 0L)
+    assert(ManifestTable.currentVersion(accepted) == av)
+    assert(acceptedIds(accepted) == Set(1L, 2L))
+    assert(indexIds(txtIdx) == Set(1L, 2L))
+  }
+
+  test("a data micro-batch leaves none of its RDDs persisted") {
+    val (accepted, txtIdx, centroids) = dirs()
+    val sink = GatedIngest.sink(accepted, txtIdx, centroids,
+      k = 2, textThreshold = 0.5, cosThreshold = 0.99, "pins") _
+    sink(docs((1L, fox, Seq(1.0, 0.0, 0.0, 0.0)),
+      (2L, box, Seq(0.0, 1.0, 0.0, 0.0))), 0L)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // accepted is non-empty, so gate 1 probes it
+    sink(docs((3L, sphinx, Seq(0.0, 0.0, 1.0, 0.0)),
+      (10L, fox, Seq(0.0, 0.0, 0.0, 1.0))), 1L)
+    assert(acceptedIds(accepted) == Set(1L, 2L, 3L))
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(left.isEmpty, left.values.mkString("; "))
   }
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -30,7 +28,7 @@ class IvfIndexStreamSpec extends SparkSpec {
       "batches are no-ops") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("ivfidx").toString
+    val root = scratchDir("ivfidx")
     val centDir = s"$root/centroids"
     val memDir = s"$root/members"
     mkCodebook(centDir)
@@ -71,7 +69,7 @@ class IvfIndexStreamSpec extends SparkSpec {
       "the raw corpus (serve identity at the ranking-metric level)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("ivfidx3").toString
+    val root = scratchDir("ivfidx3")
     val centDir = s"$root/centroids"
     val memDir = s"$root/members"
     mkCodebook(centDir)
@@ -108,7 +106,7 @@ class IvfIndexStreamSpec extends SparkSpec {
       "is a no-op, the pre-swap snapshot still serves") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("ivfreb").toString
+    val root = scratchDir("ivfreb")
     val centDir = s"$root/centroids"
     val memDir = s"$root/members"
     mkCodebook(centDir) // axis cells the corpus below has drifted from
@@ -172,7 +170,7 @@ class IvfIndexStreamSpec extends SparkSpec {
 
   test("fail-fasts on an empty codebook (train offline first)") {
     import spark.implicits._
-    val root = Files.createTempDirectory("ivfidx2").toString
+    val root = scratchDir("ivfidx2")
     ManifestTable.create(s"$root/centroids")
     val e = intercept[IllegalArgumentException] {
       IvfIndexStream.sink(s"$root/members", s"$root/centroids", "ivf")(

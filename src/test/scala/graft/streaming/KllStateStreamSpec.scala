@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -21,7 +19,7 @@ class KllStateStreamSpec extends SparkSpec {
       "below capacity); replay + empty batches are no-ops") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("kllstate").toString + "/t"
+    val dir = scratchDir("kllstate") + "/t"
     val mem = MemoryStream[(Long, Long)]
     val q = mem.toDF().toDF("day", "v")
       .withColumn("ts", timestamp_seconds($"day" * 86400L))
@@ -63,7 +61,7 @@ class KllStateStreamSpec extends SparkSpec {
       "serve-from-maintained pattern on the quantile axis)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("kllmon").toString + "/t"
+    val dir = scratchDir("kllmon") + "/t"
     val mem = MemoryStream[(Long, Long)]
     val q = mem.toDF().toDF("day", "v")
       .withColumn("ts", timestamp_seconds($"day" * 86400L))
@@ -104,7 +102,7 @@ class KllStateStreamSpec extends SparkSpec {
       "rebuild; merge(split) == rebuild(full)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("kllkey").toString + "/t"
+    val dir = scratchDir("kllkey") + "/t"
     val mem = MemoryStream[(String, Long, Long)]
     val q = mem.toDF().toDF("et", "day", "v")
       .withColumn("ts", timestamp_seconds($"day" * 86400L))

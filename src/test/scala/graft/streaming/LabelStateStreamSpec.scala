@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -29,7 +27,7 @@ class LabelStateStreamSpec extends SparkSpec {
       " replay + empty batches are no-ops") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("labelstate").toString + "/t"
+    val dir = scratchDir("labelstate") + "/t"
     val mem = MemoryStream[(Int, Int, Int)]
     val q = mem.toDF().toDF("a", "b", "c")
       .writeStream

@@ -14,7 +14,7 @@ class StreamingSpec extends SparkSpec {
   private val fixtures = getClass.getResource("/raw_data").getPath
 
   test("file-stream ingest drains the drop dir exactly once per run") {
-    val tmp = Files.createTempDirectory("stream").toString
+    val tmp = scratchDir("stream")
     val whPath = s"$tmp/warehouse"
     val wh = new ParquetWarehouse(spark, whPath)
 
@@ -42,7 +42,7 @@ class StreamingSpec extends SparkSpec {
 
   test("maxFilesPerTrigger throttles the file stream but drains fully (T4)") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("throttle").toString
+    val tmp = scratchDir("throttle")
     val drop = new java.io.File(s"$tmp/drop"); drop.mkdirs()
     Seq("AAPL_d1", "GOOG_d1", "MSFT_d1").foreach { f =>
       Files.copy(java.nio.file.Paths.get(s"$fixtures/$f.json"),
@@ -226,9 +226,9 @@ class StreamingSpec extends SparkSpec {
     import graft.sources.ManifestTable
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("manifest_stream_").toString
+    val dir = scratchDir("manifest_stream_")
     ManifestTable.create(dir)
-    val ckpt = Files.createTempDirectory("manifest_ckpt_").toString
+    val ckpt = scratchDir("manifest_ckpt_")
     def start(mem: MemoryStream[(Long, Double)]) =
       mem.toDF().toDF("id", "v").writeStream
         .option("checkpointLocation", ckpt)
