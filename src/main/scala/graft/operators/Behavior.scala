@@ -897,7 +897,7 @@ object Behavior {
       .filter(col("from_type").isNotNull)
       .groupBy(col("from_type"), col("to_type"))
       .agg(count(lit(1)).as("n"))
-    val pairs = if (lazyPlan) pairs0 else pairs0.localCheckpoint(true)
+    val pairs = if (lazyPlan) pairs0 else Pin(pairs0)
     val fromTotals = pairs.groupBy(col("from_type"))
       .agg(sum(col("n")).as("n_from"))
     pairs.join(fromTotals, "from_type")

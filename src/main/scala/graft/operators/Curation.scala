@@ -99,7 +99,7 @@ object Curation {
     * per read — value-identical by determinism. */
   def withGlobalCumsum(df: DataFrame, order: Seq[Column],
       value: Column): DataFrame =
-    cumsumPlan(ranked(df, order, value).localCheckpoint(true))
+    cumsumPlan(Pin(ranked(df, order, value)))
 
   /** LAZY plan-only variant (no persist / checkpoint) for plan inspection —
     * correctness of bucket offsets under re-execution is only guaranteed by
@@ -127,7 +127,7 @@ object Curation {
     * eager checkpoint of the level-one frame, deterministic tail. */
   def withGlobalCumsums(df: DataFrame, order: Seq[Column],
       values: Seq[(String, Column)]): DataFrame =
-    cumsumPlanMulti(rankedMulti(df, order, values).localCheckpoint(true),
+    cumsumPlanMulti(Pin(rankedMulti(df, order, values)),
       values.map(_._1))
 
   /** LAZY plan-only variant of [[withGlobalCumsums]] (no persist /
@@ -213,7 +213,7 @@ object Curation {
     * [[withGlobalCumsum]] (round 16). */
   def withGlobalCummax(df: DataFrame, order: Seq[Column],
       value: Column): DataFrame =
-    cummaxPlan(rankedMax(df, order, value).localCheckpoint(true))
+    cummaxPlan(Pin(rankedMax(df, order, value)))
 
   private def rankedMax(df: DataFrame, order: Seq[Column],
       value: Column): DataFrame = {

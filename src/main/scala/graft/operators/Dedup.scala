@@ -178,16 +178,11 @@ object Dedup {
     verifyPairs(candidates, da, threshold)
   }
 
-  /** Materialize `result` (eager localCheckpoint — small: only qualifying
-    * pairs survive the threshold), then drop the shingle cache. Without
-    * this, every call leaks its persisted shingles for the session
-    * lifetime (bench loops, corpusFunnel). The checkpoint blocks
-    * themselves are reclaimed by ContextCleaner once the caller drops the
-    * returned DataFrame. On a multi-node cluster prefer writing candidates
-    * to a temp table over localCheckpoint (which does not survive executor
-    * loss); in this engine the pairs result is small enough either way. */
+  /** [[Pin]] `result` (small: only qualifying pairs survive the
+    * threshold), then drop the caches it was computed from, which would
+    * otherwise stay persisted for the session. */
   private def releaseAfter(cached: DataFrame*)(result: DataFrame): DataFrame = {
-    val out = result.localCheckpoint(true)
+    val out = Pin(result)
     cached.foreach(_.unpersist(false))
     out
   }
@@ -487,7 +482,8 @@ object Dedup {
     * million-node chain settles in ~20 rounds. If `maxIter` rounds pass
     * without a fixpoint this THROWS rather than silently returning
     * half-propagated labels. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame =
+      Pin.scope {
     // pinned hash-partitioned on dst: every round's neighbor join keys on
     // dst, so the edge side reads the cache exchange-free (the
     // [[Graph.pageRankMicro]] pin — before this, each round re-shuffled
@@ -497,27 +493,15 @@ object Dedup {
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .distinct().repartition(col("dst")).persist()
-    import org.apache.spark.sql.graft.ColumnBridge
-    // resetStats: localCheckpoint preserves the origin plan's stats
-    // estimate, which the next round's joins would compound (~3x digits
-    // per round → BigInt planning blowup); see ColumnBridge.resetStats
-    var prevRdd: Option[org.apache.spark.rdd.RDD[_]] = None
-    def materialize(df: DataFrame): DataFrame = {
-      val ck = df.localCheckpoint(true)
-      // bound checkpoint storage to two generations: once the new round
-      // is materialized, the previous round's blocks are dead weight
-      prevRdd.foreach(_.unpersist(false))
-      prevRdd = ColumnBridge.persistedRdd(ck)
-      ColumnBridge.resetStats(ck)
-    }
+    val gen = Pin.loop()
     // WARM INIT: label₀ = min(self, min neighbor) — the same one-shuffle
     // aggregate the cold `select(src).distinct()` init paid (edges are
     // symmetric, so every node is a src and min(dst) is its min
     // neighbor), but it starts the propagation one hop ahead: a
     // two-node cluster converges in ONE round (the confirm round)
     // instead of two, and every deeper cluster saves that round too —
-    // one fewer edge join + hop join + materialize + count per CC call.
-    var labels = materialize(edges.groupBy(col("src"))
+    // one fewer edge join + hop join + pin + count per CC call.
+    var labels = gen(edges.groupBy(col("src"))
       .agg(min(col("dst")).as("mn"))
       .select(col("src").as("doc_id"),
         least(col("src"), col("mn")).as("component")))
@@ -549,7 +533,7 @@ object Dedup {
           (least(coalesce(col("nbr_min"), col("component")),
             coalesce(col("label_label"), col("component"))) < col("component"))
             .as("chg"))
-      val updatedM = materialize(updated)
+      val updatedM = gen(updated)
       changed = updatedM.filter(col("chg")).count()
       labels = updatedM.drop("chg")
       iter += 1
@@ -656,7 +640,7 @@ object Dedup {
     val survivors = incoming.join(
       exactLosers.union(nearLosers).distinct().hint("SHUFFLE_HASH"),
       Seq("doc_id"), "left_anti")
-    if (lazyPlan) survivors else survivors.localCheckpoint(true)
+    if (lazyPlan) survivors else Pin(survivors)
   }
 
   /** X2 SimHash near-dup candidates: 64-bit fingerprints, 4×16-bit bands
@@ -897,7 +881,8 @@ object Dedup {
     * construction: clusters are near-dup groups), so no single-reducer
     * hotspot. */
   def canonicalByQuality(docs: DataFrame, threshold: Double,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+      textCol: String = "text", idCol: String = "doc_id"): DataFrame =
+      Pin.scope {
     import org.apache.spark.sql.expressions.Window
     val comp = connectedComponents(jaccardPairs(docs, threshold))
     val toks = split(col(textCol), " ")

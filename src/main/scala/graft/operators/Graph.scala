@@ -40,11 +40,11 @@ object Graph {
     * Input: a directed edge table; duplicate edges are collapsed.
     * Output: (node, r) final micro-ranks for every node. */
   def pageRankMicro(edges: DataFrame, iters: Int,
-      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+      srcCol: String = "src", dstCol: String = "dst"): DataFrame = Pin.scope {
     require(iters >= 1, s"iters=$iters")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
+    val e = Pin(edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst")).distinct()
-      .repartition(col("src")).localCheckpoint()
+      .repartition(col("src")))
     // node state (node, outdeg) pinned ONCE: the former per-superstep
     // plan re-evaluated the lazy union+distinct node list AND the
     // outdeg aggregate on every iteration (iters+1 node scans, iters
@@ -53,11 +53,11 @@ object Graph {
     // so each superstep is exactly one edge join + one node-sized
     // left join. `sending` keeps the original inner-join semantics
     // via the outdeg-NOT-NULL filter. Arithmetic is unchanged.
-    val nd = e.select(col("src").as("node"))
+    val nd = Pin(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
       .join(e.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("outdeg")), Seq("node"), "left")
-      .localCheckpoint()
+        .agg(count(lit(1)).as("outdeg")), Seq("node"), "left"))
+    val gen = Pin.loop()
     var rank = nd.withColumn("r", lit(1000000L))
     for (_ <- 1 to iters) {
       // only nodes with out-edges send mass (outdeg IS NULL = dangling);
@@ -67,10 +67,9 @@ object Graph {
         .select(col("node").as("src"), expr("r div outdeg").as("c"))
       val contrib = e.join(sending.hint("SHUFFLE_HASH"), "src")
         .groupBy(col("dst").as("node")).agg(sum(col("c")).as("s"))
-      rank = nd.join(contrib, Seq("node"), "left")
+      rank = gen(nd.join(contrib, Seq("node"), "left")
         .select(col("node"), col("outdeg"), (lit(150000L) +
-          expr("(850000 * coalesce(s, 0L)) div 1000000")).as("r"))
-        .localCheckpoint()
+          expr("(850000 * coalesce(s, 0L)) div 1000000")).as("r")))
     }
     rank.select(col("node"), col("r"))
   }
@@ -96,18 +95,17 @@ object Graph {
     * frames; the seed flag is one broadcast semi-join at init. */
   def personalizedPageRankMicro(edges: DataFrame, seeds: DataFrame,
       iters: Int, srcCol: String = "src",
-      dstCol: String = "dst"): DataFrame = {
+      dstCol: String = "dst"): DataFrame = Pin.scope {
     require(iters >= 1, s"iters=$iters")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
+    val e = Pin(edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst")).distinct()
-      .repartition(col("src")).localCheckpoint()
+      .repartition(col("src")))
     val sd = seeds.select(col("node").cast("long").as("node")).distinct()
-    val nodes = e.select(col("src").as("node"))
+    val nodes = Pin(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
       .join(broadcast(sd.withColumn("seed", lit(1))),
         Seq("node"), "left")
-      .select(col("node"), coalesce(col("seed"), lit(0)).as("seed"))
-      .localCheckpoint()
+      .select(col("node"), coalesce(col("seed"), lit(0)).as("seed")))
     val stats = nodes.agg(count(lit(1)).as("n_nodes"),
       sum(col("seed")).cast("long").as("n_seeds"))
     require(stats.collect()(0).getLong(1) > 0,
@@ -116,7 +114,7 @@ object Graph {
     // state so each superstep is one edge join + one node-sized left
     // join (the [[pageRankMicro]] round-17 restructure: the former
     // lazy outdeg aggregate re-ran per iteration)
-    val withTele = nodes.crossJoin(broadcast(stats))
+    val withTele = Pin(nodes.crossJoin(broadcast(stats))
       .select(col("node"),
         when(col("seed") === 1,
           expr("150000L * n_nodes div n_seeds")).otherwise(0L)
@@ -125,8 +123,8 @@ object Graph {
           expr("1000000L * n_nodes div n_seeds")).otherwise(0L)
           .as("r0"))
       .join(e.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("outdeg")), Seq("node"), "left")
-      .localCheckpoint()
+        .agg(count(lit(1)).as("outdeg")), Seq("node"), "left"))
+    val gen = Pin.loop()
     // init = the teleport distribution scaled to full rank mass
     var rank = withTele.select(col("node"), col("outdeg"),
       col("r0").as("r"))
@@ -135,10 +133,9 @@ object Graph {
         .select(col("node").as("src"), expr("r div outdeg").as("c"))
       val contrib = e.join(sending.hint("SHUFFLE_HASH"), "src")
         .groupBy(col("dst").as("node")).agg(sum(col("c")).as("s"))
-      rank = withTele.join(contrib, Seq("node"), "left")
+      rank = gen(withTele.join(contrib, Seq("node"), "left")
         .select(col("node"), col("outdeg"), (col("tele") +
-          expr("(850000 * coalesce(s, 0L)) div 1000000")).as("r"))
-        .localCheckpoint()
+          expr("(850000 * coalesce(s, 0L)) div 1000000")).as("r")))
     }
     rank.select(col("node"), col("r"))
   }
@@ -167,15 +164,14 @@ object Graph {
     *
     * Output: (node, authority_micro, hub_micro) for every node. */
   def hitsMicro(edges: DataFrame, iters: Int,
-      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+      srcCol: String = "src", dstCol: String = "dst"): DataFrame = Pin.scope {
     require(iters >= 1, s"iters=$iters")
     val e0 = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst")).distinct()
-    val eBySrc = e0.repartition(col("src")).localCheckpoint()
-    val eByDst = eBySrc.repartition(col("dst")).localCheckpoint()
-    val nodes = eBySrc.select(col("src").as("node"))
-      .union(eBySrc.select(col("dst").as("node"))).distinct()
-      .localCheckpoint()
+    val eBySrc = Pin(e0.repartition(col("src")))
+    val eByDst = Pin(eBySrc.repartition(col("dst")))
+    val nodes = Pin(eBySrc.select(col("src").as("node"))
+      .union(eBySrc.select(col("dst").as("node"))).distinct())
     // raw sums → the integer norm: s·10⁶ div max(s). The RAW frame is
     // pinned and BOTH consumers (the 1-row max broadcast and the score
     // projection) read the pin — the former shape fed `raw` lazily to
@@ -187,8 +183,11 @@ object Graph {
     // downstream (a 0 contributes nothing to the next sum, and max
     // ignores it); the FINAL readout restores them as 0 via one left
     // join, so the output is row-identical to the old form.
-    def normalized(raw: DataFrame, out: String): DataFrame = {
-      val r = raw.localCheckpoint()
+    // the authority and hub raw sums are one generation chain each
+    val (authGen, hubGen) = (Pin.loop(), Pin.loop())
+    def normalized(raw: DataFrame, out: String,
+        gen: DataFrame => DataFrame): DataFrame = {
+      val r = gen(raw)
       r.crossJoin(broadcast(r.agg(max(col("s")).as("mx"))))
         .select(col("node"),
           coalesce(expr("cast(s as decimal(38,0)) " +
@@ -201,12 +200,12 @@ object Graph {
         eBySrc.join(hub.withColumnRenamed("node", "src")
             .hint("SHUFFLE_HASH"), "src")
           .groupBy(col("dst").as("node")).agg(sum(col("h")).as("s")),
-        "a")
+        "a", authGen)
       hub = normalized(
         eByDst.join(auth.withColumnRenamed("node", "dst")
             .hint("SHUFFLE_HASH"), "dst")
           .groupBy(col("src").as("node")).agg(sum(col("a")).as("s")),
-        "h")
+        "h", hubGen)
     }
     nodes.join(auth, Seq("node"), "left").join(hub, Seq("node"), "left")
       .select(col("node"),
@@ -310,9 +309,9 @@ object Graph {
       col(dstCol).cast("long").as("dst"))
     // indeg over DISTINCT edges without a distinct pass: per-dst
     // count of distinct srcs (map-side partial dedupe)
-    val indeg = pairs.groupBy(col("dst").as("node"))
-      .agg(countDistinct(col("src")).as("c")).localCheckpoint()
-    refinedTail(pairs, indeg, distinctPairs = false, topK, overfetch)
+    refinedTail(pairs, pairs.groupBy(col("dst").as("node"))
+      .agg(countDistinct(col("src")).as("c")), distinctPairs = false, topK,
+      overfetch)
   }
 
   /** [[hitsAuthoritiesRefined]] over an ALREADY-DISTINCT edge table —
@@ -337,17 +336,18 @@ object Graph {
     val pairs = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
     // rows are distinct by the state contract: indeg is a plain count
-    val indeg = pairs.groupBy(col("dst").as("node"))
-      .agg(count(lit(1)).as("c")).localCheckpoint()
-    refinedTail(pairs, indeg, distinctPairs = true, topK, overfetch)
+    refinedTail(pairs, pairs.groupBy(col("dst").as("node"))
+      .agg(count(lit(1)).as("c")), distinctPairs = true, topK, overfetch)
   }
 
   /** Shared two-round tail of [[hitsAuthoritiesRefined]] /
     * [[hitsAuthoritiesRefinedFromEdges]]: global a₁ from the pinned
     * in-degree frame, global h₁ over the (dedup-as-needed) edge
     * pairs, exact a₂ over the overfetched candidate pool. */
-  private def refinedTail(pairs: DataFrame, indeg: DataFrame,
-      distinctPairs: Boolean, topK: Int, overfetch: Int): DataFrame = {
+  private def refinedTail(pairs: DataFrame, indegPlan: DataFrame,
+      distinctPairs: Boolean, topK: Int, overfetch: Int): DataFrame =
+      Pin.scope {
+    val indeg = Pin(indegPlan)
     def dedup(df: DataFrame): DataFrame =
       if (distinctPairs) df else df.distinct()
     // a1 = hitsMicro's first authority iterate: normalized in-degree
@@ -361,10 +361,9 @@ object Graph {
     // computed over the WHOLE edge set (the step the first-iterate
     // prune distorted); a1 is authority-sized — AQE broadcasts it
     // when small, shuffles when not (no hint on purpose)
-    val h1raw = dedup(pairs)
+    val h1raw = Pin(dedup(pairs)
       .join(a1.withColumnRenamed("node", "dst"), "dst")
-      .groupBy(col("src")).agg(sum(col("a")).as("s"))
-      .localCheckpoint()
+      .groupBy(col("src")).agg(sum(col("a")).as("s")))
     val h1 = h1raw
       .crossJoin(broadcast(h1raw.agg(max(col("s")).as("mx"))))
       .select(col("src"),
@@ -372,10 +371,9 @@ object Graph {
           .as("h"))
     val cand = indeg.orderBy(col("c").desc, col("node"))
       .limit(topK * overfetch).select(col("node").as("dst"))
-    val a2raw = dedup(pairs.join(broadcast(cand), "dst"))
+    val a2raw = Pin(dedup(pairs.join(broadcast(cand), "dst"))
       .join(h1.hint("SHUFFLE_HASH"), "src")
-      .groupBy(col("dst").as("node")).agg(sum(col("h")).as("s"))
-      .localCheckpoint()
+      .groupBy(col("dst").as("node")).agg(sum(col("h")).as("s")))
     a2raw
       .crossJoin(broadcast(a2raw.agg(max(col("s")).as("mx"))))
       .select(col("node"),
@@ -412,16 +410,17 @@ object Graph {
     * Output: (node, community, n_members) for every node with an
     * edge. */
   def labelPropagation(edges: DataFrame, iters: Int,
-      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+      srcCol: String = "src", dstCol: String = "dst"): DataFrame = Pin.scope {
     require(iters >= 1, s"iters=$iters")
     val e0 = edges.select(col(srcCol).cast("long").as("a"),
       col(dstCol).cast("long").as("b")).filter(col("a") =!= col("b"))
-    val nb = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
+    val nb = Pin(e0.union(e0.select(col("b").as("a"), col("a").as("b")))
       .distinct()
       .select(col("a").as("v"), col("b").as("u"))
-      .repartition(col("u")).localCheckpoint()
-    var lbl = nb.select(col("v").as("node")).distinct()
-      .withColumn("lbl", col("node")).localCheckpoint()
+      .repartition(col("u")))
+    val gen = Pin.loop()
+    var lbl = gen(nb.select(col("v").as("node")).distinct()
+      .withColumn("lbl", col("node")))
     for (_ <- 1 to iters) {
       val votes = nb
         .join(lbl.withColumnRenamed("node", "u").hint("SHUFFLE_HASH"),
@@ -430,11 +429,10 @@ object Graph {
       // (count DESC, label ASC) as min_by over (−c, lbl): −c is safe
       // (counts ≥ 1), and tied keys imply the same lbl — deterministic,
       // value-identical to the former rank-1 window row
-      lbl = votes.groupBy(col("v"))
+      lbl = gen(votes.groupBy(col("v"))
         .agg(min_by(col("lbl"),
           struct((-col("c")).as("nc"), col("lbl"))).as("lbl"))
-        .select(col("v").as("node"), col("lbl"))
-        .localCheckpoint()
+        .select(col("v").as("node"), col("lbl")))
     }
     lbl.join(lbl.groupBy(col("lbl")).agg(count(lit(1)).as("n_members")),
         "lbl")
@@ -695,14 +693,14 @@ object Graph {
     * a localCheckpoint per round to keep the plan O(1) deep; rounds
     * are bounded by `maxRounds`, not data. */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 8,
-      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+      srcCol: String = "src", dstCol: String = "dst"): DataFrame = Pin.scope {
     require(k >= 1 && maxRounds >= 1, s"k=$k maxRounds=$maxRounds")
-    var e = edges.select(
+    val gen = Pin.loop()
+    var e = gen(edges.select(
         least(col(srcCol), col(dstCol)).cast("long").as("a"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
       .filter(col("a") =!= col("b") && col("a").isNotNull)
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     var nEdges = e.count()
     var converged = false
     var round = 0
@@ -711,17 +709,16 @@ object Graph {
       // pinned: both semi-joins consume `keep`, and unpinned each
       // re-ran the degree aggregate over the full edge set (round 17 —
       // one edge-sized pass per round saved; the pin is node-sized)
-      val keep = e.select(col("a").as("n"))
+      val keep = Pin(e.select(col("a").as("n"))
         .unionAll(e.select(col("b").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
-        .select(col("n"))
-        .localCheckpoint(true)
-      val e2 = e
+        .select(col("n")))
+      val e2 = gen(e
         .join(keep.select(col("n").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("n").as("b")), Seq("b"), "left_semi")
-        .select(col("a"), col("b"))
-        .localCheckpoint(true)
+        .select(col("a"), col("b")))
+      Pin.release(keep)
       val n2 = e2.count()
       converged = n2 == nEdges
       e = e2; nEdges = n2

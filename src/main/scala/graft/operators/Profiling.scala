@@ -162,7 +162,7 @@ object Profiling {
       .filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .groupBy(col(aCol).as("a"), col(bCol).as("b"))
       .agg(count(lit(1)).as("nab"))
-    val cells = if (lazyPlan) cells0 else cells0.localCheckpoint(true)
+    val cells = if (lazyPlan) cells0 else Pin(cells0)
     val ma = cells.groupBy(col("a")).agg(sum(col("nab")).as("na"))
     val mb = cells.groupBy(col("b")).agg(sum(col("nab")).as("nb"))
     val tot = cells.agg(sum(col("nab")).as("n"),
@@ -455,11 +455,12 @@ object Profiling {
     * same scan counted — 36 inlined derivations per row. One 8-byte
     * pin row per value ends that for every round. */
   def exactQuantiles(df: DataFrame, value: org.apache.spark.sql.Column,
-      qs: Seq[Double], fanout: Int = 256): DataFrame =
+      qs: Seq[Double], fanout: Int = 256): DataFrame = Pin.scope {
     exactQuantilesMulti(
-      df.select(value.cast("long").as("v")).localCheckpoint(true),
+      Pin(df.select(value.cast("long").as("v"))),
       Seq("v"), qs, fanout)
       .select(col("q"), col("n"), col("k"), col("value"))
+  }
 
   /** [[exactQuantiles]] over a STORED numeric COLUMN (by name, not a
     * derived expression) — the same histogram-refinement algorithm, but
@@ -1029,7 +1030,7 @@ object Profiling {
       .agg(count(lit(1)).as("nab"))
     // cells pinned ([[mutualInformation]]'s contract): the marginal /
     // total / chi branches all re-read it; lazyPlan skips for Explain
-    val cells = if (lazyPlan) cells0 else cells0.localCheckpoint(true)
+    val cells = if (lazyPlan) cells0 else Pin(cells0)
     val ma = cells.groupBy(col("a")).agg(sum(col("nab")).as("na"))
     val mb = cells.groupBy(col("b")).agg(sum(col("nab")).as("nb"))
     val tot = cells.agg(sum(col("nab")).as("n"),
@@ -1068,11 +1069,11 @@ object Profiling {
     * counting passes, 1-row driver state between) over one projected
     * scan each. */
   def madRobust(df: DataFrame, value: org.apache.spark.sql.Column,
-      fanout: Int = 256): DataFrame = {
+      fanout: Int = 256): DataFrame = Pin.scope {
     val spark = df.sparkSession
     import spark.implicits._
-    val base = df.select(value.cast("long").as("v"))
-      .filter(col("v").isNotNull).localCheckpoint(true)
+    val base = Pin(df.select(value.cast("long").as("v"))
+      .filter(col("v").isNotNull))
     // guard BEFORE exactQuantiles: its require(n > 0) would throw on an
     // empty/all-NULL column, where the contract (and the oracle's SQL
     // form) is an empty frame (ADVICE r15). base is pinned, so isEmpty
@@ -1105,10 +1106,9 @@ object Profiling {
   def tukeyOutliers(df: DataFrame, groupCol: String,
       value: org.apache.spark.sql.Column,
       fanout: Int = 256): DataFrame = {
-    val base = df.select(col(groupCol).cast("string").as("g"),
+    val base = Pin(df.select(col(groupCol).cast("string").as("g"),
         value.cast("long").as("v"))
-      .filter(col("g").isNotNull && col("v").isNotNull)
-      .localCheckpoint(true)
+      .filter(col("g").isNotNull && col("v").isNotNull))
     val qs = exactQuantilesByGroup(base, "g", "v", Seq(0.25, 0.75),
         fanout)
       .groupBy(col("group").as("g"))
@@ -1154,10 +1154,9 @@ object Profiling {
   def brownForsythe(df: DataFrame, groupCol: String,
       value: org.apache.spark.sql.Column,
       fanout: Int = 256): DataFrame = {
-    val base = df.select(col(groupCol).cast("string").as("g"),
+    val base = Pin(df.select(col(groupCol).cast("string").as("g"),
         value.cast("long").as("v"))
-      .filter(col("g").isNotNull && col("v").isNotNull)
-      .localCheckpoint(true)
+      .filter(col("g").isNotNull && col("v").isNotNull))
     val med = exactQuantilesByGroup(base, "g", "v", Seq(0.5), fanout)
       .select(col("group").as("g"), col("value").as("md"))
     def dec(s: String) = s"cast($s as decimal(38,0))"
@@ -1196,15 +1195,14 @@ object Profiling {
   def quantileDrift(df: DataFrame, flag: org.apache.spark.sql.Column,
       value: org.apache.spark.sql.Column,
       qs: Seq[Double] = (1 to 9).map(_ / 10.0),
-      fanout: Int = 256): DataFrame = {
+      fanout: Int = 256): DataFrame = Pin.scope {
     // pinned narrow base (round 17): the refinement's range compares
     // otherwise inline the flag-pivot + derived value per compare —
     // see [[exactQuantiles]]; this is the same pin the
     // [[brownForsythe]]/[[tukeyOutliers]] siblings already carry
-    val base = df.filter(flag.isNotNull && value.isNotNull)
+    val base = Pin(df.filter(flag.isNotNull && value.isNotNull)
       .select(when(flag, "a").otherwise("b").as("g"),
-        value.cast("long").as("v"))
-      .localCheckpoint(true)
+        value.cast("long").as("v")))
     exactQuantilesByGroup(base, "g", "v", qs, fanout)
       .groupBy(round(col("q") * 1000, 0).cast("long").as("q_permille"))
       .agg(max(when(col("group") === "a", col("value"))).as("v_a"),
@@ -1352,12 +1350,11 @@ object Profiling {
       x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column,
       maxRows: Int = 10000): DataFrame = {
     require(maxRows >= 2, s"maxRows=$maxRows")
-    val base = df
+    val base = Pin(df
       .select(col(keyCol).as("k"), x.cast("long").as("x"),
         y.cast("long").as("y"))
       .filter(col("k").isNotNull && col("x").isNotNull &&
-        col("y").isNotNull)
-      .localCheckpoint(true)
+        col("y").isNotNull))
     val n = base.count()
     require(n >= 2 && n <= maxRows,
       s"kendallTauB is for key-bounded frames: got $n rows " +

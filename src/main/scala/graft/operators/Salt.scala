@@ -8,8 +8,7 @@ import org.apache.spark.sql.functions._
   * cluster has. Salting splits the hot key's rows across `buckets`
   * sub-keys; the other side replicates per salt, restoring correctness.
   * AQE's skew-join handles the join case adaptively at runtime — this
-  * operator is the explicit form for when the skew is known up front (or
-  * for aggregates AQE doesn't rewrite). */
+  * operator is the explicit form for when the skew is known up front. */
 object Salt {
 
   /** Equi-join with a salted fact side: `fact ⋈ dim` on `key`, with fact
@@ -27,19 +26,4 @@ object Salt {
       explode(sequence(lit(0), lit(buckets - 1))))
     salted.join(replicated, Seq(key, "__salt")).drop("__salt")
   }
-
-  /** Two-phase salted aggregation: partial per (key, salt), final per key.
-    * Spark's hash aggregate already does map-side partials for algebraic
-    * functions; this explicit form is for the cases that don't get them
-    * (e.g. exact count-distinct rewritten as two-level sets). */
-  def saltedCountDistinct(df: DataFrame, key: String, valueCol: String,
-      buckets: Int): DataFrame =
-    df
-      .withColumn("__salt", pmod(hash(col(valueCol)), lit(buckets)))
-      .groupBy(col(key), col("__salt"))
-      .agg(countDistinct(col(valueCol)).as("__partial"))
-      // value-hash salting ⇒ identical values share a salt ⇒ partial
-      // distinct counts are disjoint and sum exactly
-      .groupBy(col(key))
-      .agg(sum(col("__partial")).as(s"n_distinct_$valueCol"))
 }

@@ -195,45 +195,6 @@ object Similarity {
         col("tb.table").as("table"), col("tb.bucket").as("bucket"))
   }
 
-  /** X2 LSH-BLOCKED cosine near-dup pairs — the 100 TB path promised by
-    * [[cosinePairs]]'s scaladoc, made concrete: candidate pairs are
-    * bucket-mates in ANY of the hyperplane tables (an equi-join on
-    * (table, bucket) — no all-pairs blowup), then verified with the exact
-    * cosine. Recall < 1 by construction (a qualifying pair whose vectors
-    * split on every table is missed); more tables / fewer bits per table
-    * trade candidate volume for recall. NorthStarSpec measures recall
-    * against the exact operator. */
-  def cosinePairsLsh(emb: DataFrame, threshold: Double,
-      numTables: Int = 6, bitsPerTable: Int = 6, seed: Long = 7L,
-      dim: Int = 64): DataFrame = {
-    // dim MUST match the embedding dimension: a mismatched hyperplane dot
-    // product is NULL (DotProduct's zip_with-exact semantics), when(NULL)
-    // takes the 0 branch for every bit, and ALL vectors collapse into one
-    // bucket per table — the all-pairs blowup this operator exists to
-    // avoid. Fail fast instead.
-    requireDim(emb, dim)
-    val pl = planes(numTables, bitsPerTable, dim, seed)
-    val b = bucketed(Par.fanOut(emb), pl)
-      .select(col("vec_id"), col("table"), col("bucket"))
-    // corpus-scale self-join: see Dedup's SHUFFLE_HASH note
-    val candidates = b.as("x")
-      .join(b.hint("SHUFFLE_HASH").as("y"), Seq("table", "bucket"))
-      .filter(col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))
-      .distinct()
-    val sides = withNorm(emb)
-    val rawCos = dot(col("va"), col("vb")) / (col("na") * col("nb"))
-    candidates
-      .join(sides.select(col("vec_id").as("id_a"), col("v").as("va"),
-        col("nrm").as("na")), "id_a")
-      .join(sides.select(col("vec_id").as("id_b"), col("v").as("vb"),
-        col("nrm").as("nb")), "id_b")
-      // raw boundary filter instead of the BigDecimal-backed round — the
-      // exact-equivalence trick of [[cosinePairs]]/[[roundedGeqBoundary]]
-      .filter(rawCos >= roundedGeqBoundary(threshold, 4))
-      .select(col("id_a"), col("id_b"), round(rawCos, 4).as("cos"))
-  }
-
   /** X2 SemDeDup-style SEMANTIC dedup decision (Abbas et al., "SemDeDup:
     * Data-efficient learning at web-scale through semantic deduplication",
     * arXiv:2303.09540): within each cluster ("cell"), a vector is DROPPED
@@ -589,7 +550,8 @@ object Similarity {
     * cumsum's single range shuffle, one driver row back. k−1 rounds like
     * every sequential seeder — for huge k, seed over a deterministic
     * id-sample (the [[kmeansAssignSampled]] trick) instead. */
-  def kmeansAssignPlusPlus(emb: DataFrame, k: Int, iters: Int): DataFrame = {
+  def kmeansAssignPlusPlus(emb: DataFrame, k: Int, iters: Int): DataFrame =
+      Pin.scope {
     require(k >= 1 && iters >= 0, s"k=$k iters=$iters")
     val base = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
     var seeds = base.orderBy(col("vec_id")).limit(1).collect()
@@ -1108,9 +1070,8 @@ object Similarity {
     // numerator dot, the norm's self-dot) — each reference INLINES the
     // whole quantization. In production the int8 codes are the STORED
     // form (this scaladoc's point); the pin is that storage step.
-    val qz = quantizeInt8(emb)
-      .select(col("vec_id"), asDouble(col("q_vec")).as("qv"))
-      .localCheckpoint(true)
+    val qz = Pin(quantizeInt8(emb)
+      .select(col("vec_id"), asDouble(col("q_vec")).as("qv")))
     // the query side needs the same no-direction guard as the corpus:
     // an all-zero query would make every cos8 0/0 = NaN, and Spark
     // sorts NaN GREATEST — k arbitrary rows instead of the correct
@@ -1330,13 +1291,13 @@ object Similarity {
   }
 
   def mmrRerank(emb: DataFrame, queryId: Long, poolN: Int, k: Int,
-      lamNum: Int, lamDen: Int): DataFrame = {
+      lamNum: Int, lamDen: Int): DataFrame = Pin.scope {
     require(k >= 1 && poolN >= k && poolN <= 256,
       s"poolN=$poolN k=$k (need 1 <= k <= poolN <= 256)")
     require(lamDen >= 1 && lamNum >= 0 && lamNum <= lamDen,
       s"lambda=$lamNum/$lamDen not in [0, 1]")
     val spark = emb.sparkSession
-    val pool = mmrPoolLazy(emb, queryId, poolN).localCheckpoint(true)
+    val pool = Pin(mmrPoolLazy(emb, queryId, poolN))
     val a = pool.select(col("vec_id").as("sa"), col("v").as("va"),
       col("nrm").as("na"))
     val b = pool.select(col("vec_id").as("sb"), col("v").as("vb"),
@@ -1411,14 +1372,13 @@ object Similarity {
     * 4096 rows by contract, not by the corpus. Output: (qid, pick,
     * vec_id, rel_e4, mmr), the page each query serves. */
   def mmrRerankBatch(emb: DataFrame, queries: DataFrame, poolN: Int,
-      k: Int, lamNum: Int, lamDen: Int): DataFrame = {
+      k: Int, lamNum: Int, lamDen: Int): DataFrame = Pin.scope {
     require(k >= 1 && poolN >= k && poolN <= 64,
       s"poolN=$poolN k=$k (need 1 <= k <= poolN <= 64)")
     require(lamDen >= 1 && lamNum >= 0 && lamNum <= lamDen,
       s"lambda=$lamNum/$lamDen not in [0, 1]")
     val spark = emb.sparkSession
-    val pool = mmrBatchPoolLazy(emb, queries, poolN)
-      .localCheckpoint(true)
+    val pool = Pin(mmrBatchPoolLazy(emb, queries, poolN))
     require(pool.count() <= 4096, "batch pool over the driver contract")
     val a = pool.select(col("qid"), col("vec_id").as("sa"),
       col("v").as("va"), col("nrm").as("na"))
@@ -1573,11 +1533,10 @@ object Similarity {
     // re-evaluates per CANDIDATE row inside the probe joins, where the
     // oversized generated code drops to interpreted mode (measured
     // 40 s vs 0.5 s on the 100x slice for the exact same plan).
-    val base = emb.select(col("vec_id"), col("label"),
+    val base = Pin(emb.select(col("vec_id"), col("label"),
         asDouble(col("embedding")).as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-      .withColumn("cid", argminStruct(col("v"), cents).getField("cid"))
-      .localCheckpoint(true)
+      .withColumn("cid", argminStruct(col("v"), cents).getField("cid")))
     ivfServingTail(base, cents, nProbe, nQueries, k)
   }
 
@@ -1625,10 +1584,9 @@ object Similarity {
       s"nProbe=$nProbe nQueries=$nQueries")
     require(tau > -1.0 && tau <= 1.0, s"tau=$tau")
     val spark = emb.sparkSession
-    val base = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val base = Pin(emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-      .withColumn("cid", argminStruct(col("v"), cents).getField("cid"))
-      .localCheckpoint(true)
+      .withColumn("cid", argminStruct(col("v"), cents).getField("cid")))
     val qs = base.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"),
         col("nrm").as("qnrm"))
@@ -1714,13 +1672,14 @@ object Similarity {
     // the pre-swap member files (lineage would legally re-read them —
     // they survive until vacuum — but the pin also keeps the k-literal
     // argmin out of the write stage, the q309 codegen lesson)
-    val reassigned = assignWithVec(members.drop("cid"), cents, keep)
-      .localCheckpoint(true)
-    if (!ManifestTable.hasCommittedTxn(centroidDir, txnId))
-      ManifestTable.overwriteWithRetry(spark, centroidDir,
-        centroidsDF(spark, cents), txn = Some(txnId))
-    ManifestTable.overwriteWithRetry(spark, memberDir, reassigned,
-      txn = Some(txnId))
+    val reassigned = Pin(assignWithVec(members.drop("cid"), cents, keep))
+    try {
+      if (!ManifestTable.hasCommittedTxn(centroidDir, txnId))
+        ManifestTable.overwriteWithRetry(spark, centroidDir,
+          centroidsDF(spark, cents), txn = Some(txnId))
+      ManifestTable.overwriteWithRetry(spark, memberDir, reassigned,
+        txn = Some(txnId))
+    } finally Pin.release(reassigned)
   }
 
   /** Shared serving tail of [[ivfRankingMetricsWith]] /

@@ -1,7 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.plans.TextExpressions
@@ -18,19 +18,12 @@ import graft.plans.TextExpressions
   * .rolling_hash]], which has an exact DuckDB twin — so sketch outputs are
   * oracle-checkable, unlike seed-randomized implementations.
   *
-  * Scale design: each sketch has two physical forms.
-  *   - RELATIONAL (rows): the Bloom filter as a distinct set-bit position
-  *     table, the CMS as a (seed, cell) → total table. Builds are one
-  *     groupBy/distinct shuffle; probes are equi-joins. This form has no
-  *     size ceiling — a 10^11-bit filter is just a bigger position table,
-  *     partitioned like any other — and is what a 1000-executor job uses
-  *     when the sketch itself is large.
-  *   - COMPACT (one row): the filter as a bitmap `array<bigint>`, built by
-  *     a typed [[Aggregator]] (§2.11 UDAF surface) with map-side partial
-  *     merge. A few MB even for 10^8 bits → broadcast it and probe with a
-  *     scalar expression, zero shuffles on the probe side. Use when the
-  *     sketch fits an executor; the two forms agree bit-for-bit
-  *     (SketchesSpec asserts it).
+  * Scale design: both sketches are RELATIONAL (rows): the Bloom filter
+  * as a distinct set-bit position table, the CMS as a (seed, cell) →
+  * total table. Builds are one groupBy/distinct shuffle; probes are
+  * equi-joins, broadcast while the filter is small ([[bloomProbe]]). This
+  * form has no size ceiling — a 10^11-bit filter is just a bigger
+  * position table, partitioned like any other.
   */
 object Sketches {
 
@@ -76,61 +69,6 @@ object Sketches {
   }
 
   private def bitmapWords(m: Int): Int = (m + 63) >> 6
-
-  /** Typed Aggregator folding set-bit positions into an m-bit bitmap
-    * (little-endian within each 64-bit word). Partial-merges map-side like
-    * any Catalyst agg — the build is one pass, no shuffle of raw rows. */
-  class BloomBitmapAgg(m: Int)
-      extends Aggregator[Long, Array[Long], Array[Long]] {
-    override def zero: Array[Long] = new Array[Long](bitmapWords(m))
-    override def reduce(b: Array[Long], pos: Long): Array[Long] = {
-      val p = pos.toInt
-      b(p >> 6) |= 1L << (p & 63)
-      b
-    }
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < a.length) { a(i) |= b(i); i += 1 }
-      a
-    }
-    override def finish(b: Array[Long]): Array[Long] = b
-    // ExpressionEncoder, not javaSerialization: the OUTPUT must be a real
-    // array<bigint> column (element_at probes it); a serialized buffer
-    // would surface as opaque binary
-    override def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  }
-
-  /** Compact Bloom build: one row, one `bitmap: array<bigint>` column. */
-  def bloomBitmap(keys: DataFrame, hash: Column, m: Int, k: Int): DataFrame = {
-    val agg = udaf(new BloomBitmapAgg(m))
-    keys.select(explode(array((0 until k).map(bloomPosition(hash, _, m)): _*))
-        .as("pos"))
-      .agg(agg(col("pos")).as("bitmap"))
-  }
-
-  /** Compact Bloom probe: cross-join the single bitmap row (broadcast —
-    * it is one row) onto the probes and test all k bits with a scalar
-    * predicate; the probe side never shuffles. */
-  def bloomBitmapProbe(bitmap: DataFrame, probes: DataFrame, hash: Column,
-      m: Int, k: Int): DataFrame = {
-    val test = (0 until k).map { i =>
-      val p = bloomPosition(col("__h"), i, m)
-      // (p / 64) via double division is exact for p < 2^31; cast truncates
-      // toward zero = floor for non-negative positions. Dynamic shift
-      // distance needs the SQL shiftright (the Scala helper only takes a
-      // literal Int).
-      (call_function("shiftright", element_at(col("bitmap"),
-        (p / 64).cast("int") + 1), pmod(p, lit(64L)).cast("int"))
-        .bitwiseAND(lit(1L))) === lit(1L)
-    }.reduce(_ && _)
-    probes.withColumn("__h", hash)
-      .crossJoin(broadcast(bitmap))
-      .withColumn("bloom_hit", test)
-      .drop("__h", "bitmap")
-  }
 
   // ------------------------------------------------------------ Count-Min
 
@@ -275,7 +213,8 @@ object Sketches {
       .join(base.select(col("g").as("src_b"), col("h")), Seq("h"))
       .filter(col("src_a") < col("src_b"))
       .groupBy(col("src_a"), col("src_b")).agg(count(lit(1)).as("n_i"))
-    val out = pairs
+    // pin (pair-matrix-sized), then drop caches
+    val out = Pin(pairs
       .join(kmvCounts, Seq("src_a", "src_b"), "left")
       .join(sizes.select(col("g").as("src_a"), col("n").as("na")), "src_a")
       .join(sizes.select(col("g").as("src_b"), col("n").as("nb")), "src_b")
@@ -285,8 +224,7 @@ object Sketches {
           coalesce(col("n_u"), lit(1L)).cast("double"), 4).as("kmv_est"),
         round(coalesce(col("n_i"), lit(0L)) /
           (col("na") + col("nb") - coalesce(col("n_i"), lit(0L)))
-            .cast("double"), 4).as("exact_j"))
-      .localCheckpoint(true) // pin (pair-matrix-sized), then drop caches
+            .cast("double"), 4).as("exact_j")))
     sigs.unpersist(false)
     sizes.unpersist(false)
     base.unpersist(false)

@@ -154,7 +154,7 @@ object TextAnalysis {
     * Symbols must not contain spaces or LIKE metacharacters — true for
     * whitespace-tokenized text. */
   def bpeMerges(docs: DataFrame, rounds: Int,
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = Pin.scope {
     val spark = docs.sparkSession
     import spark.implicits._
     bpeTrain(docs, rounds, textCol)._1.toDF("round", "lhs", "rhs", "freq")
@@ -312,7 +312,7 @@ object TextAnalysis {
       .limit(topK)
     if (lazyPlan) out // plan-inspection form: no pin, no cache to drop
     else {
-      val pinned = out.localCheckpoint(true) // pin topK rows, drop cache
+      val pinned = Pin(out) // pin topK rows, drop cache
       top.unpersist(false)
       pinned
     }
@@ -349,9 +349,10 @@ object TextAnalysis {
     val vocab = docs.select(explode(split(col(textCol), " ")).as("word"))
       .filter(col("word") =!= "")
       .groupBy("word").agg(count(lit(1)).as("freq"))
-    var seqs = vocab
-      .withColumn("seq", concat_ws(" ", split(col("word"), "")))
-      .localCheckpoint() // vocab-sized; stops lineage growth across rounds
+    // vocab-sized generations; stop lineage growth across rounds
+    val gen = Pin.loop()
+    var seqs = gen(vocab
+      .withColumn("seq", concat_ws(" ", split(col("word"), ""))))
     val merges = new scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]
     for (i <- 1 to rounds) {
       val toks = split(col("seq"), " ")
@@ -369,14 +370,13 @@ object TextAnalysis {
           pair(0).getLong(2))
         merges += ((i, l, r, f))
         val parts = split(col("seq"), " ")
-        seqs = seqs.withColumn("seq",
+        seqs = gen(seqs.withColumn("seq",
           when(size(parts) === 1, col("seq")).otherwise(
             aggregate(slice(parts, lit(2), size(parts) - lit(1)),
               element_at(parts, 1),
               (acc, x) => when(x === lit(r) &&
                   (acc === lit(l) || acc.endsWith(" " + l)),
-                concat(acc, x)).otherwise(concat(acc, lit(" "), x)))))
-          .localCheckpoint()
+                concat(acc, x)).otherwise(concat(acc, lit(" "), x))))))
       }
     }
     (merges.toSeq, seqs)

@@ -660,11 +660,10 @@ object TimeSeries {
   def madOutlierDays(df: DataFrame, ts: String, value: Column,
       k: Int = 3): DataFrame = {
     require(k >= 1, s"k=$k")
-    val daily = df
+    val daily = Pin(df
       .select(Behavior.epochDay(col(ts)).as("d"),
         round(value * 100, 0).cast("long").as("cents"))
-      .groupBy(col("d")).agg(sum(col("cents")).as("cents"))
-      .localCheckpoint(true)
+      .groupBy(col("d")).agg(sum(col("cents")).as("cents")))
     val med = Profiling.exactQuantiles(daily, col("cents"), Seq(0.5))
       .select(col("value")).collect()(0).getLong(0)
     val mad = Profiling.exactQuantiles(
@@ -718,12 +717,12 @@ object TimeSeries {
     * min/max into the refinement as k=1/k=n quantiles was MEASURED
     * SLOWER (2.0 s vs 0.3+1.1 s): the ±10¹⁵ slope span makes extreme-
     * order statistics pay extra multi-probe explode rounds. */
-  def theilSenTrend(df: DataFrame, ts: String, value: Column): DataFrame = {
-    val daily = df
+  def theilSenTrend(df: DataFrame, ts: String, value: Column): DataFrame =
+      Pin.scope {
+    val daily = Pin(df
       .select(Behavior.epochDay(col(ts)).as("d"),
         round(value * 100, 0).cast("long").as("cents"))
-      .groupBy(col("d")).agg(sum(col("cents")).as("c"))
-      .localCheckpoint(true)
+      .groupBy(col("d")).agg(sum(col("cents")).as("c")))
     val st = daily.agg(count(lit(1)), min(col("c")), max(col("c")))
       .collect()(0)
     val nDays = st.getLong(0)
@@ -740,9 +739,8 @@ object TimeSeries {
         " div nullif(db - da, 0) as bigint)")
     val a = daily.select(col("d").as("da"), col("c").as("ca"))
     val b = daily.select(col("d").as("db"), col("c").as("cb"))
-    val slopes = a.join(broadcast(b), col("da") < col("db"))
-      .select(slopeExpr.as("slope_micro"))
-      .localCheckpoint(true)
+    val slopes = Pin(a.join(broadcast(b), col("da") < col("db"))
+      .select(slopeExpr.as("slope_micro")))
     // ONE stats pass serves both the output min/max AND the median
     // refinement's seed (n_pairs is closed form) — without the seed,
     // exactQuantilesMulti would re-scan the pairs for its own stats
@@ -854,12 +852,11 @@ object TimeSeries {
   def varianceRatio(df: DataFrame, ts: String, value: Column,
       q: Int): DataFrame = {
     require(q >= 2, s"q=$q")
-    val daily = df
+    val daily = Pin(df
       .select(Behavior.epochDay(col(ts)).as("d"),
         round(value * 100, 0).cast("long").as("cents"))
       .filter(col("d").isNotNull && col("cents").isNotNull)
-      .groupBy(col("d")).agg(sum(col("cents")).as("c"))
-      .localCheckpoint(true)
+      .groupBy(col("d")).agg(sum(col("cents")).as("c")))
     def dec(c: Column) = c.cast("decimal(38,0)")
     def stats(k: Int, nn: String, sxn: String, sxxn: String) =
       daily.as("a")
@@ -900,11 +897,10 @@ object TimeSeries {
     * into a 1-row aggregate, and a tie histogram bounded by distinct
     * daily totals. */
   def mannKendall(df: DataFrame, ts: String, value: Column): DataFrame = {
-    val daily = df
+    val daily = Pin(df
       .select(Behavior.epochDay(col(ts)).as("d"),
         round(value * 100, 0).cast("long").as("cents"))
-      .groupBy(col("d")).agg(sum(col("cents")).as("c"))
-      .localCheckpoint(true)
+      .groupBy(col("d")).agg(sum(col("cents")).as("c")))
     val a = daily.select(col("d").as("da"), col("c").as("ca"))
     val b = daily.select(col("d").as("db"), col("c").as("cb"))
     val s = a.join(broadcast(b), col("da") < col("db"))

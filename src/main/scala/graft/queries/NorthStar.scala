@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Behavior, Curation, Dedup, Graph, Labeling, Learn, Multimodal, Par, Profiling, QuantileState, Retrieval, Similarity, TextAnalysis, TimeSeries, Upsert}
+import graft.operators.{Behavior, Curation, Dedup, Graph, Labeling, Learn, Multimodal, Par, Pin, Profiling, QuantileState, Retrieval, Similarity, TextAnalysis, TimeSeries, Upsert}
 import graft.plans.TextExpressions
 
 /** North-star extension queries (SURVEY.md §2.12): dedup, similarity
@@ -39,7 +39,7 @@ object NorthStar {
     * graph (J >= 0.8): iterative min-label propagation; component = min
     * doc_id of the transitive cluster. Oracle: DuckDB recursive CTE over
     * the same pairs. */
-  def ccComponents(spark: SparkSession, d: String): DataFrame = {
+  def ccComponents(spark: SparkSession, d: String): DataFrame = Pin.scope {
     import spark.implicits._
     Dedup.connectedComponents(
       Dedup.jaccardPairs(Tables.documents(spark, d), 0.8))
@@ -258,8 +258,7 @@ object NorthStar {
     // once with CSE in 1.7 s). A full rebuild materializes its
     // assignment table by definition, so the pin is also the honest
     // cost model.
-    val rebuilt = Similarity.assignWithVec(emb, cents)
-      .localCheckpoint(true)
+    val rebuilt = Pin(Similarity.assignWithVec(emb, cents))
     def serve(idx: DataFrame) = Similarity.ivfTopKWith(
       cellsDf.select($"cid".as("label"), $"c".as("centroid")),
       idx.withColumnRenamed("cid", "label"), 0L, 10)
@@ -491,14 +490,12 @@ object NorthStar {
     // anti-join = 3 consumers). A funnel materializes its stage
     // outputs in any real pipeline — the pin is the honest cost model,
     // not local tuning.
-    val quality = TextAnalysis.withQuality(docs)
+    val quality = Pin(TextAnalysis.withQuality(docs)
       .filter($"n_tokens" >= 20 && $"uniq_ratio" >= 0.3)
-      .select(docs.columns.map(col): _*)
-      .localCheckpoint(true)
-    val exact = quality.join(
+      .select(docs.columns.map(col): _*))
+    val exact = Pin(quality.join(
       quality.groupBy($"text").agg(min($"doc_id").as("doc_id")),
-      Seq("doc_id"), "left_semi")
-      .localCheckpoint(true)
+      Seq("doc_id"), "left_semi"))
     val nearDeduped = Dedup.dropNearDuplicates(exact, 0.8)
     def stage(name: String, df: DataFrame): DataFrame =
       df.agg(count(lit(1)).as("n_docs")).select(lit(name).as("stage"), $"n_docs")
@@ -727,7 +724,7 @@ object NorthStar {
     val model = dbc.groupBy($"w1", $"w2").agg(sum($"c").as("cnt2"))
     val uni = model.groupBy($"w1").agg(sum($"cnt2").as("c1"))
     // H = -(1/N) Σ c·ln(cnt2/c1) ≥ 0 since cnt2 ≤ c1; ppl = exp(H) ≥ 1
-    val out = dbc
+    val out = Pin(dbc
       .join(model.join(uni, "w1"), Seq("w1", "w2"))
       .groupBy($"doc_id")
       .agg(sum($"c").as("n"),
@@ -735,8 +732,7 @@ object NorthStar {
       .select($"doc_id",
         (round(exp($"s" / $"n"), 4) + lit(0.0)).as("ppl"),
         $"n".as("n_bigrams"))
-      .orderBy($"doc_id")
-      .localCheckpoint(true)
+      .orderBy($"doc_id"))
     dbc.unpersist(false)
     out
   }
@@ -762,7 +758,7 @@ object NorthStar {
     import spark.implicits._
     val dbc = docBigramCounts(docs).persist()
     val fd = dbc.groupBy($"w1", $"w2").agg(min($"doc_id").as("first_doc"))
-    val out = dbc.join(fd, Seq("w1", "w2"))
+    val out = Pin(dbc.join(fd, Seq("w1", "w2"))
       .groupBy($"doc_id")
       .agg(sum($"c").as("n"),
         sum(when($"doc_id" === $"first_doc", $"c")
@@ -770,8 +766,7 @@ object NorthStar {
       .select($"doc_id",
         (round($"nov" / $"n", 4) + lit(0.0)).as("novelty"),
         $"n".as("n_bigrams"))
-      .orderBy($"doc_id")
-      .localCheckpoint(true)
+      .orderBy($"doc_id"))
     dbc.unpersist(false)
     out
   }
@@ -804,7 +799,7 @@ object NorthStar {
     val ns = tok.groupBy($"source").agg(sum($"c").as("ns"))
     val n = corpus.agg(sum($"cw").as("n_total"))
     // KL = (1/ns)·Σ c·(ln c − ln ns − ln cw + ln N), exact ints inside ln
-    val out = tok.join(corpus, "w")
+    val out = Pin(tok.join(corpus, "w")
       .join(broadcast(ns), "source")
       .crossJoin(broadcast(n))
       .groupBy($"source")
@@ -814,8 +809,7 @@ object NorthStar {
       .select($"source",
         (round($"s" / $"nt", 4) + lit(0.0)).as("kl"),
         $"nt".as("n_tokens"))
-      .orderBy($"source")
-      .localCheckpoint(true)
+      .orderBy($"source"))
     tok.unpersist(false)
     out
   }
@@ -971,7 +965,7 @@ object NorthStar {
     * thresholding. */
   def vocabCoverage(spark: SparkSession, d: String): DataFrame = {
     val local = vocabRanked(spark, d).persist()
-    val out = vocabCoveragePlan(spark, local).localCheckpoint(true)
+    val out = Pin(vocabCoveragePlan(spark, local))
     local.unpersist(false)
     out
   }
@@ -2129,15 +2123,15 @@ object NorthStar {
     * PER event_type — all (type, quantile) pairs refined in ONE
     * shared loop via conditional-column pivot over the multi-column
     * core; the per-key percentile dashboards serve everywhere. */
-  def typeValueQuantiles(spark: SparkSession, d: String): DataFrame = {
+  def typeValueQuantiles(spark: SparkSession, d: String): DataFrame =
+      Pin.scope {
     import spark.implicits._
     // pinned narrow base (round 17): the per-group refinement's range
     // compares otherwise inline the round()·cast derivation per
     // compare — the quantileDrift/exactQuantiles pin, same trade
-    val ev = Tables.events(spark, d)
+    val ev = Pin(Tables.events(spark, d)
       .select($"event_type",
-        round($"value" * 100, 0).cast("long").as("cents"))
-      .localCheckpoint(true)
+        round($"value" * 100, 0).cast("long").as("cents")))
     Profiling.exactQuantilesByGroup(ev, "event_type", "cents",
         Seq(0.5, 0.9), fanout = 65536)
       .orderBy($"group", $"q")
@@ -3205,7 +3199,7 @@ object NorthStar {
     * (chain fringes peel off) with their in-core degree — where
     * cluster-collapse dedup is safe; fail-fast peel within 8 rounds,
     * the oracle unrolls exactly 8. */
-  def dupGraphKCore(spark: SparkSession, d: String): DataFrame = {
+  def dupGraphKCore(spark: SparkSession, d: String): DataFrame = Pin.scope {
     import spark.implicits._
     Graph.kCore(Dedup.jaccardPairs(Tables.documents(spark, d), 0.5),
         2, 8, "doc_a", "doc_b")
@@ -3361,7 +3355,7 @@ object NorthStar {
     * a near-dup neighbor have no edge and (as before) no row.
     * n_members counts EXPANDED docs, so it is the community's true
     * corpus mass, copies included. */
-  def dupCommunities(spark: SparkSession, d: String): DataFrame = {
+  def dupCommunities(spark: SparkSession, d: String): DataFrame = Pin.scope {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val wTxt = Window.partitionBy($"text")
@@ -3386,12 +3380,11 @@ object NorthStar {
     val expanded = mapped
       .join(lpa.unionByName(famOnly), "keep_id")
       .select($"doc_id".as("node"), $"community")
-    val out = expanded
+    val out = Pin(expanded
       .join(expanded.groupBy($"community")
         .agg(count(lit(1)).as("n_members")), "community")
       .select($"node", $"community", $"n_members")
-      .orderBy($"node")
-      .localCheckpoint(true) // pin before releasing the text cache
+      .orderBy($"node")) // pin before releasing the text cache
     mapped.unpersist(false)
     out
   }

@@ -3,9 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Pin, Similarity}
 import graft.sources.ManifestTable
 
 /** X7 capstone — the full gated-ingest pipeline as ONE `foreachBatch`
@@ -128,7 +127,7 @@ object GatedIngest {
       // ---- gate 1: exact + near text dedup against the accepted corpus
       val textSurvivors = textGate(accepted, textIndexDir, inBatch,
         textThreshold)
-      // a probe of accepted returns a localCheckpoint
+      // a probe of accepted returns a pin
       if (accepted.isDefined) pinned = Some(textSurvivors)
       // ---- gate 2: semantic dedup in frozen-codebook cells
       val centroids = codebook(centroidDir, accepted.isEmpty, acceptedDir,
@@ -162,8 +161,7 @@ object GatedIngest {
       catchUpIndex(spark, acceptedDir, textIndexDir)
     } finally {
       if (assigned != null) assigned.unpersist(false)
-      // RDD-level: a localCheckpoint lives outside the CacheManager
-      pinned.flatMap(ColumnBridge.persistedRdd).foreach(_.unpersist(false))
+      Pin.release(pinned.toSeq: _*)
       if (inBatch != null) inBatch.unpersist(false)
       batchP.unpersist(false)
     }

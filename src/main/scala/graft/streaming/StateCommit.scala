@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 
+import graft.operators.Pin
 import graft.sources.ManifestTable
 
 /** Shared commit protocol for the incremental state maintainers
@@ -17,7 +18,7 @@ import graft.sources.ManifestTable
   * is NOT usable here). The txn marker rides every attempt and is
   * re-checked inside the commit's critical section, so a replayed batch
   * racing its own retry is still exactly-once. The batch state is
-  * pinned eagerly (localCheckpoint) before the loop: attempts re-merge
+  * pinned ([[Pin]]) before the loop: attempts re-merge
   * the |keys|-row state, never re-scan the micro-batch. */
 object StateCommit {
 
@@ -32,7 +33,7 @@ object StateCommit {
     val spark = bState.sparkSession
     ManifestTable.create(stateDir)
     if (ManifestTable.hasCommittedTxn(stateDir, txn)) return
-    val pinned = bState.localCheckpoint(true)
+    val pinned = Pin(bState)
     try {
       var attempt = 0
       var done = false
@@ -52,15 +53,9 @@ object StateCommit {
         }
       }
     } finally
-      // release the pinned blocks once the commit loop exits (success
-      // or throw): the committed snapshot is on disk, so the
-      // checkpointed RDD is dead weight — on a long-lived stream the
-      // per-micro-batch pins would otherwise accumulate in executor
-      // storage until the driver GCs the DataFrame (ADVICE r12).
-      // RDD-level unpersist, NOT DataFrame.unpersist: localCheckpoint
-      // storage lives on the RDD, outside the CacheManager that
-      // DataFrame.unpersist clears.
-      org.apache.spark.sql.graft.ColumnBridge.persistedRdd(pinned)
-        .foreach(_.unpersist(false))
+      // release the pin once the commit loop exits (success or throw):
+      // the committed snapshot is on disk, and on a long-lived stream the
+      // per-micro-batch pins would otherwise pile up in executor storage
+      Pin.release(pinned)
   }
 }

@@ -26,30 +26,35 @@ object ColumnBridge {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 
-  /** The persisted RDD backing a localCheckpoint'd DataFrame — lets
-    * iterative loops unpersist the PREVIOUS generation's blocks
-    * explicitly instead of waiting for GC + ContextCleaner. */
+  /** The RDD of `df`'s first RDD leaf: for a pinned frame, the RDD that
+    * holds the pin's blocks (see [[graft.operators.Pin]]). */
   def persistedRdd(df: org.apache.spark.sql.DataFrame)
       : Option[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed.collectFirst {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }
 
-  /** Rewrap a (typically checkpointed) DataFrame's physical RDD as a
-    * FRESH LogicalRDD with NO inherited statistics. `localCheckpoint`
-    * preserves the origin plan's stats estimate — inside an iterative
-    * loop each round's joins then compound the carried estimate
-    * (sizeInBytes digits GROW ~3x per round; by round ~15 Catalyst's
-    * join-size BigInt products have millions of digits and planning
-    * grinds to a halt in BigInteger.multiply). Resetting to the default
-    * size estimate keeps planning O(1) per round. */
+  /** A pinned frame rewrapped over the same RDD, with the same output
+    * partitioning and ordering, and an estimate that is the bytes its
+    * blocks hold: the stats rule of [[graft.operators.Pin.loop]]'s
+    * generations, explained there. */
   def resetStats(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.storage.RDDBlockId
     val spark = df.sparkSession
       .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val l = df.queryExecution.analyzed
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+    // the block manager master learns each block's size before its task
+    // ends, so after the pin's eager job every block is counted
+    val bytes = org.apache.spark.SparkEnv.get.blockManager.master
+      .getStorageStatus.iterator.flatMap(_.rddBlocks).collect {
+        case (RDDBlockId(id, _), b) if id == l.rdd.id => b.memSize + b.diskSize
+      }.sum
     org.apache.spark.sql.classic.Dataset.ofRows(spark,
-      org.apache.spark.sql.execution.LogicalRDD(
-        df.queryExecution.analyzed.output,
-        df.queryExecution.toRdd)(spark))
+      org.apache.spark.sql.execution.LogicalRDD(l.output, l.rdd,
+        l.outputPartitioning, l.outputOrdering, l.isStreaming)(spark,
+        Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(
+          sizeInBytes = BigInt(bytes)))))
   }
 }

@@ -22,15 +22,4 @@ class SkewSpec extends SparkSpec {
       .collect().map(_.toString).sorted.toSeq
     assert(salted == plain)
   }
-
-  test("saltedCountDistinct equals plain countDistinct") {
-    import spark.implicits._
-    val li = graft.Tables.lineitem(spark, sf)
-    val plain = li.groupBy($"l_returnflag")
-      .agg(countDistinct($"l_partkey").as("n"))
-      .as[(String, Long)].collect().toMap
-    val salted = Salt.saltedCountDistinct(li, "l_returnflag", "l_partkey", 8)
-      .as[(String, Long)].collect().toMap
-    assert(salted == plain)
-  }
 }

@@ -5,9 +5,11 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.SparkSpec
+import graft.operators.Pin
 import graft.sources.ManifestTable
 
 /** The end-to-end gated-ingest pipeline (VERDICT r6 #7): file-drop →
@@ -319,5 +321,37 @@ class GatedIngestSpec extends SparkSpec {
     assert(acceptedIds(accepted) == Set(1L, 2L, 3L))
     val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
     assert(left.isEmpty, left.values.mkString("; "))
+  }
+
+  test("a scope that closes leaves another thread's open-scope pin alone") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    def persisted(df: DataFrame): Boolean =
+      ColumnBridge.persistedRdd(df).exists(r =>
+        spark.sparkContext.getPersistentRDDs.contains(r.id))
+    val (pinned, closing) = (new CountDownLatch(1), new CountDownLatch(1))
+    @volatile var theirs: DataFrame = null
+    // a stream thread's sink: a pin inside its own scope, held open
+    val stream = new Thread(() => {
+      Pin.scope {
+        theirs = Pin(spark.range(10).toDF("id"))
+        pinned.countDown()
+        closing.await()
+        spark.range(1).toDF("id")
+      }: Unit
+    })
+    stream.setDaemon(true)
+    stream.start()
+    try {
+      assert(pinned.await(1, TimeUnit.MINUTES))
+      var mine: DataFrame = null
+      Pin.scope {
+        mine = Pin(spark.range(5).toDF("id"))
+        spark.range(1).toDF("id")
+      }
+      assert(!persisted(mine))
+      assert(persisted(theirs))
+    } finally closing.countDown()
+    stream.join()
+    assert(!persisted(theirs))
   }
 }
