@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark entry point. Emits ONE short JSON line on the raw process
   * stdout. The line MUST stay well under ~1800 bytes: the driver captures
@@ -16,15 +15,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // JVM/codegen/scan warmup so the first timed query isn't charged for
     // session bring-up (classloading, codegen compiler, parquet footers).
     // BOTH control queries warm up untimed: the start control must be a
@@ -284,7 +275,7 @@ object Bench {
           val contNote =
             if (contended) "; window CONTENDED — numbers are noise" else ""
           val stamp = s"$mS**${r3(total)} s for $nOk queries** at " +
-            s"$sfName at local[$cpus] solo (**${r3(total / math.max(1, nOk))} " +
+            s"$sfName at local[${GraftSession.cpus}] solo (**${r3(total / math.max(1, nOk))} " +
             s"s/query**$failNote$contNote; auto-stamped by graft.Bench, " +
             s"${java.time.LocalDate.now(java.time.ZoneOffset.UTC)})"
           java.nio.file.Files.write(p,

@@ -62,14 +62,7 @@ object DemoPipeline {
     })
     val today = rest.lift(1).getOrElse("2025-10-05")
 
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
 
     mode match {
       case "streaming" => runStreaming(spark, base, today)
@@ -85,6 +78,41 @@ object DemoPipeline {
   }
 
   private val symbols = Seq("AAPL", "GOOG", "MSFT") // etl.py:205
+
+  /** The scheduler's fetch for the streaming modes: today's payloads land
+    * as `<base>/drop/<symbol>_<today>.json`, skipping files already
+    * dropped (the per-day cache semantics). Returns the drop dir. */
+  private def land(base: String, today: String): String = {
+    val drop = new java.io.File(s"$base/drop"); drop.mkdirs()
+    val landed = symbols.count { sym =>
+      val f = new java.io.File(drop, s"${sym}_$today.json")
+      val isNew = !f.exists()
+      if (isNew) java.nio.file.Files.writeString(f.toPath,
+        FakeAlphaVantageServer.fetch(sym, today))
+      isNew
+    }
+    println(s"[drop] $landed new payload files, " +
+      s"${symbols.size - landed} already present")
+    drop.getPath
+  }
+
+  /** ONE AvailableNow job over the drop dir: watermark key-dedup, then
+    * `sink` per micro-batch, checkpointed in `<base>/ckpt`. */
+  private def drain(spark: SparkSession, base: String, drop: String)
+      (sink: (DataFrame, Long) => Unit): Unit =
+    StreamingIngest.withKeyDedup(StreamingIngest.stockStream(spark, drop))
+      .writeStream
+      .outputMode(OutputMode.Append)
+      .option("checkpointLocation", s"$base/ckpt")
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(sink)
+      .start()
+      .awaitTermination()
+
+  /** Rows of the manifest table at `dir`, 0 while it has no commit. */
+  private def tableCount(spark: SparkSession, dir: String): Long =
+    if (ManifestTable.currentVersion(dir) == 0L) 0L
+    else ManifestTable.read(spark, dir)._2.count()
 
   /** The original batch pipeline (reference main() shape). */
   def runBatch(spark: SparkSession, base: String, today: String): Unit = {
@@ -340,17 +368,8 @@ object DemoPipeline {
     * ivf_centroids/ ivf_members/. */
   def runE2e(spark: SparkSession, base: String, today: String): Unit = {
     import graft.streaming.{ExperimentStateStream, IvfIndexStream, LabelStateStream}
-    // step 0a — the scheduler's fetch: today's payloads land as drop
-    // files (skip files already dropped — per-day cache semantics)
-    val drop = new java.io.File(s"$base/drop"); drop.mkdirs()
-    val landed = symbols.count { sym =>
-      val f = new java.io.File(drop, s"${sym}_$today.json")
-      val isNew = !f.exists()
-      if (isNew) java.nio.file.Files.writeString(f.toPath,
-        FakeAlphaVantageServer.fetch(sym, today))
-      isNew
-    }
-    println(s"[drop] $landed new payload files")
+    // step 0a — the scheduler's fetch
+    val drop = land(base, today)
 
     // step 0b — OFFLINE codebook training, once: the IVF serving
     // codebook is trained from the first day's batch-parsed payloads
@@ -363,7 +382,7 @@ object DemoPipeline {
       val seedDocs = StreamingIngest.stockDocForm(
         AlphaVantage.tabularize(
           spark.read.schema(AlphaVantage.payloadSchema)
-            .option("multiLine", true).json(drop.getPath)
+            .option("multiLine", true).json(drop)
             .filter(col("Meta Data").isNotNull &&
               col("`Time Series (Daily)`").isNotNull)).toDF())
       val trained = graft.operators.Similarity.kmeansCentroids(
@@ -409,23 +428,12 @@ object DemoPipeline {
       } finally batch.unpersist()
       ()
     }
-    val q = StreamingIngest.withKeyDedup(
-        StreamingIngest.stockStream(spark, drop.getPath))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(sink)
-      .start()
-    q.awaitTermination()
+    drain(spark, base, drop)(sink)
 
     // step 2 — read every state surface (the always-on dashboards:
     // state readouts, never log rescans)
-    def tableCount(dir: String): Long =
-      if (ManifestTable.currentVersion(dir) == 0L) 0L
-      else ManifestTable.read(spark, dir)._2.count()
-    println(s"[admitted] ${tableCount(s"$base/accepted")} docs in the " +
-      "accepted manifest")
+    println(s"[admitted] ${tableCount(spark, s"$base/accepted")} docs in " +
+      "the accepted manifest")
     if (ManifestTable.currentVersion(s"$base/symbol_state") > 0L)
       ManifestTable.read(spark, s"$base/symbol_state")._2
         .select(col("d"), expr("hll_sketch_estimate(sk)").as("n_symbols"))
@@ -465,15 +473,7 @@ object DemoPipeline {
     * gate_centroids/ quantile_state/ exp_state/. */
   def runMonitors(spark: SparkSession, base: String, today: String): Unit = {
     import graft.streaming.{ExperimentStateStream, KllStateStream}
-    val drop = new java.io.File(s"$base/drop"); drop.mkdirs()
-    val landed = symbols.count { sym =>
-      val f = new java.io.File(drop, s"${sym}_$today.json")
-      val isNew = !f.exists()
-      if (isNew) java.nio.file.Files.writeString(f.toPath,
-        FakeAlphaVantageServer.fetch(sym, today))
-      isNew
-    }
-    println(s"[drop] $landed new payload files")
+    val drop = land(base, today)
 
     val sink = { (batch: DataFrame, batchId: Long) =>
       batch.persist()
@@ -494,15 +494,7 @@ object DemoPipeline {
       } finally batch.unpersist()
       ()
     }
-    val q = StreamingIngest.withKeyDedup(
-        StreamingIngest.stockStream(spark, drop.getPath))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(sink)
-      .start()
-    q.awaitTermination()
+    drain(spark, base, drop)(sink)
 
     // readouts FROM the maintained states — never the log
     if (ManifestTable.currentVersion(s"$base/quantile_state") > 0L)
@@ -523,18 +515,8 @@ object DemoPipeline {
     * ckpt/ (stream checkpoint), accepted/ txtidx/ centroids/ (gated
     * admission state), symbol_state/ (per-day HLL sketch state). */
   def runStreaming(spark: SparkSession, base: String, today: String): Unit = {
-    // 1. the scheduler's fetch: today's payloads land as drop files
-    //    (skip files already dropped — the per-day cache semantics)
-    val drop = new java.io.File(s"$base/drop"); drop.mkdirs()
-    val landed = symbols.count { sym =>
-      val f = new java.io.File(drop, s"${sym}_$today.json")
-      val isNew = !f.exists()
-      if (isNew) java.nio.file.Files.writeString(f.toPath,
-        FakeAlphaVantageServer.fetch(sym, today))
-      isNew
-    }
-    println(s"[drop] $landed new payload files, " +
-      s"${symbols.size - landed} already present")
+    // 1. the scheduler's fetch
+    val drop = land(base, today)
 
     // 2. ONE AvailableNow job: watermark key-dedup, then the composite
     //    sink — gated admission + sketch-state maintenance, each with
@@ -548,21 +530,11 @@ object DemoPipeline {
         batch.select(xxhash64(col("symbol")).as("user_id"),
           col("date").cast("timestamp").as("ts")), batchId)
     }
-    val q = StreamingIngest.withKeyDedup(
-        StreamingIngest.stockStream(spark, drop.getPath))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(sink)
-      .start()
-    q.awaitTermination()
+    drain(spark, base, drop)(sink)
 
     // 3. inspect both state surfaces
-    val accepted =
-      if (ManifestTable.currentVersion(s"$base/accepted") == 0L) 0L
-      else ManifestTable.read(spark, s"$base/accepted")._2.count()
-    println(s"[admitted] $accepted docs in the accepted manifest")
+    println(s"[admitted] ${tableCount(spark, s"$base/accepted")} docs in " +
+      "the accepted manifest")
     if (ManifestTable.currentVersion(s"$base/symbol_state") > 0L)
       ManifestTable.read(spark, s"$base/symbol_state")._2
         .select(col("d"), expr("hll_sketch_estimate(sk)").as("n_symbols"))

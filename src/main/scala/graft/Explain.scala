@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` for headline queries → EXPLAIN.md, the
   * plan-quality evidence backing README's 100 TB notes (pushed filters,
   * pruned read schemas, broadcast joins, TakeOrderedAndProject, exchanges
@@ -12,14 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     // Inclusion rule (VERDICT r8 #3, hardened r16): EVERY oracled query
     // appears — the list is DERIVED from SparkEntry.queries (numeric
     // order), never hand-maintained, so it cannot drift as queries are

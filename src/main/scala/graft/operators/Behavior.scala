@@ -216,7 +216,7 @@ object Behavior {
 
   /** Merge two [[dauState]] tables (e.g. yesterday's persisted state +
     * today's batch state): sketch union per day — the mergeable-state
-    * algebra made explicit, same contract as [[Learn.mergeTrendStats]].
+    * algebra made explicit, as [[Learn.trendStats]] states add.
     * Spec-pinned: estimates from merge(any split) == full rebuild. */
   def mergeDauState(a: DataFrame, b: DataFrame): DataFrame =
     a.unionByName(b).groupBy(col("d"))
@@ -345,8 +345,8 @@ object Behavior {
 
   /** The mergeable per-user state behind [[cupedWelchT]]: (v, u, x,
     * y) with x = pre-period cents (day < splitDay), y = post-period
-    * cents — both sums, so batch states ADD ([[mergeCupedState]]),
-    * the [[experimentState]] pattern with a second period column.
+    * cents — both sums, so batch states add, the [[experimentState]]
+    * pattern with a second period column.
     * NULL-day rows (NULL ts) are dropped — a row with no day belongs
     * to no period. */
   def cupedState(events: DataFrame, user: String, ts: String,
@@ -362,13 +362,6 @@ object Behavior {
           lit(0L)).as("x"),
         coalesce(sum(when(col("d") >= splitDay, col("cents"))),
           lit(0L)).as("y"))
-
-  /** Exact merge of two [[cupedState]] frames — both period sums
-    * add; split-batch merge == full rebuild (spec-pinned). */
-  def mergeCupedState(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b)
-      .groupBy(col("v"), col("u"))
-      .agg(sum(col("x")).as("x"), sum(col("y")).as("y"))
 
   /** [[cupedWelchT]]'s readout over an ALREADY-MAINTAINED (v, u, x,
     * y) state frame — identical plan tail (and so identical values)

@@ -108,8 +108,8 @@ object Learn {
   /** The five sufficient statistics of [[groupTrend]] as a MERGEABLE
     * state table (key, n_obs, sx, sy, sxy, sxx): all 64-bit integer
     * sums, so partial states built from ANY split of the corpus merge
-    * exactly by component-wise addition ([[mergeTrendStats]]) — the
-    * map-side-combine algebra made explicit as data. This is the
+    * exactly by component-wise addition — the map-side-combine algebra
+    * made explicit as data. This is the
     * incremental-maintenance form a daily pipeline wants: persist
     * yesterday's per-key stats, fold in today's batch (batch-sized
     * work), derive slopes with [[trendOf]] — never rescan history. */
@@ -125,13 +125,6 @@ object Learn {
         sum(col("x") * col("y")).as("sxy"),
         sum(col("x") * col("x")).as("sxx"))
   }
-
-  /** Exact merge of two [[trendStats]] states — integer sums add. */
-  def mergeTrendStats(a: DataFrame, b: DataFrame, key: String): DataFrame =
-    a.unionByName(b).groupBy(col(key)).agg(
-      sum(col("n_obs")).as("n_obs"),
-      sum(col("sx")).as("sx"), sum(col("sy")).as("sy"),
-      sum(col("sxy")).as("sxy"), sum(col("sxx")).as("sxx"))
 
   /** Slope/mean derivation from a [[trendStats]] state — per-group
     * arithmetic on exact integers; the only float ops are the final

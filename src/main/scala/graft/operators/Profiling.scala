@@ -56,7 +56,7 @@ object Profiling {
 
   /** Join-key skew diagnostic — the "should I salt this join?" query an
     * operator library must answer about ITSELF ([[Salt.saltedJoin]] and
-    * [[Similarity.semDedupAutoSalt]] are the mitigations; this is the
+    * [[Similarity.semDedupSalted]] are the mitigations; this is the
     * detector): per-key row counts in one hash aggregate (map-side
     * partials — the count table is keys-sized, not rows-sized), then the
     * top-`topK` heaviest keys with their integer µ-share of all rows and

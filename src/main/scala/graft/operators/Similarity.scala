@@ -333,29 +333,6 @@ object Similarity {
         when(col("d").isNull, 1).otherwise(0).as("kept"))
   }
 
-  /** [[semDedupSalted]] applied ONLY where it pays: one cheap
-    * (cell, count) aggregation flags cells above `hotCellSize`; the
-    * pairwise scoring runs SALTED for those cells and takes
-    * [[semDedup]]'s plain plan for everything else, and the two
-    * decisions union — identical output (pairs never cross cells, so
-    * partitioning the corpus by hotness partitions the pair space
-    * exactly), with the salt's a-side replication cost confined to the
-    * hot cells. This is the production shape at 100 TB: the count agg
-    * is the same probe [[semDedup]]'s cellCap guard runs, the hot set
-    * is cell-cardinality-sized (broadcast), and a handful of hot cells
-    * no longer serialize the whole job. */
-  def semDedupAutoSalt(emb: DataFrame, cellCol: String, threshold: Double,
-      hotCellSize: Long, salt: Int): DataFrame = {
-    require(hotCellSize >= 1 && salt >= 1,
-      s"hotCellSize=$hotCellSize salt=$salt")
-    val hot = emb.groupBy(col(cellCol)).agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > hotCellSize).select(col(cellCol))
-    val cold = emb.join(broadcast(hot), Seq(cellCol), "left_anti")
-    val hotEmb = emb.join(broadcast(hot), Seq(cellCol), "left_semi")
-    semDedup(cold, cellCol, threshold)
-      .unionByName(semDedupSalted(hotEmb, cellCol, threshold, salt))
-  }
-
   /** Deterministic distributed Lloyd's k-means ASSIGNMENT after `iters`
     * update steps — the trained coarse quantizer behind [[ivfTopKWith]]
     * and [[semDedup]] cells (per-label means stand in elsewhere; this is
@@ -1521,8 +1498,7 @@ object Similarity {
       cents: Array[(Long, Array[Double])],
       nProbe: Int, nQueries: Int, k: Int): DataFrame = {
     // validate BEFORE the eager assignment pin below, so a bad k/nProbe
-    // fails in microseconds instead of after a full argmin pass; the
-    // same requires stay in ivfServingTail for the FromIndex path
+    // fails in microseconds instead of after a full argmin pass
     require(nProbe >= 1 && nQueries >= 1,
       s"nProbe=$nProbe nQueries=$nQueries")
     require(k >= 1 && k <= NdcgDiscMicro.size,
@@ -1537,29 +1513,28 @@ object Similarity {
         asDouble(col("embedding")).as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
       .withColumn("cid", argminStruct(col("v"), cents).getField("cid")))
-    ivfServingTail(base, cents, nProbe, nQueries, k)
-  }
-
-  /** [[ivfRankingMetricsWith]] over an ALREADY-ASSIGNED member index
-    * (vec_id, label, embedding, cid) — the [[graft.streaming
-    * .IvfIndexStream]]-MAINTAINED ManifestTable read straight into
-    * serving: zero assignment work in-query (the maintained index IS
-    * the pinned frame the With-form materializes). Because assignment
-    * against a frozen codebook is a pure per-row function, the
-    * readout is value-identical to rebuilding the assignments from
-    * the raw corpus — q267's serve==rebuild invariant lifted to the
-    * ranking-metric level (spec-pinned through a real MemoryStream).
-    * This closes the train (q136) / serve (q309) / append (q267) /
-    * monitor (q186) loop into one always-on path: train offline,
-    * stream-append members, serve metrics off the maintained index,
-    * rebuild on drift. */
-  def ivfRankingMetricsFromIndex(members: DataFrame,
-      cents: Array[(Long, Array[Double])],
-      nProbe: Int, nQueries: Int, k: Int): DataFrame = {
-    val base = members.select(col("vec_id"), col("label"),
-        asDouble(col("embedding")).as("v"), col("cid"))
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-    ivfServingTail(base, cents, nProbe, nQueries, k)
+    val spark = base.sparkSession
+    val qs = base.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("qid"), col("label").as("qlab"),
+        col("v").as("qv"), col("nrm").as("qnrm"))
+    val labCounts = base.groupBy(col("label").as("qlab"))
+      .agg(count(lit(1)).as("n_lab"))
+    val probed = centroidsDF(spark, cents).crossJoin(broadcast(qs))
+      .select(col("qid"), col("cid"),
+        (dot(col("c"), col("qv")) /
+          (sqrt(dot(col("c"), col("c"))) * col("qnrm"))).as("ccos"))
+      .withColumn("rk", row_number().over(Window.partitionBy(col("qid"))
+        .orderBy(col("ccos").desc, col("cid"))))
+      .filter(col("rk") <= nProbe).select(col("qid"), col("cid"))
+    val scored = Par.fanOut(base).join(broadcast(probed), "cid")
+      .join(broadcast(qs), "qid")
+      .filter(col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("qlab"),
+        (col("label") === col("qlab")).cast("int").as("rel"),
+        round(dot(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 4)
+          .as("cos"),
+        col("vec_id").as("nid"))
+    rankingMetricsTail(scored, labCounts, k)
   }
 
   /** IVF RANGE (RADIUS) SEARCH — the "everything within cosine ≥ τ"
@@ -1680,40 +1655,5 @@ object Similarity {
       ManifestTable.overwriteWithRetry(spark, memberDir, reassigned,
         txn = Some(txnId))
     } finally Pin.release(reassigned)
-  }
-
-  /** Shared serving tail of [[ivfRankingMetricsWith]] /
-    * [[ivfRankingMetricsFromIndex]]: from the assigned member frame
-    * (vec_id, label, v, nrm, cid) — fixed-query probe selection,
-    * cell-bounded candidate scoring, ranking-metric readout. */
-  private def ivfServingTail(base: DataFrame,
-      cents: Array[(Long, Array[Double])],
-      nProbe: Int, nQueries: Int, k: Int): DataFrame = {
-    require(nProbe >= 1 && nQueries >= 1,
-      s"nProbe=$nProbe nQueries=$nQueries")
-    require(k >= 1 && k <= NdcgDiscMicro.size,
-      s"k=$k (discount table covers 1..${NdcgDiscMicro.size})")
-    val spark = base.sparkSession
-    val qs = base.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("label").as("qlab"),
-        col("v").as("qv"), col("nrm").as("qnrm"))
-    val labCounts = base.groupBy(col("label").as("qlab"))
-      .agg(count(lit(1)).as("n_lab"))
-    val probed = centroidsDF(spark, cents).crossJoin(broadcast(qs))
-      .select(col("qid"), col("cid"),
-        (dot(col("c"), col("qv")) /
-          (sqrt(dot(col("c"), col("c"))) * col("qnrm"))).as("ccos"))
-      .withColumn("rk", row_number().over(Window.partitionBy(col("qid"))
-        .orderBy(col("ccos").desc, col("cid"))))
-      .filter(col("rk") <= nProbe).select(col("qid"), col("cid"))
-    val scored = Par.fanOut(base).join(broadcast(probed), "cid")
-      .join(broadcast(qs), "qid")
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("qlab"),
-        (col("label") === col("qlab")).cast("int").as("rel"),
-        round(dot(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 4)
-          .as("cos"),
-        col("vec_id").as("nid"))
-    rankingMetricsTail(scored, labCounts, k)
   }
 }

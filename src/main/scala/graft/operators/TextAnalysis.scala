@@ -515,40 +515,14 @@ object TextAnalysis {
     * the SAME corpus, its distinct-gram set is corpus-PROPORTIONAL, so
     * no broadcast hint is forced — AQE broadcasts iff the built side is
     * actually small at runtime (ADVICE r6; a forced broadcast of a
-    * third of all 8-grams would OOM the driver at corpus scale). When
-    * the eval set is a genuinely benchmark-sized external table, use
-    * [[decontaminateAgainst]], where the forced broadcast IS the
-    * contract. Emits every train doc (zeros included) so the result is
-    * a total report, not just the hit list. */
+    * third of all 8-grams would OOM the driver at corpus scale). Emits
+    * every train doc (zeros included) so the result is a total report,
+    * not just the hit list. */
   def decontaminate(docs: DataFrame, n: Int, evalEvery: Int,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(n >= 1 && evalEvery >= 2, s"n=$n evalEvery=$evalEvery")
     val isEval = col(idCol) % evalEvery === 0
-    sharedGramReport(docs.filter(!isEval), docs.filter(isEval), n,
-      textCol, idCol, forceBroadcast = false)
-  }
-
-  /** Decontamination against an EXPLICIT eval/benchmark table — the
-    * production shape: `evalDocs` is a held-out benchmark (thousands of
-    * documents, independent of the train corpus), so its distinct-gram
-    * MD5 set is benchmark-sized and is force-BROADCAST; training text
-    * fans out to (doc_id, gram-hash) pairs map-side, dies or survives
-    * against the broadcast set without shuffling any text, and only the
-    * surviving narrow (doc_id, hash) pairs reach the per-doc distinct
-    * count — the op's single real shuffle is proportional to the
-    * CONTAMINATION, not the corpus. */
-  def decontaminateAgainst(train: DataFrame, evalDocs: DataFrame, n: Int,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    require(n >= 1, s"n=$n")
-    sharedGramReport(train, evalDocs, n, textCol, idCol,
-      forceBroadcast = true)
-  }
-
-  /** Shared core of the two decontamination forms: count, per train
-    * doc, the distinct n-gram hashes shared with the eval side. */
-  private def sharedGramReport(train: DataFrame, evalDocs: DataFrame,
-      n: Int, textCol: String, idCol: String,
-      forceBroadcast: Boolean): DataFrame = {
+    val train = docs.filter(!isEval)
     def grams(df: DataFrame): DataFrame = {
       val toks = split(col(textCol), " ")
       df.select(col(idCol).as("doc_id"),
@@ -557,11 +531,9 @@ object TextAnalysis {
               p => md5(array_join(slice(toks, p, lit(n)), " "))))
             .otherwise(array().cast("array<string>"))).as("h"))
     }
-    val distinctEval = grams(evalDocs).select(col("h")).distinct()
-    val evalGrams =
-      if (forceBroadcast) broadcast(distinctEval) else distinctEval
     val shared = grams(train)
-      .join(evalGrams, Seq("h"), "left_semi")
+      .join(grams(docs.filter(isEval)).select(col("h")).distinct(),
+        Seq("h"), "left_semi")
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("h")).as("n_shared"))
     train.select(col(idCol).as("doc_id"))

@@ -11,7 +11,8 @@
   *    rows-only). [[graft.Verify]] dumps results for the oracle gate,
   *    [[graft.Bench]] emits the one-line bench JSON, [[graft.Explain]]
   *    regenerates EXPLAIN.md, [[graft.DemoPipeline]] runs the reference's
-  *    `main()` end-to-end.
+  *    `main()` end-to-end. Every main builds its session through
+  *    [[graft.GraftSession]].
   *  - [[graft.queries]] — one object per operator family (Relational,
   *    Windows, SetsAndAggs, Scalars, Temporal, Advanced, SqlSurface,
   *    NorthStar) wiring the library into oracled queries.
@@ -22,15 +23,15 @@
   *  - [[graft.functions]] — CandleAggregator (typed two-phase UDAF) and
   *    Money (exact integer-cents aggregation).
   *  - [[graft.plans]] — custom Catalyst expressions (codegen'd DotProduct,
-  *    SimHash64, RollingHash) as SQL functions, the native as-of join,
-  *    and their SparkSessionExtensions wiring.
+  *    SimHash64, RollingHash) as SQL functions and the native as-of join,
+  *    both put on a session by `GraftFunctions.install`.
   *  - [[graft.sources]] — RawCache (cache-or-fetch, with the
   *    FakeAlphaVantageServer fetch stub), AlphaVantage ingest
   *    (schema-on-read, quarantine), Parquet/Jdbc warehouses (DECIMAL
   *    at-rest, append of new keys only), ManifestTable, RunLog.
-  *  - [[graft.streaming]] — file-drop ingest with exactly-once checkpoint
-  *    and `maxFilesPerTrigger` throttling, gated admission into
-  *    ManifestTable, watermarked dedup, windowed aggs,
-  *    flatMapGroupsWithState sessionizer, stream-static enrichment.
+  *  - [[graft.streaming]] — the file-drop stock stream with
+  *    `maxFilesPerTrigger` throttling and watermarked key dedup, gated
+  *    admission into ManifestTable (GatedIngest), and the txn-marked
+  *    state streams DemoPipeline's monitors and queries maintain.
   */
 package object graft

@@ -12,7 +12,8 @@ import org.apache.spark.sql.graft.ColumnBridge
 
 /** NATIVE as-of join: a whole-operator Catalyst extension (the §4.2
   * preference-ladder tier (c): custom LogicalPlan + SparkStrategy +
-  * SparkPlan, registered via SparkSessionExtensions / extraStrategies).
+  * SparkPlan, installed on the session's extra strategies by
+  * [[GraftFunctions.install]]).
   *
   * Semantics (identical to [[graft.operators.AsOfJoin.asOf]], the
   * union+window formulation, and — on null-free keys — to DuckDB
@@ -158,18 +159,14 @@ case class AsOfJoinExec(
 }
 
 /** User-facing entry: build the logical node from two DataFrames. The
-  * strategy is registered on the session's experimental strategies if not
-  * already present (equivalently, `GraftExtensions` wires it via
-  * `spark.sql.extensions`). */
+  * strategy is installed on the session ([[GraftFunctions.install]]) if
+  * it is not there yet. */
 object AsOfJoinNative {
   def asOf(leftDf: DataFrame, rightDf: DataFrame, key: String,
       leftTs: String, rightTs: String, payload: Seq[String],
       prefix: String = "asof_"): DataFrame = {
     val spark: SparkSession = leftDf.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
+    GraftFunctions.install(spark)
     val lPlan = ColumnBridge.analyzedPlan(leftDf)
     val rPlan0 = ColumnBridge.analyzedPlan(rightDf)
     // Self-derived right sides share attribute exprIds with the left (the

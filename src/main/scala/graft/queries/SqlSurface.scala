@@ -73,16 +73,16 @@ object SqlSurface {
   }
 
   /** §2.11 named SQL functions: the custom Catalyst expressions
-    * (`rolling_hash`, `dot_product`) called FROM SQL TEXT — the surface a
-    * `spark.sql.extensions=graft.plans.GraftExtensions` deployment gets at
-    * session build, here registered on the live session
-    * ([[graft.plans.GraftFunctions.register]], idempotent). The query
+    * (`rolling_hash`, `dot_product`) called FROM SQL TEXT. Every
+    * [[graft.GraftSession]] has them; the query installs them itself
+    * ([[graft.plans.GraftFunctions.install]], idempotent) so it also runs
+    * on a session built elsewhere. The query
     * fingerprints each doc and self-scores its embedding-table twin
     * (dot_product of vec `doc_id % |embeddings|` with itself = ‖v‖²),
     * proving both expressions resolve, codegen, and agree with the
     * column-API path. */
   def sqlCustomFunctions(spark: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
+    graft.plans.GraftFunctions.install(spark)
     registerViews(spark, d)
     spark.sql(
       """WITH n AS (SELECT count(*) AS cnt FROM embeddings)

@@ -83,8 +83,8 @@ object IndexStore {
     * change, so the sample catches realistic rewrites at the cost of one
     * 16-byte read per file. The residual hole — a rewrite preserving size
     * AND the final 16 bytes AND the mtime tick — is adversarial, not
-    * operational; where even that matters, store the source as a
-    * [[ManifestTable]] and use [[tableFingerprint]] (exact by
+    * operational; where even that matters, fingerprint a
+    * [[ManifestTable]] source by its committed version (exact by
     * construction). */
   def sourceFingerprint(sourceDir: String, tags: String*): String = {
     val root = Paths.get(sourceDir)
@@ -119,18 +119,6 @@ object IndexStore {
       md.update((l + "\n").getBytes(StandardCharsets.UTF_8)))
     md.digest().map("%02x".format(_)).mkString
   }
-
-  /** Fingerprint for a source that is ITSELF a [[ManifestTable]]: the
-    * committed snapshot version plus derivation tags. Exact where
-    * [[sourceFingerprint]] is conservative — no file listing, no mtimes;
-    * the index invalidates precisely when the source table commits (and a
-    * compaction, which rewrites files without changing rows, still bumps
-    * the version — a false rebuild, never a stale read). This is the
-    * production wiring: when the corpus lives in a manifest table, derive
-    * the index fingerprint from the same snapshot the probe reads. */
-  def tableFingerprint(sourceTableDir: String, tags: String*): String =
-    (s"manifest-v${ManifestTable.currentVersion(sourceTableDir)}" +: tags)
-      .mkString(";")
 
   /** True iff `dir` holds a committed index built from `fingerprint`
     * UNDER the current physical layout — an unstamped or

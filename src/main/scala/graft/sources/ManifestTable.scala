@@ -177,7 +177,7 @@ object ManifestTable {
   /** The files snapshot `v` holds beyond snapshot `base`: Some(added) iff
     * both manifests are still retained and `v` kept every file of `base`
     * (only appends committed in between); None after any rewrite
-    * (compact, merge, delete, overwrite) or a [[vacuum]] of `base`. */
+    * (compact, z-order, overwrite) or a [[vacuum]] of `base`. */
   def filesAddedSince(dir: String, base: Long, v: Long): Option[Seq[String]] =
     if (!Files.exists(manifestPath(dir, base)) || !Files.exists(manifestPath(dir, v))) None
     else {
@@ -365,7 +365,7 @@ object ManifestTable {
   }
 
   /** True iff a committed snapshot ≤ CURRENT carries `#txn=<txn>` — the
-    * idempotence check for [[streamingSink]].
+    * idempotence check of a txn-marked commit ([[append]]'s `txn`).
     *
     * Fast path, O(1): every commit carries forward a per-stream
     * high-water summary (`#txnhw=<streamId>:<maxBatchId>` lines, one per
@@ -402,7 +402,7 @@ object ManifestTable {
   }
 
   /** `<streamId>-<batchId>` split at the LAST '-' (stream ids may contain
-    * dashes; batch ids are the digits [[streamingSink]] appends). */
+    * dashes; batch ids are the trailing digits). */
   private def txnStreamBatch(txn: String): Option[(String, Long)] = {
     val i = txn.lastIndexOf('-')
     if (i <= 0 || i == txn.length - 1) None
@@ -455,8 +455,10 @@ object ManifestTable {
     * version the caller based its write on. `txn`, when set, is recorded
     * IN the committed manifest (so the commit and its idempotence marker
     * are one atomic unit) and the commit becomes a NO-OP if that txn is
-    * already committed — the exactly-once primitive [[streamingSink]]
-    * builds on. */
+    * already committed — the exactly-once primitive a streaming sink
+    * builds on: commit each micro-batch with `txn = <streamId>-<batchId>`,
+    * where `streamId` is stable across restarts and unique per writing
+    * query. */
   def append(spark: SparkSession, dir: String, df: DataFrame,
       expectedVersion: Long, txn: Option[String] = None): Long =
     commit(dir, expectedVersion, keepOld = true, txn) { staging =>
@@ -490,8 +492,7 @@ object ManifestTable {
   }
 
   /** [[overwrite]] with the optimistic-retry loop of [[appendWithRetry]].
-    * Retried overwrites simply replace whatever won in between — callers
-    * wanting merge semantics use [[mergeWithRetry]]. */
+    * Retried overwrites simply replace whatever won in between. */
   def overwriteWithRetry(spark: SparkSession, dir: String, df: DataFrame,
       maxRetries: Int = 10, txn: Option[String] = None): Long =
     retrying(maxRetries)(overwrite(spark, dir, df, currentVersion(dir), txn))
@@ -560,170 +561,6 @@ object ManifestTable {
     }
   }
 
-  /** Copy-on-write MERGE (upsert): rows of `updates` whose key matches an
-    * existing row REPLACE it; unmatched keys are INSERTED — `MERGE WHEN
-    * MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`, the
-    * Delta/Iceberg workhorse, at FILE granularity:
-    *
-    *   1. locate the data files that contain a matched key (semi-join on
-    *      the key; at cluster scale a file-stats min/max prescreen would
-    *      run first — the manifest is where those stats would live);
-    *   2. rewrite ONLY those files: their non-matched rows + ALL update
-    *      rows become new part files;
-    *   3. commit manifest N+1 = (old files − affected) ∪ new files. Files
-    *      without a matched key are carried BY REFERENCE — a merge
-    *      touching 1% of files rewrites 1% of the table.
-    *
-    * The affected-file list is driver-side (collect) — that is O(files),
-    * the same order as the manifest itself, not O(rows).
-    *
-    * Updates must be unique per key (a multi-source MERGE is ambiguous —
-    * which update wins? — so it is rejected, as in Delta). Any concurrent
-    * commit aborts the merge (version CAS); unlike [[append]], blind
-    * retry is NOT safe — [[mergeWithRetry]] re-plans from the fresh
-    * snapshot each attempt. (Delta narrows this with logical conflict
-    * detection — concurrent DISJOINT commits can both win; version-CAS is
-    * the conservative end of the same protocol.)
-    *
-    * Returns the committed version. An empty table degenerates to append. */
-  def merge(spark: SparkSession, dir: String, updates: DataFrame,
-      keyCols: Seq[String]): Long = {
-    import org.apache.spark.sql.functions.{col, input_file_name, max, min, regexp_extract}
-    require(keyCols.nonEmpty, "merge needs at least one key column")
-    val v = currentVersion(dir)
-    val fs = files(dir, v)
-    if (fs.isEmpty) return append(spark, dir, updates, v)
-    val dupKeys = updates.groupBy(keyCols.map(col): _*).count()
-      .filter(col("count") > 1).limit(1).collect()
-    require(dupKeys.isEmpty,
-      s"updates carry duplicate keys (e.g. ${dupKeys.head}) — ambiguous merge")
-    // Manifest-stats prescreen: when the (single) merge key is a
-    // stats-tracked column, only files whose key bounds intersect the
-    // updates' [min, max] can contain a matched row — the rest never get
-    // SCANNED, not just carried. This is the promised file-stats
-    // prescreen: a merge touching one ingest-day of a date-clustered
-    // table reads one day's files, not the table. Lossless: equi-join
-    // null keys match nothing, and unbounded files stay candidates.
-    val scanFs: Seq[String] =
-      if (keyCols.size == 1 && statsColumns(dir).contains(keyCols.head)) {
-        val k = keyCols.head
-        val row = updates.agg(min(col(k)), max(col(k))).head()
-        if (row.isNullAt(0)) Seq.empty // all-null keys: nothing can match
-        else (row.get(0), row.get(1)) match {
-          case (lo: Any, hi: Any) if isRangeComparable(lo) =>
-            filesWithStats(dir, v).collect {
-              case (f, st) if st.get(k).forall(overlaps(_, lo, hi)) => f
-            }
-          case _ => fs
-        }
-      } else fs
-    if (scanFs.isEmpty) {
-      // no file can hold a matched key -> pure insert on top of the
-      // carried snapshot
-      return commit(dir, expectedVersion = v, keepOld = true, txn = None) {
-        staging => updates.write.mode("append").parquet(staging.toString)
-      }
-    }
-    val base = readFiles(spark, dir, v, scanFs)
-      .withColumn("__file", regexp_extract(input_file_name(), "[^/]+$", 0))
-    val affected = base
-      .join(updates.select(keyCols.map(col): _*).distinct(), keyCols, "left_semi")
-      .select(col("__file")).distinct()
-      .collect().map(_.getString(0)).toSet
-    val survivors = base
-      .filter(col("__file").isin(affected.toSeq: _*))
-      .join(updates.select(keyCols.map(col): _*), keyCols, "left_anti")
-      .drop("__file")
-    val newData = survivors.unionByName(updates)
-    commit(dir, expectedVersion = v, keepOld = true, txn = None,
-      removeFiles = affected) { staging =>
-      newData.write.mode("append").parquet(staging.toString)
-    }
-  }
-
-  /** Copy-on-write DELETE: rows matching `predicate` are removed, at the
-    * same file granularity as [[merge]] — only files CONTAINING a
-    * matching row are rewritten (their surviving rows become new files);
-    * files with no match are carried by reference, and a file whose rows
-    * ALL match is simply dropped from the manifest (no rewrite at all —
-    * the partition-drop fast path falls out for free when the predicate
-    * aligns with the layout, e.g. a [[graft.operators.Layout]] clustering
-    * or date-partitioned ingest). Returns the committed version;
-    * a predicate matching nothing still commits a (file-identical)
-    * snapshot — the version bump records that the delete ran. */
-  def delete(spark: SparkSession, dir: String,
-      predicate: org.apache.spark.sql.Column): Long = {
-    val v = currentVersion(dir)
-    val fs = files(dir, v)
-    if (fs.isEmpty) return commit(dir, v, keepOld = true, txn = None) { _ => () }
-    deleteScanning(spark, dir, v, fs, predicate)
-  }
-
-  /** Range DELETE with the manifest-stats prescreen — the retention
-    * pattern ("drop rows with ts in [lo, hi]") at file-skipping cost:
-    * only files whose `colName` bounds intersect the range are SCANNED
-    * for matches; everything else is carried by reference untouched. On a
-    * time-clustered 100 TB table, deleting one month reads one month.
-    * Files fully inside the range still go through the rewrite path (and
-    * usually drop whole, with no new file) because bounds cover only
-    * non-null values — a NULL row must survive any range delete, so "all
-    * rows match" can never be concluded from min/max alone. */
-  def deleteWhereBetween(spark: SparkSession, dir: String, colName: String,
-      lo: Any, hi: Any): Long = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val v = currentVersion(dir)
-    val all = filesWithStats(dir, v)
-    if (all.isEmpty) return commit(dir, v, keepOld = true, txn = None) { _ => () }
-    val scanFs =
-      if (statsColumns(dir).contains(colName) &&
-          isRangeComparable(lo) && isRangeComparable(hi))
-        all.collect {
-          case (f, st) if st.get(colName).forall(overlaps(_, lo, hi)) => f
-        }
-      else all.map(_._1)
-    if (scanFs.isEmpty) // no file can hold a matching row: version bump only
-      return commit(dir, v, keepOld = true, txn = None) { _ => () }
-    deleteScanning(spark, dir, v, scanFs,
-      col(colName).between(lit(lo), lit(hi)))
-  }
-
-  /** The shared copy-on-write delete: scan `scanFs` (a subset of snapshot
-    * `v`'s files — callers prescreen), rewrite only files containing a
-    * predicate-TRUE row, carry the rest. */
-  private def deleteScanning(spark: SparkSession, dir: String, v: Long,
-      scanFs: Seq[String],
-      predicate: org.apache.spark.sql.Column): Long = {
-    import org.apache.spark.sql.functions.{col, input_file_name, regexp_extract}
-    val base = readFiles(spark, dir, v, scanFs)
-      .withColumn("__file", regexp_extract(input_file_name(), "[^/]+$", 0))
-    val affected = base.filter(predicate)
-      .select(col("__file")).distinct()
-      .collect().map(_.getString(0)).toSet
-    // null-safe negation: DELETE removes only rows where the predicate is
-    // TRUE — a NULL predicate row survives (plain !predicate would drop it)
-    val keep = !org.apache.spark.sql.functions.coalesce(
-      predicate, org.apache.spark.sql.functions.lit(false))
-    val survivors = base
-      .filter(col("__file").isin(affected.toSeq: _*))
-      .filter(keep)
-      .drop("__file")
-    commit(dir, expectedVersion = v, keepOld = true, txn = None,
-      removeFiles = affected) { staging =>
-      // an all-matching file set can leave zero survivors: parquet still
-      // writes a schema-bearing (empty) part file only if asked — skip
-      // the write entirely and the commit is a pure manifest edit
-      if (!survivors.isEmpty)
-        survivors.write.mode("append").parquet(staging.toString)
-    }
-  }
-
-  /** [[merge]] wrapped in the optimistic-retry loop. Each retry RE-PLANS
-    * against the fresh snapshot (merge does not commute with concurrent
-    * commits the way appends do). */
-  def mergeWithRetry(spark: SparkSession, dir: String, updates: DataFrame,
-      keyCols: Seq[String], maxRetries: Int = 10): Long =
-    retrying(maxRetries)(merge(spark, dir, updates, keyCols))
-
   /** Delete data files referenced by NO manifest within the retention
     * window, drop manifests older than `retainVersions` behind CURRENT,
     * and sweep crash-orphaned `.commit_*` staging directories older than
@@ -759,40 +596,15 @@ object ManifestTable {
     dropped.length
   }
 
-  /** Exactly-once streaming sink: each micro-batch commits as one
-    * manifest version carrying a `#txn=<streamId>-<batchId>` line INSIDE
-    * the manifest, so the data and its idempotence marker become visible
-    * in the same atomic pointer swap — a crash at ANY point leaves either
-    * a fully committed batch (replay is a no-op) or no trace of it
-    * (replay commits it); there is no window where data committed but the
-    * marker didn't. This is the manifest-layer equivalent of Delta's txn
-    * action. `streamId` must be stable across restarts and UNIQUE per
-    * writing query (batch ids are per-query counters — two queries
-    * sharing a streamId would suppress each other's batches); use the
-    * query name or checkpoint path. The replay check is O(1): every
-    * commit carries a per-stream high-water summary forward in the new
-    * manifest (see [[hasCommittedTxn]]), so a long-lived stream reads one
-    * manifest per commit — never its whole history — and the summary
-    * survives [[vacuum]].
-    * Usage: `df.writeStream.foreachBatch(ManifestTable.streamingSink(dir, "myquery") _).…` */
-  def streamingSink(dir: String, streamId: String)
-      (batch: DataFrame, batchId: Long): Unit = {
-    require(!streamId.contains("\n") && streamId.nonEmpty,
-      s"streamId must be a non-empty single-line string")
-    appendWithRetry(batch.sparkSession, dir, batch,
-      txn = Some(s"$streamId-$batchId"))
-  }
-
   /** The shared commit path: stage part files, move them (immutable,
     * UUID-named — collisions impossible) into data/, write manifest
-    * N+1 = (old files if keepOld, minus `removeFiles` — [[merge]]'s
-    * rewritten set) ∪ new files (+ the txn line), CAS-check, publish. The
+    * N+1 = (old files if keepOld) ∪ new files (+ the txn line),
+    * CAS-check, publish. The
     * version check, txn no-op check, and pointer swap are under the
     * object lock — the single-JVM stand-in for the store's atomic
     * rename-if-absent. */
   private def commit(dir: String, expectedVersion: Long, keepOld: Boolean,
-      txn: Option[String], removeFiles: Set[String] = Set.empty)
-      (write: Path => Unit): Long = {
+      txn: Option[String])(write: Path => Unit): Long = {
     checkLayout(dir)
     val staging = Files.createTempDirectory(Paths.get(dir), ".commit_")
     try {
@@ -822,8 +634,7 @@ object ManifestTable {
               val st = footerStats(dataDir(dir).resolve(n), statsCols)
               if (st.isEmpty) n.toString else s"$n\t${encodeStats(st)}"
             }
-            val old = (if (keepOld) rawFileLines(dir, cur) else Seq.empty)
-              .filterNot(l => removeFiles(l.takeWhile(_ != '\t')))
+            val old = if (keepOld) rawFileLines(dir, cur) else Seq.empty
             // the schema inference would return: carried while any old
             // file stays (kept only if the new files agree), else read
             // from a new file's footer; absent = readers infer

@@ -52,8 +52,7 @@ object IvfIndexStream {
     // map-only: the vector rides along in the same projection as its
     // cell — no join-back (assignWithVec's scaladoc has the measured
     // cost of getting this wrong). A label column, when the stream
-    // carries one, rides along too: the maintained index then serves
-    // ranking-metric readouts directly (ivfRankingMetricsFromIndex).
+    // carries one, rides along too.
     val keep = if (batch.columns.contains("label")) Seq("label") else Nil
     val assigned = Similarity.assignWithVec(batch, cents, keep)
     ManifestTable.appendWithRetry(spark, memberDir, assigned,

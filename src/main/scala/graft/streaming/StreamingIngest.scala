@@ -2,28 +2,26 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
-import graft.sources.{AlphaVantage, StockDaily, StockWarehouse}
+import graft.sources.{AlphaVantage, StockDaily}
 
 /** Structured Streaming layer (SURVEY.md §2.10): the reference IS an
   * incremental, scheduled, exactly-once-per-key pipeline — these are its
-  * streaming-native equivalents.
+  * streaming-native sources and transforms.
   *
   *  - T1 daily 09:00 trigger + poll loop (etl.py:228-233) →
-  *    `Trigger.AvailableNow` fired by an external scheduler (used here), or
-  *    a long-lived `Trigger.ProcessingTime("24 hours")`.
+  *    `Trigger.AvailableNow` fired by an external scheduler (one drain
+  *    per `DemoPipeline --streaming` run).
   *  - T2 incremental file discovery (etl.py:39-45) → the file-stream source
   *    ([[stockStream]]) tracks processed files in the checkpoint; its input
   *    is the same data-lake folder `RawCache.getOrFetch` fills (S1) and
   *    `AlphaVantage.readRaw` reads in batch (S2).
   *  - T3/T5 exactly-once-per-(symbol,date) with restated history
-  *    (etl.py:127, 142) → watermarked `dropDuplicates` in-stream plus the
-  *    idempotent warehouse append in `foreachBatch`. NOTE the semantic
-  *    divergence: the reference's UNIQUE constraint never expires, the
-  *    watermark state does (7 days here) — the sink-side anti-join is what
-  *    restores never-expires semantics. The gated form, [[GatedIngest]],
-  *    commits to `ManifestTable` with the batch id as a txn marker.
+  *    (etl.py:127, 142) → watermarked `dropDuplicates` in-stream
+  *    ([[withKeyDedup]]) plus a txn-marked commit in `foreachBatch`. NOTE
+  *    the semantic divergence: the reference's UNIQUE constraint never
+  *    expires, the watermark state does (7 days here) — the sink's
+  *    persisted gates ([[GatedIngest]]) restore never-expires semantics.
   *  - T4 rate limiting (etl.py:62-63) → `maxFilesPerTrigger` throttling.
   */
 object StreamingIngest {
@@ -51,23 +49,6 @@ object StreamingIngest {
       .withWatermark("date_ts", watermark)
       .dropDuplicates(Seq("symbol", "date_ts"))
       .drop("date_ts")
-
-  /** One scheduled run: drain everything currently in the drop dir into the
-    * warehouse (AvailableNow == the reference's daily batch), idempotently
-    * via the sink's anti-join append. */
-  def runOnce(spark: SparkSession, srcDir: String, checkpoint: String,
-      warehouse: StockWarehouse): Unit = {
-    val q = withKeyDedup(stockStream(spark, srcDir))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        warehouse.append(batch)
-      }
-      .start()
-    q.awaitTermination()
-  }
 
   /** StockDaily rows → the gated-admission (doc_id, text, embedding)
     * doc form ([[GatedIngest]]'s input contract): id and text are pure
@@ -97,123 +78,4 @@ object StreamingIngest {
         col("close") - col("low"), col("high") - col("close"),
         col("volume") / org.apache.spark.sql.functions.lit(1e7))
         .cast("array<double>").as("embedding"))
-
-  /** Stream-static enrichment join: each micro-batch of the stream joins
-    * the (periodically re-read) static dimension — the streaming analog of
-    * the broadcast dimension join; no stream state is kept. */
-  def enrich(stream: DataFrame, dim: DataFrame, key: String): DataFrame =
-    stream.join(org.apache.spark.sql.functions.broadcast(dim), key)
-
-  /** Stream-STREAM inner interval join (the attribution shape: a right
-    * event joins a left event with the same key within `maxGap` after it).
-    * Both sides carry watermarks and the join condition bounds the
-    * event-time distance, so Spark can expire buffered rows on BOTH sides
-    * — without the interval bound the state store grows forever. Left
-    * columns: (key, l_ts, ...); right: (r_key, r_ts, ...). */
-  def intervalJoin(left: DataFrame, right: DataFrame,
-      watermark: String = "1 hour", maxGap: String = "30 minutes"): DataFrame =
-    left.withWatermark("l_ts", watermark)
-      .join(right.withWatermark("r_ts", watermark),
-        expr(s"key = r_key AND r_ts BETWEEN l_ts AND l_ts + INTERVAL $maxGap"))
-
-  /** T5 variant: `dropDuplicatesWithinWatermark` — dedup on the KEY alone
-    * (the event time is NOT part of the dedup key, unlike [[withKeyDedup]]),
-    * keeping per-key state only until the watermark passes the first-seen
-    * event time + delay. This is the right shape when re-deliveries carry
-    * slightly different timestamps (retries, clock skew): an exact
-    * (key, ts) dedup would pass them all through, while this drops any
-    * re-delivery landing within the watermark horizon. State is bounded by
-    * (distinct keys within the horizon), independent of stream length. */
-  def dedupWithinWatermark(stream: DataFrame, key: String, tsCol: String,
-      delay: String): DataFrame =
-    stream.withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark(Seq(key))
-
-  /** T6: watermarked event-time windowed aggregation over a stream. */
-  def hourlyCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-      .select(col("window.start").as("hour_start"), col("event_type"),
-        col("n"), col("sum_value"))
-}
-
-/** Streaming AS-OF enrichment — the streaming twin of
-  * [[graft.operators.AsOfJoin]]: every query-side event is emitted with
-  * the LATEST reference value seen so far for its key (price as of event
-  * arrival). State per key is a single (ts, value) pair — O(1) regardless
-  * of stream length, unlike a buffered stream-stream join.
-  *
-  * Semantics note vs the batch as-of: ordering is PROCESSING-time within
-  * a micro-batch (events inside one batch are sorted by event time, but a
-  * reference value arriving in a LATER batch never back-fills an earlier
-  * query) — the right trade for an enrich-on-arrival pipeline; the batch
-  * operator remains the event-time-exact formulation. */
-object StreamAsOf {
-  /** One unioned input row: side 0 = reference (carries value),
-    * side 1 = query (gets enriched). */
-  case class Tick(key: Long, ts: java.sql.Timestamp, side: Int, value: Double)
-  case class Latest(ts: Long, value: Double)
-  case class Enriched(key: Long, ts: java.sql.Timestamp,
-      asof_value: Option[Double])
-
-  def enrich(ticks: Dataset[Tick]): Dataset[Enriched] = {
-    val spark = ticks.sparkSession
-    import spark.implicits._
-    ticks.groupByKey(_.key).flatMapGroupsWithState(
-      OutputMode.Append, GroupStateTimeout.NoTimeout)(
-      (key: Long, it: Iterator[Tick], state: GroupState[Latest]) => {
-        // within the batch: event-time order, reference before query on
-        // ties (same tie rule as the batch operator)
-        val sorted = it.toSeq.sortBy(t => (t.ts.getTime, t.side))
-        var cur = state.getOption
-        val out = Seq.newBuilder[Enriched]
-        sorted.foreach { t =>
-          if (t.side == 0) cur = Some(Latest(t.ts.getTime, t.value))
-          else out += Enriched(key, t.ts, cur.map(_.value))
-        }
-        cur.foreach(state.update)
-        out.result().iterator
-      })
-  }
-}
-
-/** T7 custom stateful sessionization via flatMapGroupsWithState. */
-object Sessionizer {
-  case class Evt(user_id: Long, ts: java.sql.Timestamp, value: Double)
-  case class SessionState(start: Long, last: Long, n: Int, sum: Double)
-  case class ClosedSession(user_id: Long, start_ts: java.sql.Timestamp,
-      end_ts: java.sql.Timestamp, n_events: Int, sum_value: Double)
-
-  /** Emits a session whenever a subsequent event arrives more than
-    * `gapSeconds` after the previous one; the open tail session stays in
-    * state (production closes it via event-time timeout). State per key is
-    * O(1) — safe at any key cardinality. */
-  def sessionize(events: Dataset[Evt], gapSeconds: Long): Dataset[ClosedSession] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_.user_id).flatMapGroupsWithState(
-      OutputMode.Append, GroupStateTimeout.NoTimeout)(
-      (user: Long, it: Iterator[Evt], state: GroupState[SessionState]) => {
-        val sorted = it.toSeq.sortBy(_.ts.getTime)
-        var cur = state.getOption
-        val closed = Seq.newBuilder[ClosedSession]
-        sorted.foreach { e =>
-          val t = e.ts.getTime
-          cur match {
-            case Some(s) if t - s.last > gapSeconds * 1000 =>
-              closed += ClosedSession(user, new java.sql.Timestamp(s.start),
-                new java.sql.Timestamp(s.last), s.n, s.sum)
-              cur = Some(SessionState(t, t, 1, e.value))
-            case Some(s) =>
-              cur = Some(SessionState(s.start, t, s.n + 1, s.sum + e.value))
-            case None =>
-              cur = Some(SessionState(t, t, 1, e.value))
-          }
-        }
-        cur.foreach(state.update)
-        closed.result().iterator
-      })
-  }
 }

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round instrumentation: dump `explain("formatted")` for the
   * named queries to individual files (plans/r17/<query>_<tag>.txt), so a
   * before/after plan diff can be committed as evidence alongside bench
@@ -21,14 +19,7 @@ object PlanDump {
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val outDir = Paths.get("plans/r17")
     Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     names.foreach { n =>
       val fn = graft.SparkEntry.queries.getOrElse(n,
         sys.error(s"unknown query $n"))

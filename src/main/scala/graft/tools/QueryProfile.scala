@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -24,15 +23,7 @@ object QueryProfile {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val names = if (args.length > 1) args(1).split(",").map(_.trim).toSeq
       else Seq("q347_quantile_drift")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     spark.range(1000000L).selectExpr("sum(id)").collect() // warmup
 
     case class StageAgg(var tasks: Int = 0, var inputB: Long = 0,

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * SKEW LENS (round 10): every line also carries the task-time profile
   * of the run's COSTLIEST stage — task count, max and median task ms,
   * and skew_x100 = 100·max/median — from a [[TaskLens]] listener. A
-  * planted hot key that wall-clock hides (32 cores absorb one slow
+  * planted hot key that wall-clock hides (many cores absorb one slow
   * task) shows up here as max ≫ median; conversely skew_x100 near 100
   * on the dominant stage is the measured "no straggler" claim.
   *
@@ -102,15 +102,7 @@ object ScaleBench {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1",
         "scaledata/x10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     spark.range(1000000L).selectExpr("sum(id)").collect() // warmup
     val lens = new TaskLens
     spark.sparkContext.addSparkListener(lens)

@@ -10,8 +10,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one per JVM — suites reuse it
-  * through getOrCreate), and per-suite scratch directories. */
+/** Shared local SparkSession for all suites (one per JVM, built by
+  * [[GraftSession]] at 4 cores), and per-suite scratch directories. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
@@ -32,15 +32,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = GraftSession(4)
     // Spark's FileStreamSink.hasMetadata logs a WARN + full stack on
     // EVERY batch read of a glob path whose literal form doesn't exist
     // (AlphaVantageSpec's `{ERR_mixed,GOOG_d1}.json` read) while merely

@@ -110,26 +110,6 @@ class IndexedOpsSpec extends SparkSpec {
     }.count() == 1)
   }
 
-  test("tableFingerprint invalidates exactly when the source table commits") {
-    import spark.implicits._
-    val base = scratchDir("tfp")
-    val (corpusDir, idxDir) = (s"$base/corpus", s"$base/idx")
-    graft.sources.ManifestTable.create(corpusDir)
-    graft.sources.ManifestTable.appendWithRetry(spark, corpusDir,
-      Seq((1L, "a")).toDF("doc_id", "text"))
-    var builds = 0
-    def ensure(): Long = IndexStore.ensure(spark, idxDir,
-      IndexStore.tableFingerprint(corpusDir, "tag")) {
-      builds += 1
-      graft.sources.ManifestTable.read(spark, corpusDir)._2
-    }.count()
-    assert(ensure() == 1 && builds == 1)
-    assert(ensure() == 1 && builds == 1) // same snapshot: no rebuild
-    graft.sources.ManifestTable.appendWithRetry(spark, corpusDir,
-      Seq((2L, "b")).toDF("doc_id", "text"))
-    assert(ensure() == 2 && builds == 2) // version bump: exact invalidation
-  }
-
   test("sourceFingerprint tracks source files and derivation tags") {
     val d = scratchDir("fpsrc")
     Files.write(java.nio.file.Paths.get(d, "part-0.parquet"), Array[Byte](1, 2))

@@ -543,23 +543,6 @@ class NorthStarSpec extends SparkSpec {
     assert(got == again)
   }
 
-  test("trendStats merge exactly: split-train-merge == full-corpus " +
-      "(incremental maintenance identity)") {
-    import spark.implicits._
-    val ev = graft.Tables.events(spark, "/root/testdata/sf0.001")
-    val full = Learn.groupTrend(ev, "user_id", "ts", "value")
-      .orderBy($"user_id")
-      .as[(Long, Long, Double, Option[Double])].collect().toList
-    val merged = Learn.trendOf(Learn.mergeTrendStats(
-        Learn.trendStats(ev.filter($"event_id" % 2 === 0),
-          "user_id", "ts", "value"),
-        Learn.trendStats(ev.filter($"event_id" % 2 =!= 0),
-          "user_id", "ts", "value"), "user_id"), "user_id")
-      .orderBy($"user_id")
-      .as[(Long, Long, Double, Option[Double])].collect().toList
-    assert(full.nonEmpty && full == merged)
-  }
-
   test("binaryTopK: sign-bit packing, Hamming prescreen boundary, exact " +
       "rerank — hand-traced at dim 4") {
     import spark.implicits._
@@ -632,16 +615,6 @@ class NorthStarSpec extends SparkSpec {
         .as[(Long, Long, Int)].collect().sortBy(_._1).toList
       assert(got == want, s"salt=$s diverged")
     }
-    // auto-salt: salts only cells above hotCellSize, plain plan for the
-    // rest, decision identical — the fixture's labels are uneven enough
-    // that BOTH branches are non-empty at this threshold
-    val counts = emb.groupBy($"label").count()
-      .as[(Int, Long)].collect().map(_._2)
-    val mid = counts.sorted.apply(counts.length / 2)
-    assert(counts.exists(_ > mid) && counts.exists(_ <= mid))
-    val auto = Similarity.semDedupAutoSalt(emb, "label", 0.35, mid, 4)
-      .as[(Long, Long, Int)].collect().sortBy(_._1).toList
-    assert(auto == want)
   }
 
   test("ivfPqTopK: hand-traced ADC scores; l2TopK exact baseline") {
@@ -926,23 +899,6 @@ class NorthStarSpec extends SparkSpec {
     val got = TextAnalysis.decontaminate(docs, 8, 3)
       .as[(Long, Long)].collect().sortBy(_._1).toList
     assert(got == List((1L, 1L), (2L, 0L), (4L, 1L), (5L, 0L)))
-  }
-
-  test("decontaminateAgainst checks an explicit benchmark table") {
-    import spark.implicits._
-    val train = Seq(
-      (1L, "a b c d e f g h x y"),  // shares "a".."h" with eval doc 100
-      (2L, "z1 z2 z3 z4 z5 z6 z7 z8 z9"),
-      (3L, "too short")
-    ).toDF("doc_id", "text")
-    val eval = Seq((100L, "a b c d e f g h i j")).toDF("doc_id", "text")
-    val got = TextAnalysis.decontaminateAgainst(train, eval, 8)
-      .as[(Long, Long)].collect().sortBy(_._1).toList
-    assert(got == List((1L, 1L), (2L, 0L), (3L, 0L)))
-    // the explicit-eval form force-broadcasts the benchmark gram set
-    val plan = TextAnalysis.decontaminateAgainst(train, eval, 8)
-      .queryExecution.sparkPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), s"plan:\n$plan")
   }
 
   test("chunkTokens windows overlap by width-stride and cover every token") {
@@ -3367,7 +3323,7 @@ class NorthStarSpec extends SparkSpec {
   }
 
   test("cupedWelchT: theta = 0 (plain Welch) when the pre-period is " +
-      "constant; mergeCupedState(split) == cupedState(full)") {
+      "constant") {
     import spark.implicits._
     def at(day: Long) = new java.sql.Timestamp(day * 86400L * 1000)
     val ev = Seq(
@@ -3379,16 +3335,6 @@ class NorthStarSpec extends SparkSpec {
     val got = Behavior.cupedWelchT(ev, "user_id", "ts", $"v",
       pmod($"user_id", lit(2L)), 5L).collect()(0)
     assert(got.getDouble(2) == 0.0) // theta: var(x) = 0 → no adjust
-    def st(df: org.apache.spark.sql.DataFrame) =
-      Behavior.cupedState(df, "user_id", "ts", $"v",
-        pmod($"user_id", lit(2L)), 5L)
-    val full = st(ev).orderBy($"v", $"u")
-      .as[(Long, Long, Long, Long)].collect().toList
-    val merged = Behavior.mergeCupedState(
-        st(ev.limit(3)), st(ev.except(ev.limit(3))))
-      .orderBy($"v", $"u")
-      .as[(Long, Long, Long, Long)].collect().toList
-    assert(full.nonEmpty && merged == full)
   }
 
   test("ewmaDaily: alpha=1/2 integer recursion, hand-traced; day " +

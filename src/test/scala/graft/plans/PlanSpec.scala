@@ -99,7 +99,7 @@ class PlanSpec extends SparkSpec {
 
   test("registered SQL functions equal the column-API expressions") {
     import spark.implicits._
-    GraftFunctions.register(spark)
+    // no register call: GraftSession installs the functions
     Seq((1L, "hello world", Seq(1.5f, -2f)), (2L, "", Seq(0f, 3f)))
       .toDF("id", "t", "v").createOrReplaceTempView("gf_parity")
     val viaSql = spark.sql(
@@ -117,6 +117,23 @@ class PlanSpec extends SparkSpec {
       .as[(Long, Long, Long, Double)].collect().sortBy(_._1).toList
     assert(viaSql == viaCols)
     assert(viaSql.map(_._4) == List(1.5 * 1.5 + 4.0, 9.0))
+  }
+
+  test("the SQL-function and native as-of queries run on a session " +
+      "GraftSession did not build") {
+    val other = spark.newSession()
+    assert(!other.catalog.functionExists("rolling_hash"))
+    assert(!other.experimental.extraStrategies.contains(AsOfJoinStrategy))
+    val viaSql = graft.queries.SqlSurface.sqlCustomFunctions(other, sf)
+      .collect().toSeq
+    assert(viaSql.nonEmpty &&
+      viaSql == graft.queries.SqlSurface.sqlCustomFunctions(spark, sf)
+        .collect().toSeq)
+    val asOf = graft.queries.Temporal.asOfJoinNative(other, sf)
+    assert(asOf.queryExecution.executedPlan.toString.contains("AsOfJoin "))
+    val rows = asOf.collect().toSeq
+    assert(rows.nonEmpty &&
+      rows == graft.queries.Temporal.asOfJoinNative(spark, sf).collect().toSeq)
   }
 
   test("codegen dot product is bit-identical to the higher-order fold") {

@@ -114,23 +114,30 @@ class ManifestTableSpec extends SparkSpec {
     assert(ManifestTable.readVersion(spark, dir, 2L).count() == 2)
   }
 
-  test("streamingSink: replayed batch id is a no-op (exactly-once)") {
+  /** Commit `batch` as micro-batch `batchId` of stream `streamId`: the
+    * txn-marked append GatedIngest and IvfIndexStream make per batch. */
+  private def commitBatch(dir: String, streamId: String, batchId: Long)
+      (batch: org.apache.spark.sql.DataFrame): Long =
+    ManifestTable.appendWithRetry(spark, dir, batch,
+      txn = Some(s"$streamId-$batchId"))
+
+  test("txn append: replayed batch id is a no-op (exactly-once)") {
     val dir = freshTable()
     val b1 = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
-    ManifestTable.streamingSink(dir, "q")(b1, batchId = 0L)
+    commitBatch(dir, "q", 0L)(b1)
     assert(ManifestTable.read(spark, dir)._2.count() == 2)
     // the txn marker is INSIDE the committed manifest (atomic with the
     // data): no separate marker file can be lost to a crash window
     assert(ManifestTable.hasCommittedTxn(dir, "q-0"))
     // crash-replay of the same batch: no new version, no duplicate rows
     val vBefore = ManifestTable.currentVersion(dir)
-    ManifestTable.streamingSink(dir, "q")(b1, batchId = 0L)
+    commitBatch(dir, "q", 0L)(b1)
     assert(ManifestTable.currentVersion(dir) == vBefore)
     assert(ManifestTable.read(spark, dir)._2.count() == 2)
     // the next batch commits normally, and a second stream's batch 0 is
     // NOT suppressed by the first stream's marker
-    ManifestTable.streamingSink(dir, "q")(Seq((3L, "c")).toDF("id", "s"), 1L)
-    ManifestTable.streamingSink(dir, "q2")(Seq((4L, "d")).toDF("id", "s"), 0L)
+    commitBatch(dir, "q", 1L)(Seq((3L, "c")).toDF("id", "s"))
+    commitBatch(dir, "q2", 0L)(Seq((4L, "d")).toDF("id", "s"))
     assert(ManifestTable.read(spark, dir)._2.count() == 4)
   }
 
@@ -138,8 +145,7 @@ class ManifestTableSpec extends SparkSpec {
     val dir = freshTable()
     // three batches of a dashed stream id (split must be at the LAST '-')
     (0L to 2L).foreach { b =>
-      ManifestTable.streamingSink(dir, "my-stream")(
-        Seq((b, s"b$b")).toDF("id", "s"), b)
+      commitBatch(dir, "my-stream", b)(Seq((b, s"b$b")).toDF("id", "s"))
     }
     assert((0L to 2L).forall(b =>
       ManifestTable.hasCommittedTxn(dir, s"my-stream-$b")))
@@ -153,8 +159,7 @@ class ManifestTableSpec extends SparkSpec {
     assert(!ManifestTable.hasCommittedTxn(dir, "my-stream-3"))
     // a replayed early batch is a no-op even after vacuum
     val vBefore = ManifestTable.currentVersion(dir)
-    ManifestTable.streamingSink(dir, "my-stream")(
-      Seq((0L, "b0")).toDF("id", "s"), 0L)
+    commitBatch(dir, "my-stream", 0L)(Seq((0L, "b0")).toDF("id", "s"))
     assert(ManifestTable.currentVersion(dir) == vBefore)
     // txn memory outlives an overwrite of the data it committed
     ManifestTable.overwriteWithRetry(spark, dir,
@@ -196,114 +201,6 @@ class ManifestTableSpec extends SparkSpec {
     assert(dropped >= 3)
     // current snapshot still reads fully after vacuum
     assert(ManifestTable.read(spark, dir)._2.count() == 3)
-  }
-
-  test("merge upserts matched keys, inserts new ones, carries the rest") {
-    val dir = freshTable()
-    val v1 = ManifestTable.append(spark, dir,
-      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s"),
-      expectedVersion = 0L)
-    val vM = ManifestTable.merge(spark, dir,
-      Seq((2L, "B2"), (9L, "new")).toDF("id", "s"), Seq("id"))
-    assert(vM == v1 + 1)
-    val got = ManifestTable.read(spark, dir)._2
-      .as[(Long, String)].collect().toSet
-    assert(got == Set((1L, "a"), (2L, "B2"), (3L, "c"), (9L, "new")))
-    // time travel: the pre-merge snapshot is intact
-    assert(ManifestTable.readVersion(spark, dir, v1)
-      .as[(Long, String)].collect().toSet ==
-      Set((1L, "a"), (2L, "b"), (3L, "c")))
-  }
-
-  test("merge rewrites ONLY files containing matched keys") {
-    val dir = freshTable()
-    val v1 = ManifestTable.append(spark, dir,
-      Seq((1L, "a"), (2L, "b")).toDF("id", "s").coalesce(1),
-      expectedVersion = 0L)
-    val v2 = ManifestTable.append(spark, dir,
-      Seq((10L, "x"), (11L, "y")).toDF("id", "s").coalesce(1),
-      expectedVersion = v1)
-    val before = ManifestTable.files(dir, v2).map(f =>
-      java.nio.file.Paths.get(f).getFileName.toString).toSet
-    assert(before.size == 2)
-    // keys 10/11 live in the second file only
-    val vM = ManifestTable.merge(spark, dir,
-      Seq((10L, "X")).toDF("id", "s"), Seq("id"))
-    val after = ManifestTable.files(dir, vM).map(f =>
-      java.nio.file.Paths.get(f).getFileName.toString).toSet
-    // the untouched file is carried by reference, the affected one is gone
-    val carried = before.intersect(after)
-    assert(carried.size == 1, s"before=$before after=$after")
-    val rows = ManifestTable.read(spark, dir)._2
-      .as[(Long, String)].collect().toSet
-    assert(rows == Set((1L, "a"), (2L, "b"), (10L, "X"), (11L, "y")))
-  }
-
-  test("merge with no matched keys degenerates to insert; empty table too") {
-    val dir = freshTable()
-    // empty table: merge == append
-    val v1 = ManifestTable.merge(spark, dir,
-      Seq((1L, "a")).toDF("id", "s"), Seq("id"))
-    assert(v1 == 1L)
-    // no key overlap: old file carried, rows unioned
-    val v2 = ManifestTable.merge(spark, dir,
-      Seq((2L, "b")).toDF("id", "s"), Seq("id"))
-    assert(v2 == 2L)
-    assert(ManifestTable.read(spark, dir)._2.count() == 2)
-  }
-
-  test("merge rejects duplicate-key updates and retries on conflict") {
-    val dir = freshTable()
-    ManifestTable.append(spark, dir,
-      Seq((1L, "a")).toDF("id", "s"), expectedVersion = 0L)
-    intercept[IllegalArgumentException] {
-      ManifestTable.merge(spark, dir,
-        Seq((1L, "x"), (1L, "y")).toDF("id", "s"), Seq("id"))
-    }
-    // interleave a foreign commit between two racing merges: plain merge
-    // would CAS-fail; mergeWithRetry re-plans and lands
-    val t = new Thread(() => {
-      ManifestTable.appendWithRetry(spark, dir,
-        Seq((50L, "z")).toDF("id", "s"))
-    })
-    t.start()
-    val vM = ManifestTable.mergeWithRetry(spark, dir,
-      Seq((1L, "A")).toDF("id", "s"), Seq("id"))
-    t.join()
-    val rows = ManifestTable.read(spark, dir)._2
-      .as[(Long, String)].collect().toSet
-    assert(rows.contains((1L, "A")) && rows.contains((50L, "z")), rows)
-    assert(vM >= 2L)
-  }
-
-  test("delete rewrites only affected files; all-matching file is dropped " +
-    "without rewrite; NULL-predicate rows survive") {
-    import org.apache.spark.sql.functions.col
-    val dir = freshTable()
-    val v1 = ManifestTable.append(spark, dir,
-      Seq((1L, Some("a")), (2L, None)).toDF("id", "s").coalesce(1),
-      expectedVersion = 0L)
-    val v2 = ManifestTable.append(spark, dir,
-      Seq((10L, Some("x")), (11L, Some("y"))).toDF("id", "s").coalesce(1),
-      expectedVersion = v1)
-    val before = ManifestTable.files(dir, v2).map(f =>
-      java.nio.file.Paths.get(f).getFileName.toString).toSet
-    // predicate is TRUE for id=1, NULL for id=2 (s is null) -> only id=1
-    // goes; the second file has no match and must be carried by reference
-    val vD = ManifestTable.delete(spark, dir, col("s") === "a")
-    val after = ManifestTable.files(dir, vD).map(f =>
-      java.nio.file.Paths.get(f).getFileName.toString).toSet
-    assert(before.intersect(after).size == 1, s"before=$before after=$after")
-    assert(ManifestTable.read(spark, dir)._2
-      .as[(Long, Option[String])].collect().toSet ==
-      Set((2L, None), (10L, Some("x")), (11L, Some("y"))))
-    // delete everything in the remaining original file: pure manifest
-    // edit, no new data file for it
-    val nFilesBefore = ManifestTable.files(dir, vD).size
-    val vD2 = ManifestTable.delete(spark, dir, col("id") >= 10L)
-    assert(ManifestTable.files(dir, vD2).size < nFilesBefore)
-    assert(ManifestTable.read(spark, dir)._2
-      .as[(Long, Option[String])].collect().toSet == Set((2L, None)))
   }
 
   test("file stats prune reads by numeric and string range") {
@@ -351,101 +248,25 @@ class ManifestTableSpec extends SparkSpec {
     v = ManifestTable.append(spark, dir,
       (100L until 150L).map(i => (i, s"b$i")).toDF("id", "s").coalesce(1),
       expectedVersion = v)
-    // merge rewrites only the file containing id=0; the OTHER file's line
-    // (and stats) must be carried verbatim
-    val untouchedBefore = ManifestTable.filesWithStats(dir, v)
-      .find(_._2("id").min == "100").get
-    v = ManifestTable.merge(spark, dir,
-      Seq((0L, "patched")).toDF("id", "s"), keyCols = Seq("id"))
+    // a further append carries both files' lines (and stats) verbatim
+    val carried = ManifestTable.filesWithStats(dir, v)
+    v = ManifestTable.append(spark, dir,
+      (200L until 210L).map(i => (i, s"c$i")).toDF("id", "s").coalesce(1),
+      expectedVersion = v)
     val after = ManifestTable.filesWithStats(dir, v)
-    assert(after.contains(untouchedBefore), after.toString)
-    // the rewritten files carry fresh bounds: a [100,160] prune drops the
-    // 0-49 rewrite (zero-ROW part files have no row groups, hence no
-    // bounds — conservatively kept, contributing nothing)
-    val (_, prunedDf, keptM, totalM) =
+    assert(carried.forall(after.contains), after.toString)
+    // the new file carries fresh bounds: a [100,160] prune keeps only the
+    // 100-149 file
+    val (_, prunedDf, keptA, totalA) =
       ManifestTable.readWhereBetween(spark, dir, "id", 100L, 160L)
-    assert(keptM < totalM, s"kept=$keptM total=$totalM")
-    assert(prunedDf.filter($"id" >= 100L).count() == 50)
+    assert(keptA == 1 && totalA == 3, s"kept=$keptA total=$totalA")
+    assert(prunedDf.count() == 50)
     // compaction writes fresh files -> fresh footer stats spanning all
     v = ManifestTable.compact(spark, dir, nFiles = 1)
     val compacted = ManifestTable.filesWithStats(dir, v)
     assert(compacted.size == 1)
     val cs = compacted.head._2("id")
-    assert(cs.min == "0" && cs.max == "149", cs.toString)
-  }
-
-  test("merge prescreens files by key-range stats: out-of-range never scanned") {
-    val dir = scratchDir("manifest_prescreen_")
-    ManifestTable.create(dir, statsColumns = Seq("id"))
-    var v = ManifestTable.append(spark, dir,
-      (0L until 50L).map(i => (i, s"a$i")).toDF("id", "s").coalesce(1),
-      expectedVersion = 0L)
-    v = ManifestTable.append(spark, dir,
-      (100L until 150L).map(i => (i, s"b$i")).toDF("id", "s").coalesce(1),
-      expectedVersion = v)
-    // corrupt the 100-149 file ON DISK: any scan of it now throws, so the
-    // merge below (keys 0-9, disjoint from [100,149]) succeeds only if
-    // the stats prescreen kept that file out of the read entirely
-    val hiFile = ManifestTable.filesWithStats(dir, v)
-      .find(_._2("id").min == "100").get._1
-    Files.write(java.nio.file.Paths.get(hiFile),
-      "not parquet".getBytes("UTF-8"))
-    v = ManifestTable.merge(spark, dir,
-      (0L until 10L).map(i => (i, "patched")).toDF("id", "s"),
-      keyCols = Seq("id"))
-    // corrupt (= never-scanned) file still carried by reference
-    assert(ManifestTable.files(dir, v).contains(hiFile))
-    // the rewritten range is correct (read only the live files)
-    val lowFiles = ManifestTable.filesWithStats(dir, v)
-      .collect { case (f, st) if f != hiFile => f }
-    val low = spark.read.parquet(lowFiles: _*)
-    assert(low.filter($"s" === "patched").count() == 10)
-    assert(low.count() == 50)
-    // all-null update keys match nothing -> pure insert, no scan at all
-    val nullKey = ManifestTable.merge(spark, dir,
-      Seq((null.asInstanceOf[java.lang.Long], "orphan"))
-        .toDF("id", "s"), keyCols = Seq("id"))
-    assert(nullKey == v + 1)
-    assert(ManifestTable.files(dir, nullKey).contains(hiFile))
-  }
-
-  test("deleteWhereBetween prescreens by stats; retention delete drops whole file") {
-    val dir = scratchDir("manifest_rangedel_")
-    ManifestTable.create(dir, statsColumns = Seq("id"))
-    var v = 0L
-    Seq(0L until 100L, 100L until 200L, 200L until 300L).foreach { r =>
-      v = ManifestTable.append(spark, dir,
-        r.map(i => (i, s"d$i")).toDF("id", "s").coalesce(1),
-        expectedVersion = v)
-    }
-    // corrupt the 200-299 file: the [0,99] retention delete must succeed
-    // without ever scanning it
-    val hiFile = ManifestTable.filesWithStats(dir, v)
-      .find(_._2("id").min == "200").get._1
-    Files.write(java.nio.file.Paths.get(hiFile),
-      "not parquet".getBytes("UTF-8"))
-    val nBefore = ManifestTable.files(dir, v).size
-    v = ManifestTable.deleteWhereBetween(spark, dir, "id", 0L, 99L)
-    // the fully-covered file dropped whole (no survivors, no new file),
-    // the corrupt out-of-range file carried by reference
-    assert(ManifestTable.files(dir, v).size == nBefore - 1)
-    assert(ManifestTable.files(dir, v).contains(hiFile))
-    val live = ManifestTable.filesWithStats(dir, v)
-      .collect { case (f, _) if f != hiFile => f }
-    assert(spark.read.parquet(live: _*)
-      .agg(org.apache.spark.sql.functions.min($"id")).head.getLong(0) == 100L)
-    // partial-range delete rewrites only the overlapping file
-    val v2 = ManifestTable.deleteWhereBetween(spark, dir, "id", 150L, 159L)
-    assert(ManifestTable.files(dir, v2).contains(hiFile))
-    val live2 = ManifestTable.filesWithStats(dir, v2)
-      .collect { case (f, _) if f != hiFile => f }
-    assert(spark.read.parquet(live2: _*)
-      .filter($"id".between(150L, 159L)).count() == 0)
-    assert(spark.read.parquet(live2: _*).count() == 90)
-    // fully-outside range: pure version bump, file set unchanged
-    val filesBefore = ManifestTable.files(dir, v2).toSet
-    val v3 = ManifestTable.deleteWhereBetween(spark, dir, "id", 5000L, 6000L)
-    assert(v3 == v2 + 1 && ManifestTable.files(dir, v3).toSet == filesBefore)
+    assert(cs.min == "0" && cs.max == "209", cs.toString)
   }
 
   test("two writers racing appendWithRetry: both commits durable, version " +
@@ -614,18 +435,12 @@ class ManifestTableSpec extends SparkSpec {
     assert(ManifestTable.read(spark, dir)._2.count() == 3)
   }
 
-  test("the #schema= line survives append, compact, merge, delete, " +
-      "z-order and overwrite") {
-    import org.apache.spark.sql.functions.col
+  test("the #schema= line survives every kind of commit") {
     val dir = freshTable()
     ManifestTable.append(spark, dir, nested(1L, 2L), 0L)
     ManifestTable.appendWithRetry(spark, dir, nested(3L))
     assertStoredSchema(dir)
     ManifestTable.compact(spark, dir, nFiles = 1)
-    assertStoredSchema(dir)
-    ManifestTable.mergeWithRetry(spark, dir, nested(2L, 4L), Seq("id"))
-    assertStoredSchema(dir)
-    ManifestTable.delete(spark, dir, col("id") === 1L)
     assertStoredSchema(dir)
     ManifestTable.optimizeZorder(spark, dir, "id", "id", 2)
     assertStoredSchema(dir)

@@ -92,11 +92,16 @@ class IvfIndexStreamSpec extends SparkSpec {
     val cents = Similarity.centroidsOf(
       ManifestTable.read(spark, centDir)._2)
     val maintained = ManifestTable.read(spark, memDir)._2
-    val served = Similarity
-      .ivfRankingMetricsFromIndex(maintained, cents, 1, 2, 3)
+    val raw = (b1 ++ b2).toDF("vec_id", "label", "embedding")
+    // the maintained cells are the ones serving would assign, and the
+    // maintained rows serve the same metrics as the raw corpus
+    assert(maintained.select($"vec_id", $"cid")
+        .as[(Long, Long)].collect().toList.sorted ==
+      Similarity.assignWith(raw, cents).as[(Long, Long)].collect().toList.sorted)
+    val served = Similarity.ivfRankingMetricsWith(
+      maintained.drop("cid"), cents, 1, 2, 3)
       .as[(Long, Long, Long, Long)].collect().toList
-    val rebuilt = Similarity.ivfRankingMetricsWith(
-      (b1 ++ b2).toDF("vec_id", "label", "embedding"), cents, 1, 2, 3)
+    val rebuilt = Similarity.ivfRankingMetricsWith(raw, cents, 1, 2, 3)
       .as[(Long, Long, Long, Long)].collect().toList
     assert(served == rebuilt && served.head._1 == 2L)
   }
@@ -126,7 +131,8 @@ class IvfIndexStreamSpec extends SparkSpec {
       df.collect().map(_.toSeq).toList
     def metricRows(members: org.apache.spark.sql.DataFrame,
         cents: Array[(Long, Array[Double])]) =
-      rows(Similarity.ivfRankingMetricsFromIndex(members, cents, 2, 2, 3))
+      rows(Similarity.ivfRankingMetricsWith(members.drop("cid"), cents,
+        2, 2, 3))
     val oldCents = Similarity.centroidsOf(
       ManifestTable.read(spark, centDir)._2)
     val vMemOld = ManifestTable.currentVersion(memDir)
