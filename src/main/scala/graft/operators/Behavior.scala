@@ -799,10 +799,9 @@ object Behavior {
     * k_users, events_covered, share_ppm, gini) with gini constant
     * across rows. The cumsum pass pins its output (the totals
     * aggregate and the boundary join both re-read it — without the
-    * pin each replays the corpus scan); `lazyPlan = true` skips the
-    * pin for plan inspection. */
+    * pin each replays the corpus scan). */
   def engagementConcentration(events: DataFrame, user: String,
-      topPcts: Seq[Int], lazyPlan: Boolean = false): DataFrame = {
+      topPcts: Seq[Int]): DataFrame = {
     require(topPcts.nonEmpty && topPcts.forall(p => p >= 1 && p <= 100),
       s"topPcts=$topPcts")
     require(topPcts.distinct == topPcts, s"duplicate pcts in $topPcts")
@@ -815,13 +814,8 @@ object Behavior {
     // the exclusive below-count (distinct activity levels are
     // unbounded in principle — no unpartitioned window):
     // users at level ≥ x = tot − inclusive-asc + own, below = asc − own
-    val cums = if (lazyPlan)
-      Curation.withGlobalCumsumsLazy(levels, Seq(col("x")),
-        Seq("u" -> col("nl"), "e" -> (col("nl") * col("x"))))
-    else
-      Curation.withGlobalCumsums(levels, Seq(col("x")),
-        Seq("u" -> col("nl"), "e" -> (col("nl") * col("x"))))
-    val lv = cums
+    val lv = Curation.withGlobalCumsums(levels, Seq(col("x")),
+      Seq("u" -> col("nl"), "e" -> (col("nl") * col("x"))))
       .withColumn("cum_users", col("tot_u") - col("cum_u") + col("nl"))
       .withColumn("cum_events",
         col("tot_e") - col("cum_e") + col("nl") * col("x"))
@@ -876,21 +870,18 @@ object Behavior {
     * pairs frame is pinned with an eager localCheckpoint (the
     * from-totals aggregate and the final join both re-read it —
     * without the pin each replays the corpus window pass; the
-    * q214/q215 contract); `lazyPlan = true` skips the pin for plan
-    * inspection. */
+    * q214/q215 contract). */
   def eventTransitions(events: DataFrame, user: String, ts: String,
-      tie: String, typeCol: String, lazyPlan: Boolean = false)
-      : DataFrame = {
+      tie: String, typeCol: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("u")).orderBy(col("t"), col("tk"))
-    val pairs0 = events
+    val pairs = Pin(events
       .select(col(user).as("u"), col(ts).as("t"), col(tie).as("tk"),
         col(typeCol).as("to_type"))
       .withColumn("from_type", lag(col("to_type"), 1).over(w))
       .filter(col("from_type").isNotNull)
       .groupBy(col("from_type"), col("to_type"))
-      .agg(count(lit(1)).as("n"))
-    val pairs = if (lazyPlan) pairs0 else Pin(pairs0)
+      .agg(count(lit(1)).as("n")))
     val fromTotals = pairs.groupBy(col("from_type"))
       .agg(sum(col("n")).as("n_from"))
     pairs.join(fromTotals, "from_type")
@@ -1066,8 +1057,7 @@ object Behavior {
   }
 
   /** Per-user first-reach times (u, t1..tn) — the shared core of
-    * [[funnel]] / [[funnelWindowed]] / [[funnelTiming]] (graft-visible
-    * so Explain can dump q205's constituent plans). */
+    * [[funnel]] / [[funnelWindowed]] / [[funnelTiming]]. */
   private[graft] def stageTimes(events: DataFrame, user: String, ts: String,
       typeCol: String, steps: Seq[String],
       windowSec: Option[Long]): DataFrame = {
@@ -1177,17 +1167,16 @@ object Behavior {
 
   /** Per-user transition durations in exact integer seconds (sec_i is
     * non-NULL iff the user completed step i → i+1) — q205's projection
-    * of the stage-times frame (graft-visible for Explain). */
-  private[graft] def transitionDurations(times: DataFrame,
+    * of the stage-times frame. */
+  private def transitionDurations(times: DataFrame,
       nTrans: Int): DataFrame =
     times.select((1 to nTrans).map { i =>
       expr(s"(unix_micros(t${i + 1}) - unix_micros(t$i)) div 1000000")
         .as(s"sec_$i") }: _*)
 
   /** The ONE conditional aggregate computing every transition's
-    * n/min/max/avg in a single job — q205's non-median final pass
-    * (graft-visible for Explain). */
-  private[graft] def transitionStatsAgg(durs: DataFrame,
+    * n/min/max/avg in a single job — q205's non-median final pass. */
+  private def transitionStatsAgg(durs: DataFrame,
       nTrans: Int): DataFrame = {
     val statAggs = (1 to nTrans).flatMap { i => Seq(
       count(col(s"sec_$i")).as(s"n_$i"),
@@ -1407,16 +1396,6 @@ object Behavior {
       .select(col("g"), (col("l") - col("f")).as("t"),
         (col("m") - col("l") >= censorDays).cast("int").as("dead"))
   }
-
-  /** The DISTRIBUTED stage of [[survivalCurve]] — the calendar-bounded
-    * (lifetime t, deaths, censored) aggregate the driver recurrence
-    * folds over. Public for plan inspection (Explain feeds on it). */
-  def survivalLifetimesLazy(events: DataFrame, user: String, ts: String,
-      censorDays: Int): DataFrame =
-    spanLifetimes(survivalSpanState(events, user, ts), censorDays)
-      .groupBy(col("t"))
-      .agg(sum(col("dead")).as("nd"),
-        sum(lit(1) - col("dead")).as("nc"))
 
   def survivalCurve(events: DataFrame, user: String, ts: String,
       censorDays: Int): DataFrame =

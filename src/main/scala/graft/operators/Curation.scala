@@ -101,13 +101,6 @@ object Curation {
       value: Column): DataFrame =
     cumsumPlan(Pin(ranked(df, order, value)))
 
-  /** LAZY plan-only variant (no persist / checkpoint) for plan inspection —
-    * correctness of bucket offsets under re-execution is only guaranteed by
-    * [[withGlobalCumsum]]'s pin. */
-  def withGlobalCumsumLazy(df: DataFrame, order: Seq[Column],
-      value: Column): DataFrame =
-    cumsumPlan(ranked(df, order, value))
-
   /** MULTI-VALUE generalization of [[withGlobalCumsum]]: attach the
     * global 1-based rank `rn` plus, for EACH (name → value) pair, the
     * INCLUSIVE running sum `cum_<name>` and grand total `tot_<name>`,
@@ -129,12 +122,6 @@ object Curation {
       values: Seq[(String, Column)]): DataFrame =
     cumsumPlanMulti(Pin(rankedMulti(df, order, values)),
       values.map(_._1))
-
-  /** LAZY plan-only variant of [[withGlobalCumsums]] (no persist /
-    * checkpoint) for plan inspection. */
-  def withGlobalCumsumsLazy(df: DataFrame, order: Seq[Column],
-      values: Seq[(String, Column)]): DataFrame =
-    cumsumPlanMulti(rankedMulti(df, order, values), values.map(_._1))
 
   /** Level one of the multi-value cumsum — [[ranked]] with k local
     * running sums sharing the one per-bucket sort. */
@@ -302,16 +289,13 @@ object Curation {
     * final groupBy shuffles only (bin, counters) rows. The document text
     * itself never travels: only (doc_id, n_tok) survives past the scan. */
   def packBins(docs: DataFrame, capacity: Long, textCol: String = "text",
-      idCol: String = "doc_id", lazyPlan: Boolean = false): DataFrame = {
+      idCol: String = "doc_id"): DataFrame = {
     require(capacity >= 1, s"capacity=$capacity")
     val toks = docs.select(col(idCol).as("doc_id"),
       size(split(col(textCol), " ")).cast("long").as("n_tok"))
       .filter(col("n_tok") >= 1) // sequence(first,last) must ascend
     val order = Seq(col("doc_id").asc)
-    val cum =
-      if (lazyPlan) withGlobalCumsumLazy(toks, order, col("n_tok"))
-      else withGlobalCumsum(toks, order, col("n_tok"))
-    cum
+    withGlobalCumsum(toks, order, col("n_tok"))
       .withColumn("start", col("cum") - col("n_tok"))
       .withColumn("bin", explode(sequence(
         expr(s"start div ${capacity}L"), expr(s"(cum - 1) div ${capacity}L"))))
@@ -338,14 +322,10 @@ object Curation {
     * tot·max(num,den) < 2⁶³ (a 10¹³-token corpus leaves room for
     * num/den up to ~10⁵). */
   def budgetCut(docs: DataFrame, order: Seq[Column], valueCol: String,
-      budgetNum: Long, budgetDen: Long,
-      lazyPlan: Boolean = false): DataFrame = {
+      budgetNum: Long, budgetDen: Long): DataFrame = {
     require(budgetNum >= 0 && budgetDen >= 1,
       s"budget $budgetNum/$budgetDen")
-    val cum =
-      if (lazyPlan) withGlobalCumsumLazy(docs, order, col(valueCol))
-      else withGlobalCumsum(docs, order, col(valueCol))
-    cum.withColumn("kept",
+    withGlobalCumsum(docs, order, col(valueCol)).withColumn("kept",
       (col("cum") - col(valueCol)) * budgetDen < col("tot") * budgetNum)
   }
 
@@ -615,15 +595,12 @@ object Curation {
     * The score must already be integral (micro-scale floats before
     * calling) — that is what makes every boundary engine-exact. */
   def curriculumBuckets(docs: DataFrame, score: Column, buckets: Int,
-      idCol: String = "doc_id", lazyPlan: Boolean = false): DataFrame = {
+      idCol: String = "doc_id"): DataFrame = {
     require(buckets >= 1, s"buckets=$buckets")
     val base = docs.select(col(idCol).as("doc_id"), score.cast("long").as("s"))
     val order = Seq(col("s").desc, col("doc_id"))
-    val r =
-      if (lazyPlan) withGlobalCumsumLazy(base, order, lit(1L))
-      else withGlobalCumsum(base, order, lit(1L))
     // floor(double) is exact integer division here: operands < 2^53
-    r.withColumn("bucket",
+    withGlobalCumsum(base, order, lit(1L)).withColumn("bucket",
         floor((col("rn") - 1) * buckets / col("tot")).cast("int"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_docs"),

@@ -128,13 +128,6 @@ object Dedup {
     releaseAfter(da)(jaccardPairsPlan(da, threshold))
   }
 
-  /** LAZY plan-only variant: no caching, no eager materialization — the
-    * shingling subplan is re-evaluated once per use. For plan inspection
-    * (EXPLAIN) and callers that manage their own caching; [[jaccardPairs]]
-    * is the executable form. */
-  def jaccardPairsLazy(docs: DataFrame, threshold: Double): DataFrame =
-    jaccardPairsPlan(shingleArrays(docs), threshold)
-
   /** The shared pairs plan over a (possibly cached) shingle-array table.
     * Positional prefix under the hash total order: a pair with J >= t
     * shares >= ceil(t·|A|) shingles, and |A| - ceil(t·|A|) + 1 prefix
@@ -391,9 +384,7 @@ object Dedup {
       // Recall is silently traded whenever the cap actually fires, so the
       // eager entry point measures it: one aggregation over the persisted
       // shingle cache (the same scan the anti-join's hot set needs), and a
-      // warning naming the dropped-shingle count when it is nonzero. The
-      // lazy plan-only variant skips the probe — plan inspection must not
-      // run jobs — and says so in its scaladoc.
+      // warning naming the dropped-shingle count when it is nonzero.
       val nHot = hotShingles(da, dfCap).count()
       if (nHot > 0)
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -404,15 +395,6 @@ object Dedup {
       containmentPairsPlan(da, threshold, dfCap)
     }
   }
-
-  /** LAZY plan-only variant of [[containmentPairs]] (see
-    * [[jaccardPairsLazy]] for the contract). Unlike the eager variant, no
-    * dropped-hot-shingle warning is emitted (plan construction runs no
-    * jobs) — callers trading recall via `dfCap` get no runtime signal
-    * here. */
-  def containmentPairsLazy(docs: DataFrame, threshold: Double,
-      dfCap: Int = 10000): DataFrame =
-    containmentPairsPlan(shingleArrays(docs), threshold, dfCap)
 
   /** Shingles hotter than `dfCap` (the ones [[containmentPairsPlan]] drops
     * from its candidate index). */
@@ -613,10 +595,10 @@ object Dedup {
     * The result is pinned (eager localCheckpoint): run as one action, the
     * probe takes a few jobs, where an adaptive plan that embeds it (the
     * gated-ingest sink's semantic gate) would run each of its stages as a
-    * job of its own. `lazyPlan = true` skips the pin for plan inspection. */
+    * job of its own. */
   def dropIncomingDuplicatesIndexed(existingIndex: DataFrame,
       existingTexts: DataFrame, incoming: DataFrame,
-      threshold: Double, lazyPlan: Boolean = false): DataFrame = {
+      threshold: Double): DataFrame = {
     val exactLosers = existingTexts.select(col("text"))
       .join(broadcast(incoming.select(col("doc_id"), col("text"))), "text")
       .select(col("doc_id"))
@@ -640,7 +622,7 @@ object Dedup {
     val survivors = incoming.join(
       exactLosers.union(nearLosers).distinct().hint("SHUFFLE_HASH"),
       Seq("doc_id"), "left_anti")
-    if (lazyPlan) survivors else Pin(survivors)
+    Pin(survivors)
   }
 
   /** X2 SimHash near-dup candidates: 64-bit fingerprints, 4×16-bit bands
@@ -776,12 +758,6 @@ object Dedup {
     releaseAfter(grams)(sourceOverlapPlan(grams))
   }
 
-  /** LAZY plan-only variant (no caching) for plan inspection; the
-    * executable form is [[sourceOverlapExact]]. */
-  def sourceOverlapExactLazy(docs: DataFrame, n: Int,
-      srcCol: String = "source", textCol: String = "text"): DataFrame =
-    sourceOverlapPlan(sourceGrams(docs, n, srcCol, textCol))
-
   private def sourceGrams(docs: DataFrame, n: Int, srcCol: String,
       textCol: String): DataFrame = {
     require(n >= 1, s"n=$n")
@@ -827,11 +803,6 @@ object Dedup {
     val da = shingleArrays(docs).persist()
     releaseAfter(da)(dedupEvidencePlan(da, threshold))
   }
-
-  /** LAZY plan-only variant (no caching) for plan inspection; the
-    * executable form is [[dedupEvidence]]. */
-  def dedupEvidenceLazy(docs: DataFrame, threshold: Double): DataFrame =
-    dedupEvidencePlan(shingleArrays(docs), threshold)
 
   private def dedupEvidencePlan(da: DataFrame,
       threshold: Double): DataFrame = {

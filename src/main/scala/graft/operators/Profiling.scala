@@ -152,17 +152,15 @@ object Profiling {
     * pinned with an eager localCheckpoint (the [[graft.operators.Dedup
     * .jaccardPairs]] cache contract): the totals/MI/entropy branches
     * all re-read it, and without the pin each branch would replay the
-    * corpus scan + (a, b) shuffle — ~7 scans instead of 1.
-    * `lazyPlan = true` skips the pin for plan inspection. */
-  def mutualInformation(df: DataFrame, aCol: String, bCol: String,
-      lazyPlan: Boolean = false): DataFrame = {
+    * corpus scan + (a, b) shuffle — ~7 scans instead of 1. */
+  def mutualInformation(df: DataFrame, aCol: String, bCol: String)
+      : DataFrame = {
     require(df.columns.contains(aCol) && df.columns.contains(bCol),
       s"need columns '$aCol', '$bCol'")
-    val cells0 = df
+    val cells = Pin(df
       .filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .groupBy(col(aCol).as("a"), col(bCol).as("b"))
-      .agg(count(lit(1)).as("nab"))
-    val cells = if (lazyPlan) cells0 else Pin(cells0)
+      .agg(count(lit(1)).as("nab")))
     val ma = cells.groupBy(col("a")).agg(sum(col("nab")).as("na"))
     val mb = cells.groupBy(col("b")).agg(sum(col("nab")).as("nb"))
     val tot = cells.agg(sum(col("nab")).as("n"),
@@ -395,20 +393,6 @@ object Profiling {
       .select(col("dim"), col("n_a"), col("n_b"), col("psi_nano"))
   }
 
-  /** ONE refinement-round histogram of [[exactQuantiles]] — the plan
-    * that executes per round, exposed for inspection: corpus `vals(v)`
-    * × broadcast per-quantile spec `(qid, k, lo, hi, width)`, v-range
-    * filter, integer-div bucketing, map-side-partial count. When `v` is
-    * a STORED column the range predicate reaches the parquet scan and
-    * min/max stats skip out-of-range row groups on round ≥ 2; a derived
-    * expression (e.g. round(price·100)) filters post-scan — store the
-    * integer form if round-2+ scan pruning matters at your scale. */
-  def quantileHistRound(vals: DataFrame, spec: DataFrame): DataFrame =
-    vals.crossJoin(broadcast(spec))
-      .filter(col("v") >= col("lo") && col("v") <= col("hi"))
-      .groupBy(col("qid"), expr("(v - lo) div width").as("b"))
-      .agg(count(lit(1)).as("c"))
-
   /** EXACT quantiles of an integer column by iterative histogram
     * refinement — the distributed alternative to a global sort (the
     * Munro-Paterson / BigQuery-style multi-round selection; also how
@@ -419,10 +403,10 @@ object Profiling {
     * walks the ≤ fanout·|qs| bucket counts to find each quantile's
     * bucket and residual rank; each next round re-histograms only the
     * chosen buckets (a v-range filter ahead of the aggregate — pushed
-    * into the scan when v is a stored column, see [[quantileHistRound]])
-    * with width ÷ fanout. Integer values terminate at width 1 with the
-    * exact k-th smallest, in ⌈log_fanout(range)⌉ rounds (3 rounds for a
-    * 10⁷ range at fanout 256) — no partition ever holds more than its
+    * into the scan only by [[exactQuantilesStored]]) with width ÷ fanout.
+    * Integer values terminate at width 1 with the exact k-th smallest,
+    * in ⌈log_fanout(range)⌉ rounds (3 rounds for a 10⁷ range at fanout
+    * 256) — no partition ever holds more than its
     * share of one bucket, no global sort, no giant window. Driver state
     * is ≤ fanout·|qs| longs per round — the k-means broadcast-state
     * regime, not a data collect.
@@ -468,8 +452,8 @@ object Profiling {
     * stored column, so they reach the parquet reader as PushedFilters
     * and round ≥ 2 prunes row groups by min/max stats (each round's
     * ranges shrink ÷ fanout, so later rounds read a vanishing fraction
-    * of the file — the scan-pruning payoff [[quantileHistRound]]'s
-    * scaladoc promises but its join-column predicate cannot deliver).
+    * of the file — the scan-pruning payoff a join-column range
+    * predicate cannot deliver).
     * Per-row bucket routing replaces the broadcast-spec cross join: an
     * array of per-quantile `v ≥ lo → (qid, bucket)` structs (the upper
     * bound is implied by the pushed scan range per open quantile and by
@@ -867,28 +851,6 @@ object Profiling {
     }.toDF("col_name", "q", "n", "k", "value")
   }
 
-  /** ONE refinement-round histogram of [[exactQuantilesStored]] — all
-    * range predicates LITERAL on the stored column, so `.explain` shows
-    * them under the scan's PushedFilters (vs [[quantileHistRound]]'s
-    * join-column predicate, which must evaluate post-scan). */
-  def quantileHistRoundStored(df: DataFrame, valueCol: String,
-      open: Seq[(Int, Long, Long, Long, Long)]): DataFrame = {
-    val c = col(valueCol)
-    val scanFilter = open.map { case (_, _, lo, hi, _) =>
-      c >= lit(lo) && c <= lit(hi) }.reduce(_ || _)
-    val branches = open.map { case (i, _, lo, hi, width) =>
-      when(c >= lit(lo) && c <= lit(hi),
-        struct(lit(i).as("qid"),
-          expr(s"(CAST(`$valueCol` AS BIGINT) - ${lo}L) div ${width}L")
-            .as("b")))
-    }
-    df.filter(c.isNotNull && scanFilter)
-      .select(explode(filter(array(branches: _*), s => s.isNotNull))
-        .as("s"))
-      .groupBy(col("s.qid").as("qid"), col("s.b").as("b"))
-      .agg(count(lit(1)).as("c"))
-  }
-
   /** EQUI-HEIGHT histogram of a stored integer column: bin boundaries
     * are the exact i/bins quantiles ([[exactQuantilesStored]] — the
     * driver-state histogram refinement, so no sort and the boundary
@@ -914,12 +876,10 @@ object Profiling {
     histogramFill(df, valueCol, bounds.toIndexedSeq)
   }
 
-  /** The ONE counting pass of [[equiHeightHistogram]], public for plan
-    * inspection and boundary reuse (recount a fresh snapshot against
-    * yesterday's boundaries — the drift-friendly form): buckets every
+  /** The ONE counting pass of [[equiHeightHistogram]]: buckets every
     * row with a LITERAL boundary when-chain (codegen'd comparisons, no
     * join) and aggregates count + observed [lo, hi] per bin. */
-  def histogramFill(df: DataFrame, valueCol: String,
+  private def histogramFill(df: DataFrame, valueCol: String,
       bounds: Seq[Long]): DataFrame = {
     require(bounds.nonEmpty && bounds == bounds.sorted,
       s"bounds must be non-empty ascending, got $bounds")
@@ -1022,15 +982,14 @@ object Profiling {
     * Scale shape: one (a, b) cell aggregate (map-side partials), two
     * marginal reductions of the CELLS frame (never the data), and a
     * grid-sized (|A|·|B|-bounded) final sum. */
-  def chiSquareIndependence(df: DataFrame, aCol: String, bCol: String,
-      lazyPlan: Boolean = false): DataFrame = {
-    val cells0 = df
+  def chiSquareIndependence(df: DataFrame, aCol: String, bCol: String)
+      : DataFrame = {
+    // cells pinned ([[mutualInformation]]'s contract): the marginal /
+    // total / chi branches all re-read it
+    val cells = Pin(df
       .filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .groupBy(col(aCol).as("a"), col(bCol).as("b"))
-      .agg(count(lit(1)).as("nab"))
-    // cells pinned ([[mutualInformation]]'s contract): the marginal /
-    // total / chi branches all re-read it; lazyPlan skips for Explain
-    val cells = if (lazyPlan) cells0 else Pin(cells0)
+      .agg(count(lit(1)).as("nab")))
     val ma = cells.groupBy(col("a")).agg(sum(col("nab")).as("na"))
     val mb = cells.groupBy(col("b")).agg(sum(col("nab")).as("nb"))
     val tot = cells.agg(sum(col("nab")).as("n"),

@@ -1228,6 +1228,23 @@ object Similarity {
       .select(col("qid"), col("vec_id"), col("hd"), col("cos"))
   }
 
+  /** The DISTRIBUTED stage of [[mmrRerank]] — the integer-scored
+    * top-`poolN` pool (broadcast query, TakeOrderedAndProject over the
+    * corpus scan, [[cosineTopK]]'s shape), carrying each candidate's
+    * vector + norm for the pairwise stage; mmrRerank pins it with an
+    * eager localCheckpoint before the bounded driver fold. */
+  private def mmrPool(emb: DataFrame, queryId: Long, poolN: Int): DataFrame = {
+    val q = withNorm(emb.filter(col("vec_id") === queryId))
+      .select(col("v").as("qv"), col("nrm").as("qnrm"))
+    withNorm(Par.fanOut(emb.filter(col("vec_id") =!= queryId)))
+      .crossJoin(broadcast(q))
+      .select(col("vec_id"), col("v"), col("nrm"),
+        round(dot(col("v"), col("qv")) / (col("nrm") * col("qnrm"))
+          * 10000, 0).cast("long").as("rel_e4"))
+      .orderBy(col("rel_e4").desc, col("vec_id"))
+      .limit(poolN)
+  }
+
   /** X3 MMR diversified re-rank (Maximal Marginal Relevance, Carbonell &
     * Goldstein, SIGIR 1998): from the exact top-`poolN` candidates for
     * stored query `queryId`, greedily pick `k` results maximizing
@@ -1249,24 +1266,6 @@ object Similarity {
     * .funnelTiming]]'s stats fold, NOT a data-sized driver loop. The
     * pool is pinned with an eager localCheckpoint so the pairwise stage
     * and the collect don't replay the corpus scan. */
-  /** The DISTRIBUTED stage of [[mmrRerank]] — the integer-scored
-    * top-`poolN` pool (broadcast query, TakeOrderedAndProject over the
-    * corpus scan, [[cosineTopK]]'s shape), carrying each candidate's
-    * vector + norm for the pairwise stage. Public for plan inspection
-    * (Explain feeds on it); mmrRerank pins it with an eager
-    * localCheckpoint before the bounded driver fold. */
-  def mmrPoolLazy(emb: DataFrame, queryId: Long, poolN: Int): DataFrame = {
-    val q = withNorm(emb.filter(col("vec_id") === queryId))
-      .select(col("v").as("qv"), col("nrm").as("qnrm"))
-    withNorm(Par.fanOut(emb.filter(col("vec_id") =!= queryId)))
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), col("v"), col("nrm"),
-        round(dot(col("v"), col("qv")) / (col("nrm") * col("qnrm"))
-          * 10000, 0).cast("long").as("rel_e4"))
-      .orderBy(col("rel_e4").desc, col("vec_id"))
-      .limit(poolN)
-  }
-
   def mmrRerank(emb: DataFrame, queryId: Long, poolN: Int, k: Int,
       lamNum: Int, lamDen: Int): DataFrame = Pin.scope {
     require(k >= 1 && poolN >= k && poolN <= 256,
@@ -1274,7 +1273,7 @@ object Similarity {
     require(lamDen >= 1 && lamNum >= 0 && lamNum <= lamDen,
       s"lambda=$lamNum/$lamDen not in [0, 1]")
     val spark = emb.sparkSession
-    val pool = Pin(mmrPoolLazy(emb, queryId, poolN))
+    val pool = Pin(mmrPool(emb, queryId, poolN))
     val a = pool.select(col("vec_id").as("sa"), col("v").as("va"),
       col("nrm").as("na"))
     val b = pool.select(col("vec_id").as("sb"), col("v").as("vb"),
@@ -1321,9 +1320,8 @@ object Similarity {
 
   /** The DISTRIBUTED stage of [[mmrRerankBatch]] — one corpus scan
     * scoring every broadcast query, cut to the per-qid top-`poolN`
-    * through a rank window (WindowGroupLimit partial heaps). Public
-    * for plan inspection (Explain feeds on it). */
-  def mmrBatchPoolLazy(emb: DataFrame, queries: DataFrame,
+    * through a rank window (WindowGroupLimit partial heaps). */
+  private def mmrBatchPool(emb: DataFrame, queries: DataFrame,
       poolN: Int): DataFrame = {
     val qs = withNorm(queries).select(col("vec_id").as("qid"),
       col("v").as("qv"), col("nrm").as("qnrm"))
@@ -1355,7 +1353,7 @@ object Similarity {
     require(lamDen >= 1 && lamNum >= 0 && lamNum <= lamDen,
       s"lambda=$lamNum/$lamDen not in [0, 1]")
     val spark = emb.sparkSession
-    val pool = Pin(mmrBatchPoolLazy(emb, queries, poolN))
+    val pool = Pin(mmrBatchPool(emb, queries, poolN))
     require(pool.count() <= 4096, "batch pool over the driver contract")
     val a = pool.select(col("qid"), col("vec_id").as("sa"),
       col("v").as("va"), col("nrm").as("na"))

@@ -253,7 +253,7 @@ object TextAnalysis {
     * terms + pair aggregation, then TakeOrderedAndProject. */
   def lexicalCosinePairs(docs: DataFrame, topTerms: Int, minCos: Double,
       topK: Int, ngram: Int = 3, textCol: String = "text",
-      idCol: String = "doc_id", lazyPlan: Boolean = false): DataFrame = {
+      idCol: String = "doc_id"): DataFrame = {
     require(topTerms >= 1 && topK >= 1 && ngram >= 1,
       s"topTerms=$topTerms topK=$topK ngram=$ngram")
     import org.apache.spark.sql.expressions.Window
@@ -288,10 +288,10 @@ object TextAnalysis {
     // persist: the pruned posting table feeds BOTH join sides and the
     // norms — without it Spark recomputes the tf+df+window chain three
     // times (no DataFrame-level CSE); measured 8.8 s -> ~2 s at sf0.1
-    val top0 = w.withColumn("rk", row_number().over(byDoc))
+    val top = w.withColumn("rk", row_number().over(byDoc))
       .filter(col("rk") <= topTerms)
       .select(col("doc_id"), col("token"), col("micro"))
-    val top = if (lazyPlan) top0 else top0.persist()
+      .persist()
     val norms = top.groupBy(col("doc_id"))
       .agg(sum(col("micro") * col("micro")).as("n2"))
     val dots = top.as("a")
@@ -310,12 +310,9 @@ object TextAnalysis {
       .select(col("doc_a"), col("doc_b"), round(cosRaw, 4).as("cos"))
       .orderBy(col("cos").desc, col("doc_a"), col("doc_b"))
       .limit(topK)
-    if (lazyPlan) out // plan-inspection form: no pin, no cache to drop
-    else {
-      val pinned = Pin(out) // pin topK rows, drop cache
-      top.unpersist(false)
-      pinned
-    }
+    val pinned = Pin(out) // pin topK rows, drop cache
+    top.unpersist(false)
+    pinned
   }
 
   /** Tokenizer FERTILITY by language — BPE symbols emitted per word,

@@ -6,11 +6,14 @@
   *
   * Map of the engine (details: README.md, blueprint: SURVEY.md):
   *
-  *  - [[graft.SparkEntry]] — the driver contract: `entry`, 57 `queries`,
-  *    and per-query DuckDB `oracleSql` (53 oracled; 4 approximate ops are
-  *    rows-only). [[graft.Verify]] dumps results for the oracle gate,
-  *    [[graft.Bench]] emits the one-line bench JSON, [[graft.Explain]]
-  *    regenerates EXPLAIN.md, [[graft.DemoPipeline]] runs the reference's
+  *  - [[graft.SparkEntry]] — the driver contract: `entry`, 350 `queries`,
+  *    and per-query DuckDB `oracleSql` (all 350 oracled).
+  *    [[graft.Verify]] dumps results for the oracle gate, [[graft.Bench]]
+  *    emits the one-line bench JSON, [[graft.Explain]] regenerates
+  *    EXPLAIN.md: per query, the plans of the SQL executions its build
+  *    ran (pins, driver reads, writes), as Spark reported them through a
+  *    [[org.apache.spark.sql.graft.QueryCapture]], then the plan of the
+  *    frame it returns. [[graft.DemoPipeline]] runs the reference's
   *    `main()` end-to-end. Every main builds its session through
   *    [[graft.GraftSession]].
   *  - [[graft.queries]] — one object per operator family (Relational,

@@ -970,12 +970,6 @@ object NorthStar {
     out
   }
 
-  /** LAZY plan-only variant (no persist/checkpoint) for plan inspection —
-    * correctness of bucket offsets under re-execution is only guaranteed
-    * by [[vocabCoverage]]'s pin. */
-  def vocabCoverageLazy(spark: SparkSession, d: String): DataFrame =
-    vocabCoveragePlan(spark, vocabRanked(spark, d))
-
   /** (bucket, cnt, lrn, lcum): per-token local rank and local cumulative
     * count within range-partitioned buckets of the global
     * (cnt desc, token asc) order — level one of the two-level cumsum. */

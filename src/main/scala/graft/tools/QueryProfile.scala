@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.graft.QueryCapture
 
 import scala.collection.mutable
 
@@ -61,7 +62,7 @@ object QueryProfile {
         val t0 = System.nanoTime()
         val rows = fn(spark, sfDir).count()
         val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300) // let listener events drain (no public waitUntilEmpty)
+        QueryCapture.drain(spark) // deliver every job's end event
         println(f"== $n pass$pass: $sec%.3f s, $rows rows, " +
           f"${jobs.size} jobs ==")
         if (pass == 2) jobs.foreach { case (id, a, b) =>

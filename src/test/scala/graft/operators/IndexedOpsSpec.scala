@@ -3,7 +3,13 @@ package graft.operators
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.QueryCapture
 
 import graft.SparkSpec
 import graft.sources.IndexStore
@@ -19,9 +25,14 @@ class IndexedOpsSpec extends SparkSpec {
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
+  private object Plan extends AdaptiveSparkPlanHelper
+
   /** Root paths of every file-source scan in the optimized plan. */
   private def scanPaths(df: DataFrame): Seq[String] =
-    df.queryExecution.optimizedPlan.collect {
+    scanPaths(df.queryExecution.optimizedPlan)
+
+  private def scanPaths(plan: LogicalPlan): Seq[String] =
+    plan.collect {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         l.relation match {
           case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
@@ -29,6 +40,14 @@ class IndexedOpsSpec extends SparkSpec {
           case _ => Seq.empty[String]
         }
     }.flatten
+
+  /** The one pin `body` runs: the plan of its `localCheckpoint`. */
+  private def pinnedPlan(body: => DataFrame) = {
+    val pins = QueryCapture(spark)(body)._2
+      .filter(_.action == "localCheckpoint")
+    assert(pins.size == 1, pins.map(_.action))
+    pins.head.qe
+  }
 
   test("IndexStore builds once, reuses while fresh, rebuilds on " +
       "fingerprint change, and appends incrementally") {
@@ -145,18 +164,18 @@ class IndexedOpsSpec extends SparkSpec {
       .select($"doc_id").orderBy($"doc_id")
     assert(sortedRows(got) === sortedRows(want))
     assert(got.count() > 0)
-    // plan contract: the existing side comes from the index FILES (the
-    // plan-shape test below pins down the rest)
-    val plan = Dedup.dropIncomingDuplicatesIndexed(idx, existing, incoming, 0.8,
-      lazyPlan = true)
+    // plan contract: the pin reads the existing side from the index FILES
+    // (the plan-shape test below pins down the rest)
+    val plan = pinnedPlan(
+      Dedup.dropIncomingDuplicatesIndexed(idx, existing, incoming, 0.8))
+      .optimizedPlan
     assert(scanPaths(plan).exists(_.contains(new java.io.File(dir).getName)),
       s"existing side should scan the index dir, scans: ${scanPaths(plan)}")
   }
 
   test("indexed incremental dedup probes the corpus in one map-only stage " +
       "against broadcasts of the batch (q110 shape, sf0.01)") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
       Exchange}
     import spark.implicits._
@@ -172,15 +191,11 @@ class IndexedOpsSpec extends SparkSpec {
       Dedup.shingleArrays(existing)
     }
     val batch = spark.read.parquet(s"$tmp/batch")
-    val (_, stages) = org.apache.spark.graft.JobCount.stages(spark.sparkContext) {
-      Dedup.dropIncomingDuplicatesIndexed(idx, existing, batch, 0.8)
+    // the plan the pin ran, as adaptive execution finalized it
+    val (qe, stages) = org.apache.spark.graft.JobCount.stages(spark.sparkContext) {
+      pinnedPlan(Dedup.dropIncomingDuplicatesIndexed(idx, existing, batch, 0.8))
     }
-    // the plan below the pin, as adaptive execution finalizes it
-    val out = Dedup.dropIncomingDuplicatesIndexed(idx, existing, batch, 0.8,
-      lazyPlan = true)
-    out.collect()
-    object Plan extends AdaptiveSparkPlanHelper
-    val plan = out.queryExecution.executedPlan
+    val plan = qe.executedPlan
     def scans(p: SparkPlan, side: String): Boolean = Plan.find(p) {
       case s: FileSourceScanExec =>
         s.relation.location.rootPaths.exists(_.toString.contains(s"$tmp/$side"))
@@ -283,11 +298,18 @@ class IndexedOpsSpec extends SparkSpec {
       " and matches the naive global-window result") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val lazyDf = graft.queries.NorthStar.vocabCoverageLazy(spark, sf)
-    val globalWindows = lazyDf.queryExecution.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window
-          if w.partitionSpec.isEmpty => w
+    // every window the executions run, the cached relations they read
+    // included
+    def windows(p: SparkPlan): Seq[WindowExec] = Plan.flatMap(p) {
+      case w: WindowExec => Seq(w)
+      case m: InMemoryTableScanExec => windows(m.relation.cachedPlan)
+      case _ => Nil
     }
+    val (got, execs) = QueryCapture(spark)(
+      graft.queries.NorthStar.vocabCoverage(spark, sf))
+    val all = execs.flatMap(e => windows(e.qe.executedPlan))
+    assert(all.nonEmpty, "the executions run no window at all")
+    val globalWindows = all.filter(_.partitionSpec.isEmpty)
     assert(globalWindows.isEmpty,
       s"found ${globalWindows.size} partition-less Window(s) in the plan")
     // semantics: identical to the straightforward global-window form
@@ -305,7 +327,6 @@ class IndexedOpsSpec extends SparkSpec {
             ($"cum" - $"cnt") * 100 < p.cast("bigint") * $"tot")).as("pct"))
       .select($"pct", $"n_tokens", round($"cum" / $"tot", 4).as("coverage"))
       .orderBy($"pct")
-    val got = graft.queries.NorthStar.vocabCoverage(spark, sf)
     assert(sortedRows(got) === sortedRows(want))
     assert(got.count() == 3)
   }

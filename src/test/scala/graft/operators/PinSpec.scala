@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.SparkException
 import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.graft.{ColumnBridge, QueryCapture}
 
 import graft.SparkSpec
 
@@ -33,6 +34,22 @@ class PinSpec extends SparkSpec {
     assert(out.count() == 5)
     Pin.release(read)
     assert(!persisted(read))
+  }
+
+  test("a capture around a pin holds the plan the pin ran; the pinned " +
+      "frame's own plan scans its blocks") {
+    def plan(qe: QueryExecution) = qe.explainString(FormattedMode)
+    val (pinned, execs) = QueryCapture(spark) {
+      val p = Pin(edges.groupBy($"src").count())
+      p.collect()
+      p
+    }
+    assert(execs.map(_.action) == Seq("localCheckpoint", "collect"))
+    assert(plan(execs.head.qe).contains("HashAggregate"), plan(execs.head.qe))
+    Seq(execs(1).qe, pinned.queryExecution).map(plan).foreach { p =>
+      assert(p.contains("Scan ExistingRDD") && !p.contains("HashAggregate"), p)
+    }
+    Pin.release(pinned)
   }
 
   test("a loop releases generation n-1 once generation n is pinned") {
