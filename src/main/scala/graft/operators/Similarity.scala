@@ -272,28 +272,41 @@ object Similarity {
     * can be dropped by a mate that is itself dropped against the corpus
     * (deterministic either way; transitivity-aware removal would add a
     * [[graft.operators.Dedup.connectedComponents]] pass over the pairs).
-    * Scale: both joins are cell-key equi-joins; the corpus side is
-    * pre-prunable to the batch's touched cells by the caller. */
+    *
+    * Plan — ship the small batch to the corpus, never the reverse (the
+    * shape of [[graft.operators.Dedup.dropIncomingDuplicatesIndexed]]):
+    *   - the batch's (cell, id, vector, norm) rows are broadcast once;
+    *   - the corpus and the batch itself stream past them in ONE map-only
+    *     cell-keyed hash join, each streamed row tagged with its side. A
+    *     corpus row drops every cell-mate at or above the bound; a batch
+    *     row drops only cell-mates with a larger id. The tag keeps the
+    *     id rule off corpus rows, whose ids may collide with batch ids;
+    *   - the join emits loser ids only; they are broadcast, and the batch
+    *     is anti-joined against them (a set operation, so no `distinct`).
+    * Only same-cell pairs are scored, so a caller need not prune the
+    * corpus to the batch's cells; no corpus row is shuffled or broadcast.
+    *
+    * Broadcast bound: the probe holds one row per batch vector, and the
+    * loser broadcast one row per scored pair at or above the bound. A
+    * caller whose batch is too large to broadcast must split the batch;
+    * a stream bounds it with `maxFilesPerTrigger`. */
   def semDedupIncoming(existing: DataFrame, incoming: DataFrame,
       cellCol: String, threshold: Double): DataFrame = {
-    val bound = roundedGeqBoundary(threshold, 4)
-    def prep(df: DataFrame, cell: String, id: String, v: String, n: String) =
-      df.select(col(cellCol).as(cell), col("vec_id").as(id),
-          asDouble(col("embedding")).as(v))
-        .withColumn(n, sqrt(dot(col(v), col(v))))
-    val in = prep(incoming, "cell_b", "id_b", "vb", "nb")
-    val ex = prep(existing, "cell_a", "id_a", "va", "na")
-    val inAsA = prep(incoming, "cell_a", "id_a", "va", "na")
+    def prep(df: DataFrame, inBatch: Boolean) =
+      df.select(col(cellCol).as("cell_a"), col("vec_id").as("id_a"),
+          asDouble(col("embedding")).as("va"), lit(inBatch).as("in_batch"))
+        .withColumn("na", sqrt(dot(col("va"), col("va"))))
+    val probe = incoming.select(col(cellCol).as("cell_b"),
+        col("vec_id").as("id_b"), asDouble(col("embedding")).as("vb"))
+      .withColumn("nb", sqrt(dot(col("vb"), col("vb"))))
     val rawCos = dot(col("va"), col("vb")) / (col("na") * col("nb"))
-    val dropVsCorpus = in.join(ex.hint("SHUFFLE_HASH"),
-        col("cell_a") === col("cell_b") && rawCos >= bound)
+    val losers = prep(existing, inBatch = false)
+      .union(prep(incoming, inBatch = true))
+      .join(broadcast(probe), col("cell_a") === col("cell_b") &&
+        (!col("in_batch") || col("id_a") < col("id_b")) &&
+        rawCos >= roundedGeqBoundary(threshold, 4))
       .select(col("id_b").as("vec_id"))
-    val dropInBatch = in.join(inAsA.hint("SHUFFLE_HASH"),
-        col("cell_a") === col("cell_b") && col("id_a") < col("id_b") &&
-        rawCos >= bound)
-      .select(col("id_b").as("vec_id"))
-    incoming.join(dropVsCorpus.union(dropInBatch).distinct(),
-      Seq("vec_id"), "left_anti")
+    incoming.join(broadcast(losers), Seq("vec_id"), "left_anti")
   }
 
   /** [[semDedup]] under a SKEWED clusterer — the identical keep/drop

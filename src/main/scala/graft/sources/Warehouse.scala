@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Upsert
@@ -59,32 +59,40 @@ object Warehouse {
   * Hadoop's v1 `FileOutputCommitter` merges every committed task directory
   * under it at the next job commit, so [[append]] deletes it first.
   *
-  * An append with no new key still commits one row-less file (Spark
-  * writes one for an empty result). Assumes one writer. */
+  * Spark commits one row-less file for an empty result; an append with
+  * no new key counts its written rows on the write job itself and deletes
+  * that file again, so a replay leaves the table's file set unchanged.
+  * Assumes one writer. */
 class ParquetWarehouse(spark: SparkSession, path: String) extends StockWarehouse {
 
   private val dir = new Path(path)
   private def fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** True once an append has committed a file; like Spark's reader, this
-    * skips `_` and `.` names (`_SUCCESS`, `_temporary`). */
-  private def hasData: Boolean = fs.exists(dir) &&
-    fs.listStatus(dir).exists { f =>
-      val n = f.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
+  /** The files an append has committed; like Spark's reader, this skips
+    * `_` and `.` names (`_SUCCESS`, `_temporary`). */
+  private def dataFiles: Set[Path] =
+    if (!fs.exists(dir)) Set.empty
+    else fs.listStatus(dir).map(_.getPath).filterNot { p =>
+      p.getName.startsWith("_") || p.getName.startsWith(".")
+    }.toSet
 
   private def current(): DataFrame =
-    if (hasData) spark.read.parquet(path) else spark.emptyDataFrame
+    if (dataFiles.nonEmpty) spark.read.parquet(path) else spark.emptyDataFrame
 
   override def append(batch: DataFrame): Unit = {
     fs.delete(new Path(dir, "_temporary"), true)
     val keys = Seq("symbol", "date")
     val incoming = Warehouse.toWarehouseSchema(batch)
+    val before = dataFiles
     val fresh =
-      if (hasData) Upsert.newKeys(incoming, spark.read.parquet(path), keys)
+      if (before.nonEmpty) Upsert.newKeys(incoming, spark.read.parquet(path), keys)
       else incoming.dropDuplicates(keys)
-    fresh.write.mode("append").parquet(path)
+    // counted by the write job itself: no extra job
+    val written = Observation()
+    fresh.observe(written, count(lit(1)).as("n")).write.mode("append").parquet(path)
+    // the first append keeps its row-less file: it carries the schema
+    if (before.nonEmpty && written.get("n") == 0L)
+      (dataFiles -- before).foreach(fs.delete(_, false))
   }
 
   override def readBack(n: Int): DataFrame =

@@ -18,7 +18,7 @@ import graft.sources.ManifestTable
   *   2. the SEMANTIC gate — cell assignment against the train-once
   *      FROZEN codebook, then
   *      [[graft.operators.Similarity.semDedupIncoming]] against the
-  *      accepted corpus pruned to the batch's touched cells;
+  *      accepted corpus;
   *
   * and the final survivors commit ONCE to the accepted table under a
   * `#txn=<streamId>-<batchId>` marker — one atomic admission decision
@@ -84,10 +84,12 @@ import graft.sources.ManifestTable
   * text index are read once in a map-only stage that matches them and
   * verifies each pair exactly, so only the batch's loser ids are
   * shuffled; no accepted or index row is shuffled or broadcast. The
-  * semantic gate is map-only assignment + cell-equi-joins
-  * with the corpus side pruned to touched cells; that join still
-  * shuffles the pruned corpus vectors (they are its hash build side).
-  * The commit is one append. Usage:
+  * semantic gate has the same shape: map-only cell assignment, then the
+  * batch's vectors are broadcast and the accepted vectors stream past
+  * them in one map-only cell-keyed probe that emits loser ids only;
+  * no accepted row is shuffled or broadcast. Both gates broadcast the
+  * batch, so a batch too large to broadcast must be split: the stream's
+  * `maxFilesPerTrigger` bounds it. The commit is one append. Usage:
   * {{{
   * docsWithVectors.writeStream
   *   .foreachBatch(GatedIngest.sink(accepted, txtIdx, centroids,
@@ -134,25 +136,15 @@ object GatedIngest {
         inBatch, k)
       // map-only cell assignment that keeps the row's text, so the gate-2
       // survivors are the final rows (no join back onto gate 1's output);
-      // persist: assigned feeds semDedupIncoming (which references the
-      // incoming side twice) plus the touched-cell distinct
+      // persist: semDedupIncoming reads the incoming side three times
+      // (the broadcast probe, the streamed batch rows, the anti-join)
       assigned = Similarity.assignWithVec(
         textSurvivors.withColumnRenamed("doc_id", "vec_id"), centroids,
         keep = Seq("text")).persist()
-      val vecSurvivors = accepted match {
-        case None =>
-          Similarity.semDedupIncoming(
-            assigned.limit(0), assigned, "cid", cosThreshold)
-        case Some(acc) =>
-          val corpusVecs = acc.select(col("doc_id").as("vec_id"),
-            col("embedding").cast("array<double>").as("embedding"),
-            col("cid"))
-          // corpus probe pruned to the batch's touched cells
-          val touched = assigned.select(col("cid")).distinct()
-          Similarity.semDedupIncoming(
-            corpusVecs.join(broadcast(touched), "cid"),
-            assigned, "cid", cosThreshold)
-      }
+      val corpusVecs = accepted.fold(assigned.limit(0))(
+        _.withColumnRenamed("doc_id", "vec_id"))
+      val vecSurvivors = Similarity.semDedupIncoming(
+        corpusVecs, assigned, "cid", cosThreshold)
       // ---- single txn-marked commit, then index catch-up
       val finalRows = vecSurvivors.select(col("vec_id").as("doc_id"),
         col("text"), col("embedding"), col("cid"))

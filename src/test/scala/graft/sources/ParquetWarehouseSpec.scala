@@ -76,9 +76,11 @@ class ParquetWarehouseSpec extends SparkSpec {
     val wh = new ParquetWarehouse(spark, path)
     wh.append(day("2025-10-01", "2025-10-02"))
     val before = tableHash(path)
+    val files = dataFiles(path)
     wh.append(day("2025-10-01", "2025-10-02", "2025-10-02"))
     assert(tableHash(path) == before)
     assert(before._1 == 2L)
+    assert(dataFiles(path) == files)
   }
 
   test("a crashed append is recovered: its committed part files and its " +

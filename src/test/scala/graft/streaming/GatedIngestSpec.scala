@@ -4,8 +4,14 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.graft.{ColumnBridge, QueryCapture}
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.SparkSpec
@@ -203,8 +209,7 @@ class GatedIngestSpec extends SparkSpec {
   private val box = "pack my box with five dozen liquor jugs"
   private val sphinx = "sphinx of black quartz judge my vow today now"
 
-  test("a steady-state data micro-batch stays within 12 jobs; the " +
-      "pre-probe heal runs none") {
+  test("steady-state micro-batch: <= 8 jobs, and 0 in the pre-probe heal") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val (accepted, txtIdx, centroids) = dirs()
@@ -237,7 +242,48 @@ class GatedIngestSpec extends SparkSpec {
     assert(indexIds(txtIdx) == Set(1L, 2L, 3L, 11L))
     val (heal, n) = batchJobs(2L)
     assert(heal == 0)
-    assert(n <= 12, s"a steady-state micro-batch ran $n jobs")
+    assert(n <= 8, s"a steady-state micro-batch ran $n jobs")
+  }
+
+  private object Plan extends AdaptiveSparkPlanHelper
+
+  test("gate 2 streams the accepted corpus past the broadcast batch: the " +
+      "commit runs no shuffled join and shuffles no accepted row") {
+    val (accepted, txtIdx, centroids) = dirs()
+    val sink = GatedIngest.sink(accepted, txtIdx, centroids,
+      k = 2, textThreshold = 0.5, cosThreshold = 0.99, "shape") _
+    sink(docs((1L, fox, Seq(1.0, 0.0, 0.0, 0.0)),
+      (2L, box, Seq(0.0, 1.0, 0.0, 0.0))), 0L)
+    // 4 is a near-parallel vector of accepted doc 2 under a novel text
+    val execs = QueryCapture(spark)(sink(docs(
+      (3L, sphinx, Seq(0.0, 0.0, 1.0, 0.0)),
+      (4L, "how vexingly quick daft zebras jump around today",
+        Seq(0.01, 0.999, 0.0, 0.0))), 1L))._2
+    assert(acceptedIds(accepted) == Set(1L, 2L, 3L))
+    val commits = execs.map(_.qe.executedPlan).filter { p =>
+      Plan.collect(p) {
+        case w: DataWritingCommandExec => w.cmd
+      }.exists {
+        case c: InsertIntoHadoopFsRelationCommand =>
+          c.outputPath.toString.contains(accepted)
+        case _ => false
+      }
+    }
+    assert(commits.size == 1, execs.map(_.action))
+    def scansAccepted(p: SparkPlan): Boolean = Plan.collect(p) {
+      case s: FileSourceScanExec => s.relation.location.rootPaths
+    }.flatten.exists(_.toString.contains(accepted))
+    val plan = commits.head
+    assert(scansAccepted(plan), s"the commit probes no accepted row:\n$plan")
+    val shuffledJoins = Plan.collect(plan) {
+      case j: ShuffledHashJoinExec => j
+      case j: SortMergeJoinExec => j
+    }
+    assert(shuffledJoins.isEmpty, s"\n$plan")
+    val acceptedShuffles = Plan.collect(plan) {
+      case e: ShuffleExchangeExec if scansAccepted(e.child) => e
+    }
+    assert(acceptedShuffles.isEmpty, s"\n$plan")
   }
 
   test("accepted committed but its index append skipped: the next batch " +
