@@ -42,8 +42,8 @@ object Bench {
       case "noop" => df.write.format("noop").mode("overwrite").save()
       case _ => df.count(): Unit
     }
-    // Per-query session hygiene (shared with Verify): see SessionHygiene
-    // for the full round-4 pathology diagnosis.
+    // Per-query session hygiene (shared with Verify): SessionHygiene
+    // says what it frees and how.
     def cleanup(): Unit = SessionHygiene.cleanup(spark)
     // GC time per query: lets a future reader tell environment noise (GC
     // wall) from plan regressions without re-running anything.

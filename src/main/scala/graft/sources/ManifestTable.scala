@@ -34,12 +34,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * schema parquet inference would return for the snapshot's files (every
   * field nullable, array elements and map values too). [[read]],
   * [[readVersion]] and [[readWhereBetween]] hand it to
-  * `spark.read.schema`, so building a DataFrame runs no Spark job (the
-  * inference it replaces is one footer-merge job per read). Commits that
-  * keep files carry the line forward; a commit that keeps none reads it
-  * from a new file's footer. A manifest without the line (written before
-  * it existed, or whose new files disagree with the carried schema) is
-  * read by inference, as before.
+  * `spark.read.schema`, so building a DataFrame runs no schema job (the
+  * inference it replaces is one footer-merge job per read). It still
+  * runs one listing job when the snapshot has more than 32 files: above
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (default 32)
+  * Spark resolves an explicit file list with a distributed job.
+  * Commits that keep files carry the line forward; a commit that keeps
+  * none reads it from a new file's footer. A manifest without the line
+  * (written before it existed, or whose new files disagree with the
+  * carried schema) is read by inference, as before.
   *
   * Scale note: the manifest is O(files), not O(rows) — at 100 TB with
   * 128 MB files that is ~800k lines per manifest, which is why real
@@ -162,7 +165,9 @@ object ManifestTable {
 
   /** Read `fs`, files of snapshot `v`, with the schema `v` stores (or by
     * inference when it stores none). Building the DataFrame runs no
-    * Spark job when the schema is stored. */
+    * Spark job when the schema is stored and `fs` has at most 32 files;
+    * above Spark's `parallelPartitionDiscovery.threshold` (32) the file
+    * list is resolved by one listing job. */
   def readFiles(spark: SparkSession, dir: String, v: Long,
       fs: Seq[String]): DataFrame =
     schemaLine(dir, v)
