@@ -43,7 +43,13 @@ object Dedup {
     * word vocabulary, bigrams average df≈300 per shingle; trigrams ≈6). */
   def shingleArrays(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame =
-    Par.fanOut(docs)
+    shingled(Par.fanOut(docs), textCol, idCol)
+
+  /** [[shingleArrays]] without the fan-out, for a side that is broadcast
+    * (its partitioning is moot, and a repartition would cost a shuffle). */
+  private def shingled(docs: DataFrame, textCol: String = "text",
+      idCol: String = "doc_id"): DataFrame =
+    docs
       .select(col(idCol).as("doc_id"),
         TextExpressions.shingle_hashes(split(col(textCol), " "), 3).as("arr"))
       .filter(size(col("arr")) >= 1) // < 3 tokens → no trigram shingles
@@ -578,31 +584,31 @@ object Dedup {
     *     applies the size-ratio prefilter and keeps pairs whose exact J
     *     (`sorted_intersect_count`, inline) is ≥ t;
     *   - both corpus scans run in ONE map-only stage that emits only
-    *     loser doc ids; those are shuffled once (a distinct), and the
-    *     batch is anti-joined against them.
+    *     loser doc ids; those are collected to the driver, and the
+    *     result is `incoming` filtered by that id set ([[withoutIds]]).
     * No corpus row is shuffled or broadcast, the index and the corpus
-    * texts are each read once, and nothing is pinned but the result.
-    * Incoming ids may collide with corpus ids: a pair carries both
-    * arrays, so no id lookup can confuse the sides.
+    * texts are each read once, and nothing is pinned: a caller that
+    * reads the result twice reads `incoming` twice (the gated-ingest
+    * sink passes a local relation, which planning folds the filter
+    * into). Incoming ids may collide with corpus ids: a pair carries
+    * both arrays, so no id lookup can confuse the sides.
     *
-    * Broadcast bound: the near-gate broadcast holds each batch doc's
-    * array once per prefix shingle, about (1−t)·n + 1 copies of an
-    * n-shingle array. On q110 at sf0.1 (1000 batch docs of ~52 trigrams,
-    * t = 0.8) that is 11,079 rows and an 8.7 MB hash relation; the text
-    * broadcast holds one row per batch doc. A caller whose batch is too
-    * large to broadcast must split the batch.
-    *
-    * The result is pinned (eager localCheckpoint): run as one action, the
-    * probe takes a few jobs, where an adaptive plan that embeds it (the
-    * gated-ingest sink's semantic gate) would run each of its stages as a
-    * job of its own. */
+    * Driver bound: the batch passes through the driver twice, as the
+    * broadcast of its texts and of its prefix shingles, and its loser
+    * ids (at most one per batch doc) once more, as the collected set.
+    * The near-gate broadcast holds each batch doc's array once per
+    * prefix shingle, about (1−t)·n + 1 copies of an n-shingle array. On
+    * q110 at sf0.1 (1000 batch docs of ~52 trigrams, t = 0.8) that is
+    * 11,079 rows and an 8.7 MB hash relation; the text broadcast holds
+    * one row per batch doc. A caller whose batch is too large for the
+    * driver must split the batch. */
   def dropIncomingDuplicatesIndexed(existingIndex: DataFrame,
       existingTexts: DataFrame, incoming: DataFrame,
       threshold: Double): DataFrame = {
     val exactLosers = existingTexts.select(col("text"))
       .join(broadcast(incoming.select(col("doc_id"), col("text"))), "text")
       .select(col("doc_id"))
-    val probe = shingleArrays(incoming).select(col("doc_id").as("doc_a"),
+    val probe = shingled(incoming).select(col("doc_id").as("doc_a"),
       col("arr").as("arr_a"), col("n_sh").as("na"),
       explode(slice(col("arr"), lit(1),
         (col("n_sh") - ceil(lit(threshold) * col("n_sh")) + 1).cast("int")))
@@ -617,12 +623,18 @@ object Dedup {
         TextExpressions.sorted_intersect_count(col("arr_a"), col("arr_b")))
       .filter(col("c") / (col("na") + col("nb") - col("c")) >= threshold)
       .select(col("doc_a").as("doc_id"))
-    // SHUFFLE_HASH: the distinct already hash-partitions the losers on
-    // doc_id, so only the batch moves, and neither side is sorted
-    val survivors = incoming.join(
-      exactLosers.union(nearLosers).distinct().hint("SHUFFLE_HASH"),
-      Seq("doc_id"), "left_anti")
-    Pin(survivors)
+    withoutIds(incoming, "doc_id", exactLosers.union(nearLosers))
+  }
+
+  /** `incoming` without the rows whose `idCol` is one of `losers`' ids
+    * (its first column). The ids are collected to the driver, so
+    * `losers` must be bounded by the incoming side, and applied as a
+    * filter with `left_anti` semantics: a row with a null id survives. */
+  private[operators] def withoutIds(incoming: DataFrame, idCol: String,
+      losers: DataFrame): DataFrame = {
+    val ids = losers.collect().map(_.get(0)).distinct
+    if (ids.isEmpty) incoming
+    else incoming.filter(col(idCol).isNull || !col(idCol).isin(ids.toIndexedSeq: _*))
   }
 
   /** X2 SimHash near-dup candidates: 64-bit fingerprints, 4×16-bit bands

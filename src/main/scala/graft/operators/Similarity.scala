@@ -281,15 +281,17 @@ object Similarity {
     *     corpus row drops every cell-mate at or above the bound; a batch
     *     row drops only cell-mates with a larger id. The tag keeps the
     *     id rule off corpus rows, whose ids may collide with batch ids;
-    *   - the join emits loser ids only; they are broadcast, and the batch
-    *     is anti-joined against them (a set operation, so no `distinct`).
+    *   - the join emits loser ids only; they are collected to the
+    *     driver, and the result is `incoming` filtered by that id set
+    *     ([[Dedup.withoutIds]]), so nothing is pinned or shuffled.
     * Only same-cell pairs are scored, so a caller need not prune the
     * corpus to the batch's cells; no corpus row is shuffled or broadcast.
     *
-    * Broadcast bound: the probe holds one row per batch vector, and the
-    * loser broadcast one row per scored pair at or above the bound. A
-    * caller whose batch is too large to broadcast must split the batch;
-    * a stream bounds it with `maxFilesPerTrigger`. */
+    * Driver bound: the probe broadcast holds one row per batch vector,
+    * and the collected losers one id per scored pair at or above the
+    * bound (a few per batch vector; the set keeps each once). A caller
+    * whose batch is too large for the driver must split the batch; a
+    * stream bounds it with `maxFilesPerTrigger`. */
   def semDedupIncoming(existing: DataFrame, incoming: DataFrame,
       cellCol: String, threshold: Double): DataFrame = {
     def prep(df: DataFrame, inBatch: Boolean) =
@@ -306,7 +308,7 @@ object Similarity {
         (!col("in_batch") || col("id_a") < col("id_b")) &&
         rawCos >= roundedGeqBoundary(threshold, 4))
       .select(col("id_b").as("vec_id"))
-    incoming.join(broadcast(losers), Seq("vec_id"), "left_anti")
+    Dedup.withoutIds(incoming, "vec_id", losers)
   }
 
   /** [[semDedup]] under a SKEWED clusterer — the identical keep/drop

@@ -339,15 +339,17 @@ object ManifestTable {
     acc.toMap
   }
 
-  // one Hadoop conf for every footer read: a fresh one re-parses its
-  // default resources
+  // one Hadoop conf for every footer read, passed to both the input
+  // file and the read options: options built without it make parquet
+  // construct (and parse the XML defaults of) a fresh conf per footer
   private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
 
   /** The parquet footer of `file` (an O(footer) read). */
   private def footer(file: Path): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val path = new org.apache.hadoop.fs.Path(file.toUri)
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file.toUri), hadoopConf))
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, hadoopConf),
+      org.apache.parquet.HadoopReadOptions.builder(hadoopConf, path).build())
     try reader.getFooter finally reader.close()
   }
 

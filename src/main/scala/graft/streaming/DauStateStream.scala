@@ -21,17 +21,12 @@ import graft.operators.Behavior
 object DauStateStream {
 
   /** `writeStream.foreachBatch` sink. `streamId` scopes txn markers —
-    * one logical stream per state table. An EMPTY micro-batch is
-    * short-circuited before any state work (ADVICE r8): merging it
-    * would commit a zero-row snapshot — depending on AQE's empty-
-    * partition handling that can mean zero part files, and every later
-    * batch's ManifestTable.read would then fail its "snapshot is
-    * empty" require, wedging the stream. Skipping the commit entirely
-    * is safe for exactly-once too: replaying an empty batch is a
-    * no-op by definition, so it needs no txn marker. */
+    * one logical stream per state table. An EMPTY micro-batch has an
+    * empty state, which [[StateCommit.mergeCommit]] does not commit
+    * (ADVICE r8; the rationale is there), so the micro-batch runs once:
+    * in the pin of its state. */
   def sink(stateDir: String, lgK: Int, streamId: String)
       (batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     StateCommit.mergeCommit(stateDir,
       Behavior.dauState(batch, "user_id", "ts", lgK),
       Behavior.mergeDauState, s"$streamId-$batchId")

@@ -48,11 +48,11 @@ object EdgeStateStream {
     a.unionByName(b).groupBy(col("src"), col("dst"))
       .agg(sum(col("n")).as("n"))
 
-  /** `writeStream.foreachBatch` sink over edge-assertion rows. Empty
-    * micro-batches short-circuit before any state work. */
+  /** `writeStream.foreachBatch` sink over edge-assertion rows. An empty
+    * micro-batch (or one of null endpoints only) has an empty state and
+    * commits nothing — the [[StateCommit]] empty-snapshot rule. */
   def sink(stateDir: String, srcCol: String, dstCol: String,
       streamId: String)(batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     StateCommit.mergeCommit(stateDir,
       edgeState(batch, srcCol, dstCol),
       mergeEdgeState, s"$streamId-$batchId")

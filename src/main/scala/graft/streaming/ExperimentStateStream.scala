@@ -23,11 +23,10 @@ object ExperimentStateStream {
 
   /** `writeStream.foreachBatch` sink over event rows with columns
     * (user_id, event_type, value). `streamId` scopes txn markers.
-    * Empty micro-batches are short-circuited before any state work —
-    * the [[DauStateStream]] empty-snapshot rule. */
+    * An empty micro-batch has an empty state and commits nothing — the
+    * [[StateCommit]] empty-snapshot rule. */
   def sink(stateDir: String, convType: String, streamId: String)
       (batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     val bState = Behavior.experimentState(batch, "user_id",
       org.apache.spark.sql.functions.round(
         org.apache.spark.sql.functions.col("value") * 100, 0),

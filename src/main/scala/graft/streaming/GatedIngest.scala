@@ -1,10 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-import graft.operators.{Dedup, Pin, Similarity}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.operators.{Dedup, Similarity}
 import graft.sources.ManifestTable
 
 /** X7 capstone — the full gated-ingest pipeline as ONE `foreachBatch`
@@ -74,22 +76,27 @@ import graft.sources.ManifestTable
   * exactly once no matter which job, run, or replay delivers it —
   * generalized to any corpus with ids, text, and embeddings.
   *
-  * Scale shape per batch: the micro-batch is cached once, so the
-  * emptiness probe and both gates read the stream's stateful stage
-  * once; accepted and the text index are each resolved once, pinned to
-  * one version, and shared by the heal and both gates; the frozen
+  * Scale shape per batch: the micro-batch is collected to the driver
+  * once, which runs the stream's stateful stage once and is the
+  * emptiness probe; the in-batch collapse runs there, and both gates
+  * and the commit read the result as a local relation, whose
+  * projections and filters planning folds in and whose broadcast runs
+  * no job. Accepted and the text index are each resolved once, pinned
+  * to one version, and shared by the heal and both gates; the frozen
   * codebook is collected once per snapshot and kept on the driver. The
   * text gate is the indexed incremental-dedup plan: the batch's texts
   * and prefix shingles are broadcast, and the accepted texts and the
   * text index are read once in a map-only stage that matches them and
-  * verifies each pair exactly, so only the batch's loser ids are
-  * shuffled; no accepted or index row is shuffled or broadcast. The
-  * semantic gate has the same shape: map-only cell assignment, then the
-  * batch's vectors are broadcast and the accepted vectors stream past
-  * them in one map-only cell-keyed probe that emits loser ids only;
-  * no accepted row is shuffled or broadcast. Both gates broadcast the
-  * batch, so a batch too large to broadcast must be split: the stream's
-  * `maxFilesPerTrigger` bounds it. The commit is one append. Usage:
+  * verifies each pair exactly, so only the batch's loser ids come back
+  * to the driver; no accepted or index row is shuffled or broadcast.
+  * The semantic gate has the same shape: map-only cell assignment, then
+  * the batch's vectors are broadcast and the accepted vectors stream
+  * past them in one map-only cell-keyed probe that emits loser ids
+  * only. Each gate returns the batch minus its losers as a filter, so
+  * nothing is persisted or pinned. The batch, its broadcasts and its
+  * loser ids all pass through the driver, so a batch too large for the
+  * driver must be split: the stream's `maxFilesPerTrigger` bounds it.
+  * The commit is one append. Usage:
   * {{{
   * docsWithVectors.writeStream
   *   .foreachBatch(GatedIngest.sink(accepted, txtIdx, centroids,
@@ -110,61 +117,50 @@ object GatedIngest {
       catchUpIndex(spark, acceptedDir, textIndexDir)
       return // replayed micro-batch: nothing owed but the catch-up
     }
-    // one materialization of the micro-batch: the emptiness probe fills
-    // the cache the in-batch collapse then reads, so the stream's
-    // stateful stage runs once (an empty batch costs what isEmpty did)
-    val batchP = batch.persist()
-    // set as each stage materializes; released in the finally
-    var inBatch: DataFrame = null
-    var pinned: Option[DataFrame] = None
-    var assigned: DataFrame = null
-    try {
-      if (batchP.isEmpty) return
-      // accepted resolved once, pinned to one version, shared by the
-      // heal and both gates; heal the text index BEFORE probing (see the
-      // crash-window argument)
-      val (acceptedV, accepted) = ManifestTable.readIfAny(spark, acceptedDir)
-      catchUp(spark, acceptedDir, acceptedV, accepted, textIndexDir)
-      inBatch = collapseExact(batchP).persist()
-      // ---- gate 1: exact + near text dedup against the accepted corpus
-      val textSurvivors = textGate(accepted, textIndexDir, inBatch,
-        textThreshold)
-      // a probe of accepted returns a pin
-      if (accepted.isDefined) pinned = Some(textSurvivors)
-      // ---- gate 2: semantic dedup in frozen-codebook cells
-      val centroids = codebook(centroidDir, accepted.isEmpty, acceptedDir,
-        inBatch, k)
-      // map-only cell assignment that keeps the row's text, so the gate-2
-      // survivors are the final rows (no join back onto gate 1's output);
-      // persist: semDedupIncoming reads the incoming side three times
-      // (the broadcast probe, the streamed batch rows, the anti-join)
-      assigned = Similarity.assignWithVec(
-        textSurvivors.withColumnRenamed("doc_id", "vec_id"), centroids,
-        keep = Seq("text")).persist()
-      val corpusVecs = accepted.fold(assigned.limit(0))(
-        _.withColumnRenamed("doc_id", "vec_id"))
-      val vecSurvivors = Similarity.semDedupIncoming(
-        corpusVecs, assigned, "cid", cosThreshold)
-      // ---- single txn-marked commit, then index catch-up
-      val finalRows = vecSurvivors.select(col("vec_id").as("doc_id"),
-        col("text"), col("embedding"), col("cid"))
-      ManifestTable.appendWithRetry(spark, acceptedDir, finalRows,
-        txn = Some(s"$streamId-$batchId"))
-      catchUpIndex(spark, acceptedDir, textIndexDir)
-    } finally {
-      if (assigned != null) assigned.unpersist(false)
-      Pin.release(pinned.toSeq: _*)
-      if (inBatch != null) inBatch.unpersist(false)
-      batchP.unpersist(false)
-    }
+    // the micro-batch, collected once: both gates broadcast it, so it is
+    // bounded, and as a local relation it runs the stream's stateful
+    // stage once and costs later plans no job or stage of its own
+    val rows = batch.collect()
+    if (rows.isEmpty) return
+    // accepted resolved once, pinned to one version, shared by the heal
+    // and both gates; heal the text index BEFORE probing (see the
+    // crash-window argument)
+    val (acceptedV, accepted) = ManifestTable.readIfAny(spark, acceptedDir)
+    catchUp(spark, acceptedDir, acceptedV, accepted, textIndexDir)
+    val inBatch = spark.createDataFrame(
+      collapseExact(rows, batch.schema).asJava, batch.schema)
+    // ---- gate 1: exact + near text dedup against the accepted corpus
+    val textSurvivors = textGate(accepted, textIndexDir, inBatch,
+      textThreshold)
+    // ---- gate 2: semantic dedup in frozen-codebook cells
+    val centroids = codebook(centroidDir, accepted.isEmpty, acceptedDir,
+      inBatch, k)
+    // map-only cell assignment that keeps the row's text, so the gate-2
+    // survivors are the final rows (no join back onto gate 1's output)
+    val assigned = Similarity.assignWithVec(
+      textSurvivors.withColumnRenamed("doc_id", "vec_id"), centroids,
+      keep = Seq("text"))
+    val corpusVecs = accepted.fold(assigned.limit(0))(
+      _.withColumnRenamed("doc_id", "vec_id"))
+    val vecSurvivors = Similarity.semDedupIncoming(
+      corpusVecs, assigned, "cid", cosThreshold)
+    // ---- single txn-marked commit, then index catch-up
+    val finalRows = vecSurvivors.select(col("vec_id").as("doc_id"),
+      col("text"), col("embedding"), col("cid"))
+    ManifestTable.appendWithRetry(spark, acceptedDir, finalRows,
+      txn = Some(s"$streamId-$batchId"))
+    catchUpIndex(spark, acceptedDir, textIndexDir)
   }
 
-  /** In-batch exact text collapse to the lowest doc_id. */
-  private def collapseExact(batch: DataFrame): DataFrame =
-    batch
-      .withColumn("__rk", row_number().over(
-        Window.partitionBy(col("text")).orderBy(col("doc_id"))))
-      .filter(col("__rk") === 1).drop("__rk")
+  /** In-batch exact text collapse: one row per text, null texts counting
+    * as one, with the lowest doc_id (a null id lowest, as an ascending
+    * sort orders it). */
+  private def collapseExact(rows: Array[Row], schema: StructType): Seq[Row] = {
+    val (id, text) = (schema.fieldIndex("doc_id"), schema.fieldIndex("text"))
+    rows.toSeq.groupBy(r => Option(r.get(text))).values
+      .map(_.minBy(r => if (r.isNullAt(id)) None else Some(r.getLong(id))))
+      .toSeq
+  }
 
   /** Exact + near text dedup of `inBatch` against the corpus (None when
     * empty): probes the persisted shingle index at `indexDir`, or — index

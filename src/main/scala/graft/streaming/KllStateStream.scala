@@ -23,12 +23,11 @@ import graft.operators.QuantileState
 object KllStateStream {
 
   /** `writeStream.foreachBatch` sink over event rows; `value` is the
-    * long-valued metric expression. Empty micro-batches are
-    * short-circuited before any state work (the [[DauStateStream]]
-    * empty-snapshot rationale). */
+    * long-valued metric expression. An empty micro-batch has an empty
+    * state and commits nothing (the [[StateCommit]] empty-snapshot
+    * rule). */
   def sink(stateDir: String, ts: String, value: Column, k: Int,
       streamId: String)(batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     StateCommit.mergeCommit(stateDir,
       QuantileState.kllDayState(batch, ts, value, k),
       (a: DataFrame, b: DataFrame) =>
@@ -43,7 +42,6 @@ object KllStateStream {
   def sinkByKey(stateDir: String, keyCol: String, ts: String,
       value: Column, k: Int, streamId: String)(
       batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     StateCommit.mergeCommit(stateDir,
       QuantileState.kllKeyDayState(batch, keyCol, ts, value, k),
       (a: DataFrame, b: DataFrame) =>

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.col
 
 import graft.operators.Labeling
 
@@ -30,13 +31,13 @@ object LabelStateStream {
   /** `writeStream.foreachBatch` sink over label-log rows; `lfs` are
     * the named labeling functions evaluated per row (the
     * [[graft.operators.Labeling.majorityVote]] contract); `streamId`
-    * scopes txn markers. Empty micro-batches are short-circuited
-    * before any state work — the [[DauStateStream]] empty-snapshot
-    * rule. */
+    * scopes txn markers. An empty micro-batch commits nothing — the
+    * [[StateCommit]] empty-snapshot rule: its global aggregate still
+    * yields one zero-count row per LF, which the `n > 0` filter drops. */
   def sink(stateDir: String, lfs: Seq[(String, Column)],
       streamId: String)(batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return
-    StateCommit.mergeCommit(stateDir, Labeling.labelState(batch, lfs),
+    StateCommit.mergeCommit(stateDir,
+      Labeling.labelState(batch, lfs).filter(col("n") > 0),
       Labeling.mergeLabelState, s"$streamId-$batchId")
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.operators.Pin
 import graft.sources.ManifestTable
@@ -19,12 +20,20 @@ import graft.sources.ManifestTable
   * re-checked inside the commit's critical section, so a replayed batch
   * racing its own retry is still exactly-once. The batch state is
   * pinned ([[Pin]]) before the loop: attempts re-merge
-  * the |keys|-row state, never re-scan the micro-batch. */
+  * the |keys|-row state, never re-scan the micro-batch.
+  *
+  * An empty batch state commits nothing (ADVICE r8): a zero-row
+  * snapshot can mean zero part files, and every later read of the state
+  * would fail its "snapshot is empty" require, wedging the stream.
+  * Skipping is exactly-once too, since replaying an empty batch is a
+  * no-op by definition. The check reads the pin, so a sink passes its
+  * micro-batch straight in and runs it once, with no emptiness probe of
+  * its own. */
 object StateCommit {
 
-  /** Merge `bState` (this batch's sufficient statistics, non-empty)
-    * into the persisted state at `stateDir` as one atomic snapshot
-    * carrying `txn`. `merge(persisted, batch)` must be the state
+  /** Merge `bState` (this batch's sufficient statistics) into the
+    * persisted state at `stateDir` as one atomic snapshot carrying
+    * `txn`; an empty `bState` commits nothing. `merge(persisted, batch)` must be the state
     * family's exact merge (state is a sufficient statistic, so
     * merge(split) == rebuild(full) — spec-pinned per family). */
   def mergeCommit(stateDir: String, bState: DataFrame,
@@ -33,8 +42,11 @@ object StateCommit {
     val spark = bState.sparkSession
     ManifestTable.create(stateDir)
     if (ManifestTable.hasCommittedTxn(stateDir, txn)) return
-    val pinned = Pin(bState)
+    // the pin's own job counts its rows
+    val rows = Observation()
+    val pinned = Pin(bState.observe(rows, count(lit(1)).as("n")))
     try {
+      if (rows.get("n") == 0L) return
       var attempt = 0
       var done = false
       while (!done) {

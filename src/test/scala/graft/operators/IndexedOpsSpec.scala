@@ -41,12 +41,11 @@ class IndexedOpsSpec extends SparkSpec {
         }
     }.flatten
 
-  /** The one pin `body` runs: the plan of its `localCheckpoint`. */
-  private def pinnedPlan(body: => DataFrame) = {
-    val pins = QueryCapture(spark)(body)._2
-      .filter(_.action == "localCheckpoint")
-    assert(pins.size == 1, pins.map(_.action))
-    pins.head.qe
+  /** The one execution `body` runs: the collect of its loser-id probe. */
+  private def probePlan(body: => DataFrame) = {
+    val execs = QueryCapture(spark)(body)._2
+    assert(execs.map(_.action) == Seq("collect"), execs.map(_.action))
+    execs.head.qe
   }
 
   test("IndexStore builds once, reuses while fresh, rebuilds on " +
@@ -164,9 +163,9 @@ class IndexedOpsSpec extends SparkSpec {
       .select($"doc_id").orderBy($"doc_id")
     assert(sortedRows(got) === sortedRows(want))
     assert(got.count() > 0)
-    // plan contract: the pin reads the existing side from the index FILES
-    // (the plan-shape test below pins down the rest)
-    val plan = pinnedPlan(
+    // plan contract: the probe reads the existing side from the index
+    // FILES (the plan-shape test below pins down the rest)
+    val plan = probePlan(
       Dedup.dropIncomingDuplicatesIndexed(idx, existing, incoming, 0.8))
       .optimizedPlan
     assert(scanPaths(plan).exists(_.contains(new java.io.File(dir).getName)),
@@ -178,6 +177,8 @@ class IndexedOpsSpec extends SparkSpec {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
       Exchange}
+    import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec,
+      SortMergeJoinExec}
     import spark.implicits._
     // q110's split, with the batch and the corpus in files of their own
     // so a scan tells which side it reads
@@ -191,34 +192,39 @@ class IndexedOpsSpec extends SparkSpec {
       Dedup.shingleArrays(existing)
     }
     val batch = spark.read.parquet(s"$tmp/batch")
-    // the plan the pin ran, as adaptive execution finalized it
+    // the plan the loser-id probe ran, as adaptive execution finalized it
     val (qe, stages) = org.apache.spark.graft.JobCount.stages(spark.sparkContext) {
-      pinnedPlan(Dedup.dropIncomingDuplicatesIndexed(idx, existing, batch, 0.8))
+      probePlan(Dedup.dropIncomingDuplicatesIndexed(idx, existing, batch, 0.8))
     }
     val plan = qe.executedPlan
-    def scans(p: SparkPlan, side: String): Boolean = Plan.find(p) {
-      case s: FileSourceScanExec =>
-        s.relation.location.rootPaths.exists(_.toString.contains(s"$tmp/$side"))
-      case _ => false
-    }.isDefined
-    def scansCorpus(p: SparkPlan) = scans(p, "shingles") || scans(p, "corpus")
-    assert(scans(plan, "shingles") && scans(plan, "corpus"), s"$plan")
+    def scanCount(p: SparkPlan, side: String): Int = Plan.collect(p) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toString.contains(s"$tmp/$side")) => s
+    }.size
+    def scansCorpus(p: SparkPlan) =
+      scanCount(p, "shingles") + scanCount(p, "corpus") > 0
+    // each corpus table is read once
+    assert(scanCount(plan, "shingles") == 1 && scanCount(plan, "corpus") == 1,
+      s"$plan")
     // the batch is broadcast twice, once per gate; no corpus row is
     val broadcasts = Plan.collect(plan) { case b: BroadcastExchangeLike => b }
     assert(broadcasts.map(_.output.map(_.name)).sortBy(_.size) ==
       Seq(Seq("doc_id", "text"), Seq("doc_a", "arr_a", "na", "shingle")),
       s"expected the batch's texts and prefix shingles broadcast:\n$plan")
     broadcasts.foreach(b => assert(!scansCorpus(b), s"broadcast of corpus rows:\n$b"))
-    // corpus rows never cross an exchange: the only exchanges above a
-    // corpus scan carry the loser doc ids the map-only probes emit
+    assert(Plan.collect(plan) {
+      case j: ShuffledHashJoinExec => j
+      case j: SortMergeJoinExec => j
+    }.isEmpty, s"a shuffled join in the probe:\n$plan")
+    // corpus rows never cross an exchange: an exchange above a corpus
+    // scan could carry only the loser doc ids the map-only probes emit
     Plan.collect(plan) { case e: Exchange if scansCorpus(e) => e }.foreach { e =>
       assert(e.output.map(_.name) == Seq("doc_id"),
         s"an exchange above a corpus scan carries ${e.output}:\n$plan")
     }
-    // measured 6: the text broadcast; the batch's fan-out and the prefix
-    // broadcast; the batch's shuffle on doc_id, the map-only corpus probe
-    // and the anti-join
-    assert(stages <= 6 + 1, s"probe ran $stages stages")
+    // measured 3: the text broadcast, the prefix broadcast and the
+    // map-only corpus probe
+    assert(stages <= 3, s"probe ran $stages stages")
   }
 
   test("incremental dedup maintenance loop: probe, commit survivors, " +

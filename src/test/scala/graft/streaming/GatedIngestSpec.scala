@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
@@ -260,30 +261,78 @@ class GatedIngestSpec extends SparkSpec {
       (4L, "how vexingly quick daft zebras jump around today",
         Seq(0.01, 0.999, 0.0, 0.0))), 1L))._2
     assert(acceptedIds(accepted) == Set(1L, 2L, 3L))
-    val commits = execs.map(_.qe.executedPlan).filter { p =>
-      Plan.collect(p) {
-        case w: DataWritingCommandExec => w.cmd
-      }.exists {
-        case c: InsertIntoHadoopFsRelationCommand =>
-          c.outputPath.toString.contains(accepted)
-        case _ => false
-      }
+    def writesTo(p: SparkPlan, dir: String): Boolean = Plan.collect(p) {
+      case w: DataWritingCommandExec => w.cmd
+    }.exists {
+      case c: InsertIntoHadoopFsRelationCommand => c.outputPath.toString.contains(dir)
+      case _ => false
     }
+    def scans(p: SparkPlan, dir: String): Int = Plan.collect(p) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toString.contains(dir)) => s
+    }.size
+    val plans = execs.map(_.qe.executedPlan)
+    // the commit writes the local batch: it scans no file at all
+    val commits = plans.filter(writesTo(_, accepted))
     assert(commits.size == 1, execs.map(_.action))
-    def scansAccepted(p: SparkPlan): Boolean = Plan.collect(p) {
-      case s: FileSourceScanExec => s.relation.location.rootPaths
-    }.flatten.exists(_.toString.contains(accepted))
-    val plan = commits.head
-    assert(scansAccepted(plan), s"the commit probes no accepted row:\n$plan")
-    val shuffledJoins = Plan.collect(plan) {
-      case j: ShuffledHashJoinExec => j
-      case j: SortMergeJoinExec => j
+    assert(Plan.collect(commits.head) { case s: FileSourceScanExec => s }.isEmpty,
+      s"the commit scans files:\n${commits.head}")
+    // the two loser-id probes: gate 1 reads accepted's texts and the text
+    // index, gate 2 accepted's vectors; each reads a table once
+    val probes = plans.filter(p => scans(p, accepted) > 0 && !writesTo(p, txtIdx))
+    assert(probes.size == 2, execs.map(_.action))
+    probes.foreach(p => assert(scans(p, accepted) == 1, s"\n$p"))
+    assert(probes.map(scans(_, txtIdx)).sorted == Seq(0, 1), probes)
+    probes.foreach { plan =>
+      val shuffledJoins = Plan.collect(plan) {
+        case j: ShuffledHashJoinExec => j
+        case j: SortMergeJoinExec => j
+      }
+      assert(shuffledJoins.isEmpty, s"\n$plan")
+      // no exchange above a corpus scan carries more than ids
+      Plan.collect(plan) {
+        case e: ShuffleExchangeExec
+            if scans(e.child, accepted) + scans(e.child, txtIdx) > 0 => e
+      }.foreach(e => assert(e.output.size == 1, s"\n$plan"))
     }
-    assert(shuffledJoins.isEmpty, s"\n$plan")
-    val acceptedShuffles = Plan.collect(plan) {
-      case e: ShuffleExchangeExec if scansAccepted(e.child) => e
+  }
+
+  test("a daily AvailableNow run's data micro-batch compiles within budget") {
+    val (accepted, txtIdx, centroids) = dirs()
+    val base = scratchDir("gatedcompile")
+    val drop = new java.io.File(s"$base/drop"); drop.mkdirs()
+    def land(f: String): Unit =
+      Files.copy(java.nio.file.Paths.get(s"$fixtures/$f.json"),
+        java.nio.file.Paths.get(s"${drop.getPath}/$f.json")): Unit
+    def gate(streamId: String)(batch: DataFrame, id: Long): Unit =
+      GatedIngest.sink(accepted, txtIdx, centroids,
+        k = 2, textThreshold = 0.8, cosThreshold = 0.999, streamId)(batch, id)
+    // a non-empty accepted corpus, so both days' batches run both probes
+    gate("seed")(docs((1L, fox, Seq(1.0, 0.0, 0.0, 0.0)),
+      (2L, box, Seq(0.0, 1.0, 0.0, 0.0))), 0L)
+    // compiles of each micro-batch that committed to accepted
+    val compiles = scala.collection.mutable.Buffer[Long]()
+    val sink: (DataFrame, Long) => Unit = { (batch, id) =>
+      val (v, n) = (ManifestTable.currentVersion(accepted),
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+      gate("daily")(batch, id)
+      if (ManifestTable.currentVersion(accepted) != v)
+        compiles += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n: Unit
     }
-    assert(acceptedShuffles.isEmpty, s"\n$plan")
+    // two days, each one AvailableNow run of its own; the second day
+    // repeats two known days (text-gate losers) and adds one new one
+    Seq("AAPL_d1", "GOOG_d1").foreach(land)
+    runJob(drop.getPath, s"$base/ckpt", sink)
+    land("AAPL_overlap")
+    runJob(drop.getPath, s"$base/ckpt", sink)
+    assert(acceptedIds(accepted).size == 2 + 9)
+    assert(compiles.size == 2, compiles)
+    // measured 20. Each run plans in a fresh clone of the session, with
+    // a class loader of its own, and Spark keys its codegen cache on the
+    // loader too: a day compiles again what the day before compiled, so
+    // the count tracks how many plans a micro-batch runs
+    assert(compiles(1) <= 20, s"the second day's micro-batch compiled " +
+      s"${compiles(1)} classes")
   }
 
   test("accepted committed but its index append skipped: the next batch " +
