@@ -629,10 +629,12 @@ object Dedup {
   /** `incoming` without the rows whose `idCol` is one of `losers`' ids
     * (its first column). The ids are collected to the driver, so
     * `losers` must be bounded by the incoming side, and applied as a
-    * filter with `left_anti` semantics: a row with a null id survives. */
+    * filter with `left_anti` semantics: a row with a null id survives,
+    * and a null loser id drops nothing (in the set, it would turn the
+    * `isin` of every unlisted id to null and drop the whole batch). */
   private[operators] def withoutIds(incoming: DataFrame, idCol: String,
       losers: DataFrame): DataFrame = {
-    val ids = losers.collect().map(_.get(0)).distinct
+    val ids = losers.collect().map(_.get(0)).filter(_ != null).distinct
     if (ids.isEmpty) incoming
     else incoming.filter(col(idCol).isNull || !col(idCol).isin(ids.toIndexedSeq: _*))
   }

@@ -227,6 +227,28 @@ class IndexedOpsSpec extends SparkSpec {
     assert(stages <= 3, s"probe ran $stages stages")
   }
 
+  test("incremental dedup keeps left_anti semantics for null ids: a " +
+      "null-id duplicate survives and drops no other incoming row") {
+    import spark.implicits._
+    val fox = "the quick brown fox jumps over the lazy dog today"
+    val zebra = "how vexingly quick daft zebras jump around the yard"
+    def ids(df: DataFrame, col: String): Set[Option[Long]] =
+      df.select(col).as[Option[Long]].collect().toSet
+    // null and 8 repeat a corpus text; 7 is new
+    val existing = Seq((1L, fox)).toDF("doc_id", "text")
+    val incoming = Seq[(Option[Long], String)]((None, fox), (Some(7L), zebra),
+      (Some(8L), fox)).toDF("doc_id", "text")
+    assert(ids(Dedup.dropIncomingDuplicates(existing, incoming, 0.8),
+      "doc_id") == Set(None, Some(7L)))
+    // null and 6 are near-parallel to corpus vector 1; 5 is orthogonal
+    val corpus = Seq((1L, Seq(1.0f, 0.0f), 0)).toDF("vec_id", "embedding", "cell")
+    val batch = Seq[(Option[Long], Seq[Float], Int)]((None, Seq(1.0f, 0.0f), 0),
+      (Some(5L), Seq(0.0f, 1.0f), 0), (Some(6L), Seq(1.0f, 0.001f), 0))
+      .toDF("vec_id", "embedding", "cell")
+    assert(ids(Similarity.semDedupIncoming(corpus, batch, "cell", 0.99),
+      "vec_id") == Set(None, Some(5L)))
+  }
+
   test("incremental dedup maintenance loop: probe, commit survivors, " +
       "append their shingles, next batch probes the grown index") {
     import spark.implicits._
